@@ -109,8 +109,9 @@ object GlobalOrder {
     * Returns the ranked frame and the total number of distinct keys (free
     * from the driver merge). Deterministic regardless of range-boundary
     * placement: equal keys always sort adjacent, and the boundary merge
-    * makes the assigned rank independent of WHERE the sampler cut. Key
-    * columns must be non-null. */
+    * makes the assigned rank independent of WHERE the sampler cut. Null
+    * keys sort first and form one rank of their own, like `dense_rank()`
+    * over an ascending window. */
   def withDenseRank(df: DataFrame, keyCols: Seq[String], out: String,
                     numPartitions: Int = 0): (DataFrame, Long) = {
     val spark = df.sparkSession
@@ -127,32 +128,24 @@ object GlobalOrder {
     // comparison path — no per-row Seq[Any] allocation, no boxed
     // equality — with the generic path kept for string/mixed keys
     // (q364's radix round). Pure per-task work (guide §1.2 step 2);
-    // identical ranks by construction.
+    // identical ranks by construction. Null-aware per key: q364's r2
+    // comes from lead(), so nullable LONG keys stay on this path.
     val allLong = idxs.forall(sorted.schema.fields(_).dataType == LongType)
+    val idxArr = idxs.toArray
     val summaries = (if (allLong) sortedRdd.mapPartitionsWithIndex { (i, it) =>
       if (!it.hasNext) Iterator((i, 0L, null: Seq[Any], null: Seq[Any], 0L))
       else {
-        val n = idxs.length
-        val first = it.next()
-        val fk = new Array[Long](n)
-        var j = 0
-        while (j < n) { fk(j) = first.getLong(idxs(j)); j += 1 }
-        val last = fk.clone()
+        val last = new Array[Long](idxArr.length)
+        val lastNull = new Array[Boolean](idxArr.length)
+        loadLongKeys(it.next(), idxArr, last, lastNull)
+        val fk = boxLongKeys(last, lastNull)
         var changes = 0L
         var cnt = 1L
         while (it.hasNext) {
-          val r = it.next()
           cnt += 1
-          var diff = false
-          j = 0
-          while (j < n) {
-            val v = r.getLong(idxs(j))
-            if (v != last(j)) { diff = true; last(j) = v }
-            j += 1
-          }
-          if (diff) changes += 1
+          if (loadLongKeys(it.next(), idxArr, last, lastNull)) changes += 1
         }
-        Iterator((i, cnt, fk.toSeq: Seq[Any], last.toSeq: Seq[Any], changes))
+        Iterator((i, cnt, fk, boxLongKeys(last, lastNull), changes))
       }
     } else sortedRdd.mapPartitionsWithIndex { (i, it) =>
       if (!it.hasNext) Iterator((i, 0L, null: Seq[Any], null: Seq[Any], 0L))
@@ -188,17 +181,11 @@ object GlobalOrder {
     val schema = sorted.schema.add(StructField(out, LongType, nullable = false))
     val ranked = (if (allLong) sortedRdd.mapPartitionsWithIndex { (i, it) =>
       var rank = firstRank(i)
-      val n = idxs.length
-      val prev = new Array[Long](n)
+      val prev = new Array[Long](idxArr.length)
+      val prevNull = new Array[Boolean](idxArr.length)
       var started = false
       it.map { r =>
-        var diff = false
-        var j = 0
-        while (j < n) {
-          val v = r.getLong(idxs(j))
-          if (v != prev(j)) { diff = true; prev(j) = v }
-          j += 1
-        }
+        val diff = loadLongKeys(r, idxArr, prev, prevNull)
         if (!started) started = true
         else if (diff) rank += 1
         Row.fromSeq(r.toSeq :+ rank)
@@ -217,6 +204,27 @@ object GlobalOrder {
     })
     (spark.createDataFrame(ranked, schema), totalDistinct)
   }
+
+  /** Load row `r`'s LONG keys at `idxs` into (`keys`, `nulls`) and report
+    * whether any differs from what they held. A null key is held as
+    * (`nulls(j)` = true, 0L), so a null and a 0 never compare equal. */
+  private def loadLongKeys(r: Row, idxs: Array[Int], keys: Array[Long],
+                           nulls: Array[Boolean]): Boolean = {
+    var diff = false
+    var j = 0
+    while (j < idxs.length) {
+      val isNull = r.isNullAt(idxs(j))
+      val v = if (isNull) 0L else r.getLong(idxs(j))
+      if (isNull != nulls(j) || v != keys(j)) { diff = true; nulls(j) = isNull; keys(j) = v }
+      j += 1
+    }
+    diff
+  }
+
+  /** Boundary key for the driver merge: the generic path's Seq[Any] shape,
+    * null where the key is null. */
+  private def boxLongKeys(keys: Array[Long], nulls: Array[Boolean]): Seq[Any] =
+    keys.indices.map(j => if (nulls(j)) null else keys(j))
 
   /** Distributed inclusive prefix sum over a total order — the running-sum
     * analogue of [[withRowNumberAndTotal]] (cumulative revenue, Pareto

@@ -15,8 +15,10 @@ import org.apache.spark.sql.types._
   *   per-batch PG transaction + COPY   | `df.write` (per-partition tasks)
   *   zero-date → NULL (`:526-541`)     | [[zeroDatesToNull]] column rule
   *   WKB point → (x,y) (`:596-633`)    | [[PointDecode]] expression
-  *   COUNT(*) validation (`:313-356`)  | [[validate]]: counts + order-
-  *                                     | independent xor checksum (stronger)
+  *   COUNT(*) validation (`:313-356`)  | count + order-independent xor
+  *                                     | checksum (stronger), observed on
+  *                                     | the write and on one read-back
+  *                                     | job ([[copyTable]], [[validate]])
   *
   * Endpoints are pluggable: parquet directories (the test corpus) or JDBC
   * (any dialect on the classpath; Derby is used in tests). At cluster scale
@@ -179,12 +181,20 @@ object Transfer {
     expr(s"bit_xor(xxhash64(${quoted.mkString(", ")}))")
   }
 
-  /** (row count, xor-xxhash64 checksum) in ONE scan — count and checksum
-    * are both map-side-combinable aggregates, so fusing them halves the
-    * number of validation jobs per side. */
-  def stats(df: DataFrame): (Long, Long) = {
-    val r = df.agg(count(lit(1)), checksumCol(df)).collect().head
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  /** (row count, xor-xxhash64 checksum) of `df` in ONE job with no
+    * shuffle: both aggregates ride an `observe()` over a `noop` sink, so
+    * each task folds its rows locally and the driver merges one partial
+    * per task — no partial-aggregate stage, exchange and final job. */
+  def stats(df: DataFrame): (Long, Long) =
+    observedStats(df)(_.write.format("noop").mode(SaveMode.Overwrite).save())
+
+  /** Run `sink` over `df` with (count, checksum) observed on the rows that
+    * flow through it; the metrics are exactly the rows the sink consumed. */
+  private def observedStats(df: DataFrame)(sink: DataFrame => Unit): (Long, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    sink(df.observe(obs, count(lit(1)).as("n"), checksumCol(df).as("chk")))
+    val m = obs.get
+    (m("n").asInstanceOf[Long], Option(m("chk")).fold(0L)(_.asInstanceOf[Long]))
   }
 
   /** Compare source against destination. `convertSrc` must be the same
@@ -310,10 +320,10 @@ object Transfer {
                     pointCols: Seq[String] = Nil,
                     validate: Boolean = true): TransferResult = {
     val dstExists = exists(spark, dst, table)
-    // JDBC sources are SNAPSHOTTED for the run (copyTable's discipline):
-    // the delta count, the append, and the post-append validation each
-    // launch a job, and a live table mutating between them would misreport
-    // the delta or fail the checksum on a correct sync
+    // JDBC sources are SNAPSHOTTED for the run: the delta count, the
+    // append, and the post-append validation each launch a job, and a
+    // live table mutating between them would misreport the delta or fail
+    // the checksum on a correct sync
     val srcRaw = read(spark, src, table) // lazy: plan only, no job yet
     val srcSnapshot = src.isInstanceOf[Jdbc]
     val srcDf = if (srcSnapshot) srcRaw.persist() else srcRaw
@@ -351,63 +361,63 @@ object Transfer {
     } finally if (srcSnapshot) srcDf.unpersist(blocking = false)
   }
 
-  /** Full per-table transfer: read → convert → write → validate.
-    * The source side of validation aggregates over the SAME converted frame
-    * the writer produced (not a raw re-read), so in-flight conversions
-    * (zero-dates, point decode) never trip the checksum. JDBC sources are
-    * cached for the duration so source count/checksum/write see one
-    * snapshot; parquet sources are immutable files and re-scan for free
-    * (whole-stage-codegen'd scans beat cache materialization there).
+  /** Full per-table transfer: read → convert → write → validate, ONE
+    * Spark job per side. The source is scanned once, by the write itself:
+    * every row is counted and hashed (`observe()`) as it flows to the
+    * writer, so source count and checksum describe exactly the rows that
+    * were written — the converted frame, not a raw re-read, so in-flight
+    * conversions (zero-dates, point decode) never trip the checksum. The
+    * destination read-back ([[stats]]) is the one validation pass.
     *
-    * TWO passes over the data total: the source count is a metadata-only
-    * job (parquet row-group counts; the JDBC path materializes its snapshot
-    * cache), the source checksum rides the write pass itself via
-    * `observe()` (each row is hashed as it flows to the writer — no
-    * separate source scan), and the destination re-read is the one
-    * unavoidable full validation pass. At 100 TB that is one saved
-    * table-sized scan per table versus the naive stats→write→stats chain. */
+    * Write parallelism is sized from a row count taken BEFORE the write: a
+    * driver-side `SELECT COUNT(*)` for JDBC sources (the reference's S11
+    * count, no Spark job), row-group metadata for file sources. It is only
+    * a sizing hint and is never compared with anything. A JDBC source is
+    * cached only when the write repartitions it — a retried shuffle-map
+    * task would otherwise re-read a live table — and never takes the
+    * empty-table shortcut (sync_data.go:64-113): a zero counted outside
+    * the write proves nothing about the rows it will see, so an empty
+    * JDBC table goes through the normal write-and-verify path. */
   def copyTable(spark: SparkSession, src: Endpoint, dst: Endpoint, table: String,
                 truncate: Boolean = true,
                 pointCols: Seq[String] = Nil,
                 validateChecksum: Boolean = true): TransferResult = {
     val df1 = decodePoints(zeroDatesToNull(read(spark, src, table)), pointCols)
-    val snapshot = src.isInstanceOf[Jdbc]
+    val rowsHint = src match {
+      case j: Jdbc => graft.catalog.Catalog.rowCount(j.url, j.table.replace("%s", table))
+      case _ =>
+        // Catalyst strips the conversion projections under a bare count,
+        // so file sources answer from row-group metadata (no scan)
+        val n = df1.count()
+        if (n == 0L) { // empty-table shortcut (sync_data.go:64-113)
+          write(df1, dst, table, truncate)
+          return TransferResult(table, 0L, 0L, checksumMatch = true)
+        }
+        n
+    }
+    // Re-size write parallelism from row count × estimated row width.
+    // For JDBC this bounds per-partition transaction size (the scalable
+    // version of the reference's max_rows_per_batch pagination bound);
+    // for file targets it decouples writer parallelism from the source's
+    // split count (a single-row-group source file would otherwise funnel
+    // the whole encode+write through one task). Only ever scales UP —
+    // collapsing an already-parallel source would serialize the write.
+    val width = math.max(df1.schema.defaultSize, 20 * df1.schema.size)
+    val targetBytes = dst match {
+      case _: Jdbc => 64L << 20
+      case _ => 16L << 20
+    }
+    val target = graft.catalog.Catalog.suggestNumPartitions(
+      rowsHint, width, targetBytesPerPartition = targetBytes)
+    val reshuffle = target > df1.rdd.getNumPartitions
+    val snapshot = reshuffle && src.isInstanceOf[Jdbc]
     if (snapshot) df1.persist()
     try {
-      // row count only: Catalyst strips the conversion projections under a
-      // bare count, so parquet answers from row-group metadata (no scan)
-      val srcRows = df1.count()
-      if (srcRows == 0L) { // empty-table shortcut (sync_data.go:64-113)
-        write(df1, dst, table, truncate)
-        return TransferResult(table, 0L, 0L, checksumMatch = true)
-      }
-      // Re-size write parallelism from row count × estimated row width.
-      // For JDBC this bounds per-partition transaction size (the scalable
-      // version of the reference's max_rows_per_batch pagination bound);
-      // for file targets it decouples writer parallelism from the source's
-      // split count (a single-row-group source file would otherwise funnel
-      // the whole encode+write through one task). Only ever scales UP —
-      // collapsing an already-parallel source would serialize the write.
-      val width = math.max(df1.schema.defaultSize, 20 * df1.schema.size)
-      val targetBytes = dst match {
-        case _: Jdbc => 64L << 20
-        case _ => 16L << 20
-      }
-      val target = graft.catalog.Catalog.suggestNumPartitions(
-        srcRows, width, targetBytesPerPartition = targetBytes)
-      val df = if (target > df1.rdd.getNumPartitions) df1.repartition(target) else df1
-      // source checksum fused into the write pass: every row is hashed as
-      // it flows to the writer, so no standalone source-stats scan runs
-      val obs = org.apache.spark.sql.Observation(s"graft_src_stats_$table")
-      val observed = df.observe(obs,
-        count(lit(1)).as("n"), checksumCol(df).as("chk"))
-      write(observed, dst, table, truncate)
-      val m = obs.get
-      val obsRows = m("n").asInstanceOf[Long]
-      val srcSum = Option(m("chk")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val df = if (reshuffle) df1.repartition(target) else df1
+      val (srcRows, srcSum) = observedStats(df)(write(_, dst, table, truncate))
       val (dstRows, dstSum) = stats(read(spark, typed(dst, df.schema), table))
       val ok = !validateChecksum || srcSum == dstSum
-      TransferResult(table, obsRows, dstRows, ok && obsRows == dstRows)
+      TransferResult(table, srcRows, dstRows, ok && srcRows == dstRows)
     } finally if (snapshot) df1.unpersist()
   }
 }

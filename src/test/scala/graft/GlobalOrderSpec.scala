@@ -113,6 +113,28 @@ class GlobalOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("withDenseRank on nullable LONG keys: null and 0 rank apart, nulls first") {
+    import spark.implicits._
+    // lead() keys are nullable LONGs (q364's r2): nulls, zeros and
+    // non-zeros all tie in runs, so a null read as 0 would merge ranks
+    val df = base.select($"o_orderkey",
+      ($"o_custkey" % 3L).as("k1"),
+      when($"o_orderkey" % 4L === 0L, lit(null).cast("long"))
+        .otherwise($"o_orderkey" % 2L).as("k2"))
+    assert(df.schema("k2").nullable)
+    val w = Window.orderBy($"k1".asc_nulls_first, $"k2".asc_nulls_first)
+    val expected = df.withColumn("dr", dense_rank().over(w).cast("long"))
+      .collect().map(r => r.getLong(0) -> r.getAs[Long]("dr")).toMap
+    val nDistinct = df.select($"k1", $"k2").distinct().count()
+    assert(nDistinct == 9, "3 k1 values × {null, 0, 1}")
+    for (p <- Seq(0, 1, 7)) {
+      val (got, total) = GlobalOrder.withDenseRank(df, Seq("k1", "k2"), "dr", p)
+      assert(total == nDistinct, s"partitions=$p")
+      assert(got.collect().map(r => r.getLong(0) -> r.getAs[Long]("dr")).toMap
+        == expected, s"partitions=$p")
+    }
+  }
+
   test("withDenseRank on STRING keys (the q364 radix shape)") {
     import spark.implicits._
     // text keys with heavy ties, exactly how the suffix array's radix

@@ -295,6 +295,90 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.srcRows == 0 && r.dstRows == 0 && r.checksumMatch)
   }
 
+  /** A fresh on-disk Derby database with one `t (id BIGINT, v VARCHAR(20))`
+    * table holding `rows` rows, created through plain JDBC. */
+  private def derbyTable(prefix: String, rows: Int): String = {
+    val url = s"jdbc:derby:${Files.createTempDirectory(prefix)}/d;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      conn.createStatement().execute("CREATE TABLE t (id BIGINT, v VARCHAR(20))")
+      val ins = conn.prepareStatement("INSERT INTO t VALUES (?, ?)")
+      for (i <- 1 to rows) { ins.setLong(1, i); ins.setString(2, s"v$i"); ins.addBatch() }
+      if (rows > 0) ins.executeBatch()
+    } finally conn.close()
+    url
+  }
+
+  test("copyTable from JDBC: one job per side, no cache, counts match the database") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val srcUrl = derbyTable("xfer_scan_src", 200)
+    val dstUrl = s"jdbc:derby:${Files.createTempDirectory("xfer_scan_dst")}/d;create=true"
+    val (src, dst) = (Jdbc(srcUrl, "%s"), Jdbc(dstUrl, "%s"))
+    // every job/plan between here and the marker job is copyTable's: the
+    // listener bus is FIFO, so once the marker's start arrives, all of
+    // copyTable's events have been delivered
+    val tag = "graft.test.phase"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(j.properties.getProperty(tag, ""))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val r = try {
+      sc.setLocalProperty(tag, "copy")
+      val r = Transfer.copyTable(spark, src, dst, "t")
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      r
+    } finally { sc.setLocalProperty(tag, null); sc.removeSparkListener(listener) }
+    assert(jobs.contains("marker"), "listener bus did not drain")
+    val copyJobs = jobs.toArray.count(_ == "copy")
+    assert(copyJobs == 2, s"expected the write and the read-back, saw $copyJobs jobs")
+    assert(!plans.isEmpty)
+    plans.forEach(p => assert(!p.contains("InMemoryRelation"), p))
+    val dbRows = graft.catalog.Catalog.rowCount(srcUrl, "t")
+    assert(dbRows == 200)
+    assert(r == Transfer.TransferResult("t", dbRows, dbRows, checksumMatch = true))
+    assert(graft.catalog.Catalog.rowCount(dstUrl, "t") == dbRows)
+    // one changed target value keeps the counts equal; only the checksum sees it
+    val conn = java.sql.DriverManager.getConnection(dstUrl)
+    try assert(conn.createStatement().executeUpdate("UPDATE t SET v = 'zz' WHERE id = 7") == 1)
+    finally conn.close()
+    val v = Transfer.validate(spark, src, dst, "t")
+    assert(v.srcRows == 200 && v.dstRows == 200 && !v.checksumMatch)
+  }
+
+  test("empty inputs: stats, copyTable and validate return (0, 0, true)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
+    val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    assert(none.rdd.getNumPartitions == 0)
+    assert(Transfer.stats(none) == (0L, 0L))
+    val empty = Transfer.TransferResult("t", 0L, 0L, checksumMatch = true)
+    // JDBC: no empty-table shortcut, the normal write-and-verify path
+    val jsrc = Jdbc(derbyTable("xfer_none_src", 0), "%s")
+    val jdst = Jdbc(s"jdbc:derby:${Files.createTempDirectory("xfer_none_dst")}/d;create=true", "%s")
+    assert(Transfer.copyTable(spark, jsrc, jdst, "t") == empty)
+    assert(Transfer.validate(spark, jsrc, jdst, "t") == empty)
+    val psrc = ParquetDir(Files.createTempDirectory("xfer_none_psrc").toString)
+    val pdst = ParquetDir(Files.createTempDirectory("xfer_none_pdst").toString)
+    Seq.empty[(Long, String)].toDF("id", "v").write.parquet(s"${psrc.dir}/t.parquet")
+    assert(Transfer.copyTable(spark, psrc, pdst, "t") == empty)
+    assert(Transfer.validate(spark, psrc, pdst, "t") == empty)
+  }
+
   test("zero-date strings become NULL in flight") {
     import spark.implicits._
     val df = Seq(("0000-00-00 00:00:00", "2020-01-02"), ("x", "0000-00-00"))

@@ -10,19 +10,26 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   * contract via SPARK_GRAFT_CPUS, same maxPartitionBytes, same AQE flag)
   * with a SparkListener accumulating, per query:
   *   jobs, stages, tasks, sum of task run times, sum of scheduler-visible
-  *   task deserialize/serialize overhead, and wall time (min of 2 runs,
-  *   stats from the faster run's scale).
+  *   task deserialize/serialize overhead, GC time and wall time. Each query
+  *   runs twice and both runs are printed, one CSV row each; read the
+  *   faster row (the first one usually pays JIT/codegen warm-up).
   *
   * wall >> taskTime/cores  --> scheduling/driver overhead dominates
   * tasks >> rows/64k       --> partition counts oversized for the data
   *
   * Extra spark confs can be injected through SPARK_GRAFT_EXTRA_CONF
   * ("k1=v1;k2=v2") to A/B e.g. AQE coalescing settings without editing
-  * the harness. Usage:
+  * the harness; a pair without '=' or with an empty key is rejected by
+  * name. Unknown query names are rejected before the session starts,
+  * with the closest valid names. Usage:
   *   SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.tools.ScaleProbe q133_curriculum ..."
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
+    val known = graft.SparkEntry.queries.keySet
+    val unknown = args.filterNot(known)
+    require(unknown.isEmpty, unknown.map(q =>
+      s"unknown query '$q'; closest: ${closest(q, known).mkString(", ")}").mkString("; "))
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     var b = SparkSession.builder()
@@ -35,8 +42,11 @@ object ScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { kv =>
       kv.split(";").filter(_.nonEmpty).foreach { pair =>
-        val Array(k, v) = pair.split("=", 2)
-        b = b.config(k, v)
+        pair.split("=", 2) match {
+          case Array(k, v) if k.trim.nonEmpty => b = b.config(k.trim, v)
+          case _ => throw new IllegalArgumentException(
+            s"SPARK_GRAFT_EXTRA_CONF: malformed pair '$pair' (expected key=value)")
+        }
       }
     }
     val spark = b.getOrCreate()
@@ -87,5 +97,23 @@ object ScaleProbe {
       }
     }
     spark.stop()
+  }
+
+  /** The three query names nearest to `q`: a name containing it (e.g. the
+    * bare `q133` of `q133_curriculum`) first, then by edit distance. */
+  private def closest(q: String, known: Set[String]): Seq[String] =
+    known.toSeq.sortBy(k => (!k.contains(q), editDistance(q, k), k)).take(3)
+
+  private def editDistance(a: String, b: String): Int = {
+    var prev = Array.tabulate(b.length + 1)(identity)
+    for (i <- 1 to a.length) {
+      val cur = new Array[Int](b.length + 1)
+      cur(0) = i
+      for (j <- 1 to b.length)
+        cur(j) = math.min(math.min(cur(j - 1), prev(j)) + 1,
+          prev(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+      prev = cur
+    }
+    prev(b.length)
   }
 }
