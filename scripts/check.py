@@ -2,10 +2,11 @@
 """Local mirror of the driver's correctness gate.
 
 Usage: python3 scripts/check.py [sfdir] [outdir]
-Reads each <outdir>/<name> parquet (written by graft.Verify), runs the
-matching oracle SQL from <outdir>/oracle_sql.json in DuckDB over the same
-parquet tables, and compares schema + values (columns sorted by name,
-rows sorted) the way the driver's hash compare would.
+For each query in <outdir>/oracle_sql.json (written by graft.Verify), reads
+its <outdir>/<name> parquet (a missing one is a failure), runs its oracle
+SQL in DuckDB over the same parquet tables, and compares schema + values
+(columns sorted by name, rows sorted) the way the driver's hash compare
+would.
 """
 import sys, json, glob, os
 import duckdb
@@ -20,19 +21,16 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-names = sorted([os.path.basename(p) for p in glob.glob(f"{outdir}/*")
-                if os.path.isdir(p)])
 fails = 0
-for name in names:
+for name in sorted(oracle):
+    # a query that threw in Verify left no directory: that is a failure
+    if not os.path.isdir(f"{outdir}/{name}"):
+        print(f"MISSING {name}"); fails += 1; continue
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
         print(f"EMPTY-DIR {name}"); fails += 1; continue
     spark_df = con.execute(
         f"SELECT * FROM read_parquet({files!r})").fetchdf()
-    if name not in oracle:
-        print(f"NO-ORACLE {name}: rows={len(spark_df)}"
-              + (" (EMPTY!)" if len(spark_df) == 0 else ""))
-        continue
     try:
         duck_df = con.execute(oracle[name]).fetchdf()
     except Exception as e:

@@ -3,48 +3,16 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Size scan splits below the corpus file size (sf0.1 files ~25 MB vs
-      // the 128 MB default). NOTE: the driver-generated files hold a SINGLE
-      // row group, so scans stay one-task here regardless — but this is the
-      // right setting wherever files carry multiple row groups, which a
-      // 100 TB deployment has by construction.
-      .config("spark.sql.files.maxPartitionBytes", String.valueOf(4L << 20))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // absorb session/codegen warmup outside the timed region
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    // warm the RDD<->DataFrame bridge (RowEncoder + RDD-scan codegen) that
-    // GlobalOrder-based queries hit — first use costs ~1s of Janino work
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L))),
-      new org.apache.spark.sql.types.StructType()
-        .add("id", org.apache.spark.sql.types.LongType, nullable = false))
-      .selectExpr("sum(id)").collect()
-    graft.operators.GlobalOrder.withRowNumber(
-      spark.range(100).toDF(), Seq(org.apache.spark.sql.functions.col("id")), "rn")
-      .count()
-    // optional comma-separated filter for fast single-query iteration
-    // (mirrors Verify's SPARK_GRAFT_ONLY)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val selected = SparkEntry.selected
+    val spark = GraftSession("graft-bench", conf = conf)
+    warmup(spark, sfDir)
     // run-2 failures kept lenient for TIMING (run 1 proved the query runs;
     // see below) but recorded here so the committed artifact still surfaces
     // rerun-REPRODUCIBLE failures (leaked cache/session state — the exact
     // class min-of-N re-runs exist to catch) instead of reporting ok=true
     // with an empty failures array (ADVICE r9).
     val rerunFailures = scala.collection.mutable.ListBuffer.empty[String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       // stderr marker (never the tail-captured stdout): lets warnings in
       // the session log be attributed to the query that emitted them
       System.err.println(s"[bench] start $name")
@@ -119,5 +87,28 @@ object Bench {
       s""""rerun_failures":[${rerunFailures.mkString(",")}],"sf":"$sfDir",""" +
       s""""full":"${fullPath.toAbsolutePath}"}""")
     spark.stop()
+  }
+
+  // Size scan splits below the corpus file size (sf0.1 files ~25 MB vs
+  // the 128 MB default). NOTE: the driver-generated files hold a SINGLE
+  // row group, so scans stay one-task here regardless — but this is the
+  // right setting wherever files carry multiple row groups, which a
+  // 100 TB deployment has by construction.
+  val conf = Map("spark.sql.files.maxPartitionBytes" -> String.valueOf(4L << 20))
+
+  /** Absorbs session/codegen warm-up outside any timed region. */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    spark.read.parquet(s"$sfDir/region.parquet").count()
+    // warm the RDD<->DataFrame bridge (RowEncoder + RDD-scan codegen) that
+    // GlobalOrder-based queries hit — first use costs ~1s of Janino work
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L))),
+      new org.apache.spark.sql.types.StructType()
+        .add("id", org.apache.spark.sql.types.LongType, nullable = false))
+      .selectExpr("sum(id)").collect()
+    graft.operators.GlobalOrder.withRowNumber(
+      spark.range(100).toDF(), Seq(org.apache.spark.sql.functions.col("id")), "rn")
+      .count()
   }
 }

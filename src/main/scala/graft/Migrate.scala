@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.catalog.Catalog
 import graft.config.GraftConfig
 import graft.ddl.DdlConverter
@@ -56,17 +55,9 @@ object Migrate {
       return
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-migrate")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER points the run at a cluster; local[cpus] otherwise
+    val spark = GraftSession("graft-migrate",
+      conf = sys.env.get("SPARK_MASTER").map("spark.master" -> _).toMap)
 
     try {
       val src = endpoint(cfg.sourceUrl)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints, per driver-contract query, the physical-plan
   * properties that matter at 100 TB — parquet filter pushdown, column
   * pruning (ReadSchema), join strategies, exchange (shuffle) count, and
@@ -12,15 +10,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("plan-audit")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("plan-audit", 4)
 
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.isEmpty || only.exists(name.startsWith)) {

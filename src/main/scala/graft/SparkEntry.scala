@@ -5299,8 +5299,44 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q01PricingSummary(spark, "/root/testdata/sf0.001")
 
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The named queries in the given order, or every query by name when
+    * `names` is empty. Builds no session, so an unknown name fails before
+    * one starts; the error lists the three closest names. */
+  def resolve(names: Seq[String]): Seq[(String, Query)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, unknown.map(q =>
+      s"unknown query '$q'; closest: ${closest(q, all.keySet).mkString(", ")}").mkString("; "))
+    if (names.isEmpty) all.toSeq.sortBy(_._1) else names.distinct.map(n => n -> all(n))
+  }
+
+  /** [[resolve]] over `SPARK_GRAFT_ONLY`, a comma-separated name filter. */
+  def selected: Seq[(String, Query)] =
+    resolve(sys.env.get("SPARK_GRAFT_ONLY").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
+
+  /** The three query names nearest to `q`: a name containing it (e.g. the
+    * bare `q133` of `q133_curriculum`) first, then by edit distance. */
+  private def closest(q: String, known: Set[String]): Seq[String] =
+    known.toSeq.sortBy(k => (!k.contains(q), editDistance(q, k), k)).take(3)
+
+  private def editDistance(a: String, b: String): Int = {
+    var prev = Array.tabulate(b.length + 1)(identity)
+    for (i <- 1 to a.length) {
+      val cur = new Array[Int](b.length + 1)
+      cur(0) = i
+      for (j <- 1 to b.length)
+        cur(j) = math.min(math.min(cur(j - 1), prev(j)) + 1,
+          prev(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+      prev = cur
+    }
+    prev(b.length)
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, Query] = Map(
     "q01_pricing_summary" -> Relational.q01PricingSummary _,
     "q02_filter_project"  -> Relational.q02FilterProject _,
     "q03_join_agg"        -> Relational.q03JoinAgg _,

@@ -1,38 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Under
+  * `SPARK_GRAFT_ONLY` both cover the selected queries only. Exits 1, naming
+  * them, when any query failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.selected
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // queries are independent Spark jobs; submit a few concurrently so the
     // scheduler overlaps their stages (cuts gate wall time ~2-3x)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
-    // optional comma-separated name filter for fast single-query iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) SparkEntry.queries.toSeq
-      else SparkEntry.queries.filter { case (k, _) => only(k) }.toSeq
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val futures = selected.map { case (name, fn) =>
       scala.concurrent.Future {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failed.add(name)
         }
       }
     }
@@ -51,9 +41,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val names = selected.map(_._1).toSet
+    val json = SparkEntry.oracleSql.filter(kv => names(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (!failed.isEmpty) {
+      System.err.println(s"[verify] FAILED ${failed.size}: " +
+        failed.toArray(Array.empty[String]).sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
@@ -10,11 +10,18 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   * instead of hand-threaded counters, so they are exact and free.
   */
 class ProgressTracker extends SparkListener {
+  val jobsStarted = new AtomicLong(0)
   val stagesCompleted = new AtomicLong(0)
   val tasksCompleted = new AtomicLong(0)
   val recordsRead = new LongAdder
   val recordsWritten = new LongAdder
   val executorRunTimeMs = new LongAdder
+  val gcMs = new LongAdder
+  val serdeMs = new LongAdder
+
+  override def onJobStart(js: SparkListenerJobStart): Unit = {
+    jobsStarted.incrementAndGet()
+  }
 
   override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
     stagesCompleted.incrementAndGet()
@@ -23,6 +30,8 @@ class ProgressTracker extends SparkListener {
       recordsRead.add(m.inputMetrics.recordsRead)
       recordsWritten.add(m.outputMetrics.recordsWritten)
       executorRunTimeMs.add(m.executorRunTime)
+      gcMs.add(m.jvmGCTime)
+      serdeMs.add(m.executorDeserializeTime + m.resultSerializationTime)
     }
   }
 
@@ -31,13 +40,15 @@ class ProgressTracker extends SparkListener {
   }
 
   def snapshot: ProgressTracker.Snapshot = ProgressTracker.Snapshot(
-    stagesCompleted.get(), tasksCompleted.get(),
-    recordsRead.sum(), recordsWritten.sum(), executorRunTimeMs.sum())
+    jobsStarted.get(), stagesCompleted.get(), tasksCompleted.get(),
+    recordsRead.sum(), recordsWritten.sum(), executorRunTimeMs.sum(),
+    gcMs.sum(), serdeMs.sum())
 }
 
 object ProgressTracker {
-  final case class Snapshot(stages: Long, tasks: Long, recordsRead: Long,
-      recordsWritten: Long, executorRunTimeMs: Long)
+  /** `serdeMs` is task deserialize plus result serialize time. */
+  final case class Snapshot(jobs: Long, stages: Long, tasks: Long, recordsRead: Long,
+      recordsWritten: Long, executorRunTimeMs: Long, gcMs: Long, serdeMs: Long)
 
   /** Attach, run, detach — returns (result, metrics for just that span). */
   def track[A](spark: SparkSession)(body: => A): (A, Snapshot) = {

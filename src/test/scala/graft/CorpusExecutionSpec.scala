@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.ddl.DdlConverter
@@ -25,13 +25,8 @@ class CorpusExecutionSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val tablesPath = "/root/reference/scripts/mysql/create_table.sql"
   private val viewsPath = "/root/reference/scripts/mysql/create_view.sql"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("corpus-exec-spec")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.timeType.enabled", "true")
-    .getOrCreate()
+  private lazy val spark = GraftSession("corpus-exec-spec", 2,
+    Map("spark.sql.ansi.enabled" -> "false", "spark.sql.timeType.enabled" -> "true"))
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,17 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionsSpec extends AnyFunSuite {
 
   test("GraftExtensions injects all custom functions into a fresh session") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("ext-spec")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession("ext-spec", 2,
+      Map("spark.sql.extensions" -> "graft.GraftExtensions"))
     try {
       val row = spark.sql(
         """SELECT graft_fingerprint('ab') AS fp,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,14 +13,7 @@ import graft.operators.GlobalOrder
 class GlobalOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("global-order-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("global-order-spec", 4)
 
   override def afterAll(): Unit = spark.stop()
 

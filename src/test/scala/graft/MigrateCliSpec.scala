@@ -44,9 +44,7 @@ class MigrateCliSpec extends AnyFunSuite {
          |""".stripMargin)
     Migrate.main(Array("-c", cfg))
     // rows landed (read back with a fresh session — main stopped its own)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("mcli-readback")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("mcli-readback", 2)
     try {
       assert(spark.read.parquet(s"$dir/out/region.parquet").count() == 5)
       assert(spark.read.parquet(s"$dir/out/nation.parquet").count() == 25)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -19,21 +18,12 @@ import org.scalatest.BeforeAndAfterAll
 class PlanBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-budget-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("plan-budget-spec", 4)
 
   override def afterAll(): Unit = spark.stop()
 
-  private def exchanges(name: String): Int = {
-    val df = SparkEntry.queries(name)(spark, sf)
-    "Exchange ".r.findAllIn(df.queryExecution.executedPlan.toString).size
-  }
+  private def exchanges(name: String): Int =
+    graft.tools.Probe.exchanges(SparkEntry.queries(name)(spark, sf))
 
   // (query, max allowed exchanges) — from the scale-design rationale:
   // narrow ops get their final orderBy only; corpus statistics one
@@ -85,7 +75,7 @@ class PlanBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     "q117_source_overlap" -> 0, // collect-then-unpersist (q123 idiom): the
                                 // C(|sources|,2) report materializes while
                                 // the 3-consumer incidence frame is cached;
-                                // the returned plan is local (ExchProbe=0)
+                                // the returned plan is local (Probe exch: 0)
     // q118/q123/q132 materialize via collect-then-unpersist (q106 idiom);
     // their shuffle stories are asserted by the AffinityOpsSpec
     // reconciliation tests — the 0-pins below gate the idiom itself (a
@@ -637,7 +627,7 @@ class PlanBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
                              // chain (trainer runs as its own bounded
                              // job); |langs| fold + orderBy only
     // ---- round-11 ratchet: every remaining query pinned at its
-    // ---- ExchProbe-measured count (sf0.001, pre-AQE physical plan).
+    // ---- `Probe exch`-measured count (sf0.001, pre-AQE physical plan).
     // ---- Exclusions stay documented: q59 (OpsSpec owns the bucketed
     // ---- layout), q188/q190 (persist-then-collect, asserted by
     // ---- AffinityOpsSpec replays), q275 (bounded-report idiom, OpsSpec
@@ -887,12 +877,12 @@ class PlanBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     "q370_sa_strip" -> 0,    // checkpoint-cut affected-docs report; the
                              // strip itself is ONE gram-keyed window min
                              // + doc-partitioned island/segment windows
-                             // inside the builder (ExchProbe-measured 0
+                             // inside the builder (`Probe exch`-measured 0
                              // post-checkpoint)
     "q364_suffix_array" -> 7, // the REPORT stage only: the radix rank,
                              // 5 doubling rounds and the LCP walk are
                              // localCheckpointed inside the builder
-                             // (ExchProbe-measured; lineage cut is the
+                             // (`Probe exch`-measured; lineage cut is the
                              // q320 rule), leaving the per-doc span agg
                              // (union + hash agg), the base join and the
                              // deterministic orderBy

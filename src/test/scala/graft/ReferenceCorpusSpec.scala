@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.sqlrewrite.SqlRewriter
@@ -18,11 +17,7 @@ class ReferenceCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val corpusPath = "/root/reference/scripts/mysql/create_view.sql"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("ref-corpus-spec")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("ref-corpus-spec", 2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -2,7 +2,6 @@ package graft
 
 // (CopyEncoder golden tests live at the bottom of this suite)
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.transfer.BatchSink
@@ -15,14 +14,7 @@ import scala.io.Source
 class SinkProgressSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sink-progress-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("sink-progress-spec", 4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -48,6 +40,7 @@ class SinkProgressSpec extends AnyFunSuite with BeforeAndAfterAll {
         .groupBy("l_returnflag").count().collect().length
     }
     assert(cnt == 3)
+    assert(snap.jobs >= 1)
     assert(snap.stages >= 2)       // partial + final aggregation
     assert(snap.tasks >= 2)
     assert(snap.recordsRead >= 6000L)

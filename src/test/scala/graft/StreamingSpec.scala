@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,14 +10,7 @@ import java.sql.Timestamp
 
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("streaming-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("streaming-spec", 4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -1303,14 +1295,7 @@ object StreamingSpec {
 
 class BootstrapGateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bootstrap-gate-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("bootstrap-gate-spec", 4)
 
   override def afterAll(): Unit = spark.stop()
 

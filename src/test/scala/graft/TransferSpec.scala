@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.transfer.Transfer
@@ -12,14 +11,7 @@ import java.nio.file.Files
 class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("transfer-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("transfer-spec", 4)
 
   override def afterAll(): Unit = spark.stop()
 
