@@ -580,11 +580,11 @@ object DedupOps {
     // AllPairs length filter INSIDE the candidate join: J >= t forces
     // t·|A| <= |B| <= |A|/t, so size-incompatible collisions never reach
     // the distinct, let alone verification
-    val pa = pref.select($"ptok", $"doc_id".as("doc_a"), $"n".as("na"))
-    val pb = pref.select($"ptok", $"doc_id".as("doc_b"), $"n".as("nb"))
+    val pa = pref.select($"ptok", $"doc_id".as("doc_a"), $"n".as("na")).as("pa")
+    val pb = pref.select($"ptok", $"doc_id".as("doc_b"), $"n".as("nb")).as("pb")
     val cand = pa.join(pb,
-        pa("ptok") === pb("ptok") && pa("doc_a") < pb("doc_b") &&
-          pa("na") * 9 <= pb("nb") * 10 && pb("nb") * 9 <= pa("na") * 10)
+        $"pa.ptok" === $"pb.ptok" && $"doc_a" < $"doc_b" &&
+          $"na" * 9 <= $"nb" * 10 && $"nb" * 9 <= $"na" * 10)
       .select($"doc_a", $"doc_b").distinct()
     cand
       .join(sets.select($"doc_id".as("doc_a"), $"wi".as("wa"), $"n".as("na")),
@@ -1830,10 +1830,13 @@ object DedupOps {
     // cache; unpersisted, the scan+explode ran 3× (measured +2 s at
     // sf0.1). Rows are window-bounded (~450 chars), far below the corpus;
     // MEMORY_AND_DISK makes eviction a spill, not a recompute storm.
-    val anchors = d
+    // storageLevel guard: q34's rule, as for `sets` in q142.
+    val anchorsBase = d
       .select($"doc_id", explode(expr(anchorsExpr)).as("a"))
       .select($"doc_id", $"a.key".as("key"), $"a.bck".as("bck"), $"a.fwd".as("fwd"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val anchors =
+      if (anchorsBase.storageLevel != org.apache.spark.storage.StorageLevel.NONE) anchorsBase
+      else anchorsBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keyOk = anchors.groupBy($"key")
       .agg(countDistinct($"doc_id").as("nd"))
       .filter($"nd" >= 2 && $"nd" <= SfxKeyCap)

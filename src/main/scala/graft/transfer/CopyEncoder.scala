@@ -1,10 +1,11 @@
 package graft.transfer
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types._
 import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
-import java.sql.{Connection, DriverManager}
+import java.sql.Connection
 
 /** PostgreSQL COPY bulk-load path — K4 parity (reference
   * `postgres/connection.go:447-593`, pgx `CopyFrom` at `:557,:571`).
@@ -14,11 +15,13 @@ import java.sql.{Connection, DriverManager}
   *    actual protocol work (tab field separator, `\N` nulls, backslash
   *    escapes, bytea `\x` hex, microsecond timestamps, t/f booleans).
   *    Pure and golden-tested; identical bytes to what pgx streams.
-  *  - [[write]]: `foreachPartition` sink that feeds the encoded stream to
-  *    `CopyManager.copyIn` — one COPY per partition, one transaction. The
-  *    PG driver is loaded reflectively because this container ships only
-  *    Derby; [[copySupported]] gates the path and the portable
-  *    [[BatchSink]] addBatch body is the documented fallback.
+  *  - [[copyRows]]: the partition body [[BatchSink.write]] runs for
+  *    PostgreSQL targets: feeds the encoded stream to `CopyManager.copyIn`
+  *    inside BatchSink's per-partition transaction and folds the same
+  *    (count, checksum) as the INSERT body. The PG driver is loaded
+  *    reflectively because only Derby ships with the build;
+  *    [[copySupported]] gates the path and BatchSink's INSERT body is the
+  *    fallback.
   *
   * Scale: COPY is the fastest PG ingest path (single round-trip stream per
   * partition vs per-batch statement execution); partitions stream
@@ -79,42 +82,35 @@ object CopyEncoder {
     try { Class.forName("org.postgresql.copy.CopyManager"); true }
     catch { case _: ClassNotFoundException => false }
 
-  /** COPY-stream the frame into `table`, one COPY + transaction per
-    * partition. Driver presence is re-checked ON THE EXECUTOR (a jar on
-    * the driver classpath only is a common misconfiguration): partitions
-    * whose JVM lacks the PG driver fall back to the portable
-    * [[BatchSink.writePartition]] body instead of failing the task. */
-  def write(df: DataFrame, url: String, table: String,
-            batchRows: Int = 10000): Unit = {
-    val schema = df.schema
-    val colList = schema.fieldNames.mkString(", ")
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      if (!copySupported()) {
-        BatchSink.writePartition(rows, schema, url, table, batchRows)
-      } else if (rows.nonEmpty) {
-        val conn: Connection = DriverManager.getConnection(url)
-        conn.setAutoCommit(false)
-        try {
-          // reflective: new CopyManager(conn.unwrap(BaseConnection))
-          val baseCls = Class.forName("org.postgresql.core.BaseConnection")
-          val mgrCls = Class.forName("org.postgresql.copy.CopyManager")
-          val mgr = mgrCls.getConstructor(baseCls)
-            .newInstance(conn.unwrap(baseCls.asInstanceOf[Class[AnyRef]]))
-          val copyIn = mgrCls.getMethod("copyIn", classOf[String], classOf[java.io.InputStream])
-          val sql = s"COPY $table ($colList) FROM STDIN"
-          rows.grouped(batchRows).foreach { batch =>
-            val payload = encodeBatch(schema, batch.iterator)
-            copyIn.invoke(mgr, sql, new ByteArrayInputStream(payload))
-          }
-          conn.commit()
-        } catch {
-          // a failed COPY often leaves the connection broken: keep the
-          // root cause, attach the rollback failure as suppressed
-          case e: Throwable =>
-            try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
-            throw e
-        } finally conn.close()
-      }
+  /** `COPY table (columns) FROM STDIN`; `columns` are the matched target
+    * column names, already quoted by the dialect, so mixed-case names and
+    * reserved words land in the columns the table was created with. */
+  private[graft] def copyStatement(table: String, columns: Seq[String]): String =
+    s"COPY $table (${columns.mkString(", ")}) FROM STDIN"
+
+  /** COPY-stream one partition on `conn` with `sql` ([[copyStatement]]),
+    * inside the caller's transaction ([[BatchSink.write]] opens, commits
+    * and rolls back), one `copyIn` per `batchRows` rows; returns the
+    * (count, checksum) fold of the rows streamed, as the INSERT body does. */
+  private[transfer] def copyRows(conn: Connection, rows: Iterator[InternalRow],
+      schema: StructType, sql: String, batchRows: Int): (Long, Long) = {
+    // reflective: new CopyManager(conn.unwrap(BaseConnection))
+    val baseCls = Class.forName("org.postgresql.core.BaseConnection")
+    val mgrCls = Class.forName("org.postgresql.copy.CopyManager")
+    val mgr = mgrCls.getConstructor(baseCls)
+      .newInstance(conn.unwrap(baseCls.asInstanceOf[Class[AnyRef]]))
+    val copyIn = mgrCls.getMethod("copyIn", classOf[String], classOf[java.io.InputStream])
+    val types = schema.fields.map(_.dataType)
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    var n = 0L
+    var chk = 0L
+    rows.map { r =>
+      n += 1
+      chk ^= BatchSink.rowHash(r, types)
+      toRow(r).asInstanceOf[Row]
+    }.grouped(batchRows).foreach { batch =>
+      copyIn.invoke(mgr, sql, new ByteArrayInputStream(encodeBatch(schema, batch.iterator)))
     }
+    (n, chk)
   }
 }

@@ -1,6 +1,6 @@
 package graft.transfer
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,12 +12,15 @@ import org.apache.spark.sql.types._
   *   ----------------------------------+---------------------------------
   *   keyset/offset pagination loop     | partitioned read (parallel)
   *   (`connection.go:115-166`)         |
-  *   per-batch PG transaction + COPY   | `df.write` (per-partition tasks)
+  *   per-batch PG transaction + COPY   | [[BatchSink]]: one transaction
+  *                                     | per partition, batched INSERT or
+  *                                     | COPY; file targets: `df.write`
   *   zero-date → NULL (`:526-541`)     | [[zeroDatesToNull]] column rule
   *   WKB point → (x,y) (`:596-633`)    | [[PointDecode]] expression
   *   COUNT(*) validation (`:313-356`)  | count + order-independent xor
-  *                                     | checksum (stronger), observed on
-  *                                     | the write and on one read-back
+  *                                     | checksum (stronger), folded in
+  *                                     | the JDBC write loop (observed on
+  *                                     | file writes) and in one read-back
   *                                     | job ([[copyTable]], [[validate]])
   *
   * Endpoints are pluggable: parquet directories (the test corpus) or JDBC
@@ -122,8 +125,8 @@ object Transfer {
   def decodePoints(df: DataFrame, pointCols: Seq[String]): DataFrame = {
     if (pointCols.nonEmpty) graft.functions.PointDecode.register(df.sparkSession)
     pointCols.foldLeft(df) { (d, c) =>
-      // backtick-quoted like checksumCol: reserved/spaced column names are
-      // legal MySQL identifiers and must survive expr()
+      // backtick-quoted like BatchSink.checksumCol: reserved/spaced column
+      // names are legal MySQL identifiers and must survive expr()
       val q = "`" + c.replace("`", "``") + "`"
       d.withColumn(c, expr(s"graft_point_decode($q)"))
     }
@@ -151,13 +154,7 @@ object Transfer {
         df.write.mode(if (truncate) SaveMode.Overwrite else SaveMode.Append)
           .orc(s"$dir/$table.orc")
       case j: Jdbc =>
-        df.write.format("jdbc")
-          .option("url", j.url)
-          .option("dbtable", j.table.replace("%s", table))
-          .option("batchsize", j.batchSize)
-          .option("truncate", truncate)
-          .mode(if (truncate) SaveMode.Overwrite else SaveMode.Append)
-          .save()
+        BatchSink.write(df, j.url, j.table.replace("%s", table), j.batchSize, truncate)
     }
 
   // ---------------------------------------------------------- validation
@@ -172,29 +169,24 @@ object Transfer {
     * arithmetic, so the trade is documented rather than swapped). */
   def checksum(df: DataFrame): Long = stats(df)._2
 
-  /** bit_xor(xxhash64(all columns)) with every column name backtick-quoted
-    * — reserved words (`order`, `select`) and spaced names are legal MySQL
-    * column names and must survive the round trip through expr(). */
-  private def checksumCol(df: DataFrame): Column = {
-    val quoted = df.schema.fieldNames
-      .map(n => "`" + n.replace("`", "``") + "`")
-    expr(s"bit_xor(xxhash64(${quoted.mkString(", ")}))")
-  }
-
   /** (row count, xor-xxhash64 checksum) of `df` in ONE job with no
-    * shuffle: both aggregates ride an `observe()` over a `noop` sink, so
-    * each task folds its rows locally and the driver merges one partial
-    * per task — no partial-aggregate stage, exchange and final job. */
-  def stats(df: DataFrame): (Long, Long) =
-    observedStats(df)(_.write.format("noop").mode(SaveMode.Overwrite).save())
+    * shuffle: [[BatchSink.stats]] folds each task's `InternalRow`s in one
+    * loop (the fold the JDBC write runs) and the driver merges one pair per
+    * task — no aggregate stage, no sink, no generated hash code. */
+  def stats(df: DataFrame): (Long, Long) = BatchSink.stats(df)
 
-  /** Run `sink` over `df` with (count, checksum) observed on the rows that
-    * flow through it; the metrics are exactly the rows the sink consumed. */
-  private def observedStats(df: DataFrame)(sink: DataFrame => Unit): (Long, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    sink(df.observe(obs, count(lit(1)).as("n"), checksumCol(df).as("chk")))
-    val m = obs.get
-    (m("n").asInstanceOf[Long], Option(m("chk")).fold(0L)(_.asInstanceOf[Long]))
+  /** Write `df` to `dst`; (count, checksum) of exactly the rows written:
+    * folded by the JDBC sink itself, `observe()`d on Spark's file writers. */
+  private def writeCounted(df: DataFrame, dst: Endpoint, table: String,
+                           truncate: Boolean): (Long, Long) = dst match {
+    case j: Jdbc =>
+      BatchSink.write(df, j.url, j.table.replace("%s", table), j.batchSize, truncate)
+    case _ =>
+      val obs = org.apache.spark.sql.Observation()
+      write(df.observe(obs, count(lit(1)).as("n"), BatchSink.checksumCol(df).as("chk")),
+        dst, table, truncate)
+      val m = obs.get
+      (m("n").asInstanceOf[Long], Option(m("chk")).fold(0L)(_.asInstanceOf[Long]))
   }
 
   /** Compare source against destination. `convertSrc` must be the same
@@ -363,21 +355,25 @@ object Transfer {
 
   /** Full per-table transfer: read → convert → write → validate, ONE
     * Spark job per side. The source is scanned once, by the write itself:
-    * every row is counted and hashed (`observe()`) as it flows to the
-    * writer, so source count and checksum describe exactly the rows that
-    * were written — the converted frame, not a raw re-read, so in-flight
-    * conversions (zero-dates, point decode) never trip the checksum. The
-    * destination read-back ([[stats]]) is the one validation pass.
+    * every row is counted and hashed as it flows to the writer — in
+    * [[BatchSink]]'s bind loop for JDBC targets, by `observe()` on Spark's
+    * file writers — so source count and checksum describe exactly the
+    * rows that were written: the converted frame, not a raw re-read, so
+    * in-flight conversions (zero-dates, point decode) never trip the
+    * checksum. The destination read-back ([[stats]], the same fold) is
+    * the one validation pass.
     *
     * Write parallelism is sized from a row count taken BEFORE the write: a
     * driver-side `SELECT COUNT(*)` for JDBC sources (the reference's S11
     * count, no Spark job), row-group metadata for file sources. It is only
-    * a sizing hint and is never compared with anything. A JDBC source is
-    * cached only when the write repartitions it — a retried shuffle-map
-    * task would otherwise re-read a live table — and never takes the
-    * empty-table shortcut (sync_data.go:64-113): a zero counted outside
-    * the write proves nothing about the rows it will see, so an empty
-    * JDBC table goes through the normal write-and-verify path. */
+    * a sizing hint and is never compared with anything; the source's own
+    * partition count comes from the physical plan the write executes (no
+    * job, no Row deserializer). A JDBC source is cached only when the
+    * write repartitions it — a retried shuffle-map task would otherwise
+    * re-read a live table — and never takes the empty-table shortcut
+    * (sync_data.go:64-113): a zero counted outside the write proves
+    * nothing about the rows it will see, so an empty JDBC table goes
+    * through the normal write-and-verify path. */
   def copyTable(spark: SparkSession, src: Endpoint, dst: Endpoint, table: String,
                 truncate: Boolean = true,
                 pointCols: Seq[String] = Nil,
@@ -409,12 +405,12 @@ object Transfer {
     }
     val target = graft.catalog.Catalog.suggestNumPartitions(
       rowsHint, width, targetBytesPerPartition = targetBytes)
-    val reshuffle = target > df1.rdd.getNumPartitions
+    val reshuffle = target > df1.queryExecution.toRdd.getNumPartitions
     val snapshot = reshuffle && src.isInstanceOf[Jdbc]
     if (snapshot) df1.persist()
     try {
       val df = if (reshuffle) df1.repartition(target) else df1
-      val (srcRows, srcSum) = observedStats(df)(write(_, dst, table, truncate))
+      val (srcRows, srcSum) = writeCounted(df, dst, table, truncate)
       val (dstRows, dstSum) = stats(read(spark, typed(dst, df.schema), table))
       val ok = !validateChecksum || srcSum == dstSum
       TransferResult(table, srcRows, dstRows, ok && srcRows == dstRows)

@@ -350,6 +350,81 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(v.srcRows == 200 && v.dstRows == 200 && !v.checksumMatch)
   }
 
+  test("NULLs of every MySQL-shaped column type land in a schema-stage VARCHAR target") {
+    // the target is created by the schema stage first (VARCHAR for the
+    // string columns); NULL strings once bound as the dialect's CLOB there
+    val srcUrl = s"jdbc:derby:${Files.createTempDirectory("xfer_nulls_src")}/d;create=true"
+    val dstUrl = s"jdbc:derby:${Files.createTempDirectory("xfer_nulls_dst")}/d;create=true"
+    val conn = java.sql.DriverManager.getConnection(srcUrl)
+    try {
+      conn.createStatement().execute("""CREATE TABLE nulls (id INT NOT NULL PRIMARY KEY,
+        |v VARCHAR(64), ch CHAR(8), d DECIMAL(10,2), dt DATE, ts TIMESTAMP, bo BOOLEAN)""".stripMargin)
+      val ins = conn.prepareStatement("INSERT INTO nulls VALUES (?,?,?,?,?,?,?)")
+      import java.sql.Types._
+      for (i <- 0 until 20) {
+        ins.setInt(1, i)
+        if (i % 4 == 0) Seq(VARCHAR, CHAR, DECIMAL, DATE, TIMESTAMP, BOOLEAN)
+          .zipWithIndex.foreach { case (t, k) => ins.setNull(k + 2, t) }
+        else {
+          ins.setString(2, s"v$i"); ins.setString(3, s"c$i")
+          ins.setBigDecimal(4, java.math.BigDecimal.valueOf(i * 101L, 2))
+          ins.setDate(5, java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(i)))
+          ins.setTimestamp(6, java.sql.Timestamp.valueOf(
+            java.time.LocalDateTime.of(2020, 1, 1, 0, 0).plusSeconds(i * 3601L)))
+          ins.setBoolean(7, i % 2 == 0)
+        }
+        ins.addBatch()
+      }
+      ins.executeBatch()
+    } finally conn.close()
+    val tables = graft.catalog.Catalog.listTables(srcUrl)
+    val report = Pipeline.run(spark, Jdbc(srcUrl, "%s"), Jdbc(dstUrl, "%s"),
+      Pipeline.Config(stopOnError = false, stages = Seq("schema", "data", "validate")), tables)
+    assert(report.stats.forall(_.failures.isEmpty), report.stats)
+    assert(report.results.map(r => (r.table.toUpperCase, r.srcRows, r.dstRows, r.checksumMatch)) ==
+      Seq(("NULLS", 20L, 20L, true)))
+    val dst = java.sql.DriverManager.getConnection(dstUrl)
+    try {
+      val md = dst.createStatement().executeQuery("SELECT v, ch FROM nulls WHERE 1=0").getMetaData
+      assert(md.getColumnType(1) == java.sql.Types.VARCHAR && md.getColumnType(2) == java.sql.Types.VARCHAR)
+      val rs = dst.createStatement().executeQuery(
+        "SELECT COUNT(*) FROM nulls WHERE v IS NULL AND ch IS NULL AND d IS NULL AND dt IS NULL" +
+          " AND ts IS NULL AND bo IS NULL")
+      rs.next()
+      assert(rs.getInt(1) == 5)
+    } finally dst.close()
+  }
+
+  test("stats fold equals bit_xor(xxhash64(*)) over every atomic type, nulls and a struct") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.functions.{count, expr, lit}
+    val schema = StructType(Seq(
+      StructField("bo", BooleanType), StructField("by", ByteType), StructField("sh", ShortType),
+      StructField("i", IntegerType), StructField("l", LongType), StructField("f", FloatType),
+      StructField("d", DoubleType), StructField("d18", DecimalType(18, 4)),
+      StructField("d30", DecimalType(30, 6)), StructField("s", StringType),
+      StructField("bin", BinaryType), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("ntz", TimestampNTZType),
+      StructField("st", StructType(Seq(StructField("x", DoubleType), StructField("y", StringType))))))
+    val ldt = java.time.LocalDateTime.of(2024, 2, 29, 23, 59, 58, 123456000)
+    def row(k: Int): Row = Row(k % 2 == 0, k.toByte, (k * 7).toShort, k * 1000, k.toLong << 40,
+      Seq(0.0f, -0.0f, Float.NaN, 1.5f)(k % 4), Seq(0.0, -0.0, Double.NaN, -2.25)(k % 4),
+      new java.math.BigDecimal(s"$k.1234"), new java.math.BigDecimal(s"123456789012345678901$k.654321"),
+      Seq("ascii", "Grüße", "日本語テキスト", "")(k % 4), Array[Byte](k.toByte, -1, 0),
+      java.sql.Date.valueOf(java.time.LocalDate.of(1969, 12, 31).plusDays(k)),
+      java.sql.Timestamp.valueOf(ldt.minusDays(k)), ldt.plusSeconds(k),
+      Row(k / 3.0, s"p$k"))
+    val nulls = Row.fromSeq(Seq.fill(schema.size)(null))
+    val rows = (0 until 40).map(row) ++ Seq(nulls, nulls) ++
+      (0 until 4).map(k => Row.fromSeq(row(k).toSeq.zipWithIndex.map {
+        case (v, j) => if (j % 3 == k % 3) null else v }))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val sql = df.agg(count(lit(1)), expr("bit_xor(xxhash64(*))")).collect().head
+    assert(Transfer.stats(df) == (sql.getLong(0), sql.getLong(1)))
+    assert(Transfer.stats(df.filter(lit(false))) == (0L, 0L))
+  }
+
   test("empty inputs: stats, copyTable and validate return (0, 0, true)") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
