@@ -100,13 +100,6 @@ object Bench {
   def warmup(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    // warm the RDD<->DataFrame bridge (RowEncoder + RDD-scan codegen) that
-    // GlobalOrder-based queries hit — first use costs ~1s of Janino work
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L))),
-      new org.apache.spark.sql.types.StructType()
-        .add("id", org.apache.spark.sql.types.LongType, nullable = false))
-      .selectExpr("sum(id)").collect()
     graft.operators.GlobalOrder.withRowNumber(
       spark.range(100).toDF(), Seq(org.apache.spark.sql.functions.col("id")), "rn")
       .count()

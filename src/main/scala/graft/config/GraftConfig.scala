@@ -114,12 +114,14 @@ object GraftConfig {
   private def set(c: GraftConfig, section: String, key: String, value0: String): GraftConfig = {
     val value = strip(value0)
     def bool = value.equalsIgnoreCase("true") || value == "1" || value.equalsIgnoreCase("yes")
+    def int = value.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"config key '$key' must be an integer, got '$value'"))
     (section, key) match {
       case (_, "source_url") | ("source", "url") => c.copy(sourceUrl = value)
       case (_, "target_url") | ("target", "url") => c.copy(targetUrl = value)
-      case (_, "concurrency")       => c.copy(concurrency = value.toInt)
-      case (_, "batch_insert_size") => c.copy(batchInsertSize = value.toInt)
-      case (_, "max_rows_per_batch") => c.copy(maxRowsPerBatch = value.toInt)
+      case (_, "concurrency")       => c.copy(concurrency = int)
+      case (_, "batch_insert_size") => c.copy(batchInsertSize = int)
+      case (_, "max_rows_per_batch") => c.copy(maxRowsPerBatch = int)
       case (_, "truncate_before_sync") => c.copy(truncateBeforeSync = bool)
       case (_, "validate_data")     => c.copy(validateData = bool)
       case (_, "lowercase_columns") => c.copy(lowercaseColumns = bool)

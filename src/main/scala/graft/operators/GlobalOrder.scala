@@ -1,41 +1,37 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.{Column, DataFrame, InternalFrames}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, JoinedRow, SpecificInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
-/** Distributed total ordering: global `row_number` without the
-  * single-task sort an unpartitioned `Window.orderBy` degenerates to.
-  *
-  * The classic two-phase shape every engine uses for a scalable ORDER BY
-  * + rank (reference: the keyset pagination loop sync_data.go:207-311 is
-  * the sequential single-node version of the same total order):
-  *   1. `repartitionByRange(sortCols)` + `sortWithinPartitions` — ONE
-  *      range shuffle; partition i holds keys strictly below partition
-  *      i+1, each sorted internally, so the concatenation is the total
-  *      order;
-  *   2. a count-per-partition job (returns numPartitions longs — driver
-  *      tiny) turned into broadcast prefix offsets;
-  *   3. a narrow map adding `offset(i) + local index`.
-  *
-  * Deterministic as long as `sortCols` is a total order (callers pass a
-  * unique tiebreak): range boundary placement from sampling may vary, but
-  * offsets shift with the boundaries, so the assigned numbers do not.
-  *
-  * The sorted frame is persisted (MEMORY_AND_DISK) between the count job
-  * and the numbering pass so the range shuffle + sort run once, not twice.
-  * Callers streaming into a write can `unpersist()` the input afterwards.
+/** Distributed total ordering: global row number, dense rank and running
+  * sum/max without the single-task sort an unpartitioned `Window.orderBy`
+  * degenerates to (reference: the keyset pagination loop
+  * sync_data.go:207-311 is the sequential single-node form of the same
+  * total order). Every function is one two-phase [[scan]]:
+  *   1. `repartitionByRange` + `sortWithinPartitions` — ONE range shuffle;
+  *      partition i holds keys strictly below partition i+1, so the
+  *      concatenation of the sorted partitions is the total order;
+  *   2. a job returning one small summary per partition (count, sum, max
+  *      or boundary keys), folded on the driver into each partition's
+  *      starting state and the total;
+  *   3. a narrow pass appending one LONG column from a stateful per-row
+  *      labeller seeded with that state.
+  * Both jobs read the sorted `InternalRow`s of one RDD, so the second
+  * reuses the shuffle and rows never leave Catalyst's format. Results do
+  * not depend on where the range sampler cuts (callers pass a unique
+  * tiebreak; dense rank needs none). The result is a `LogicalRDD` leaf.
   */
 object GlobalOrder {
 
-  /** Persist the input for the sampling + shuffle double-read — UNLESS
-    * the caller already persisted it. `persist` on an already-cached
-    * frame is a no-op, but the paired `unpersist` DROPS the caller's
-    * cache entry and silently forces every later consumer to recompute
-    * the frame from scratch (measured on q294: the 5-pass layout sweep
-    * re-derived its scan + Morton/Hilbert folds once PER PASS, 5.9 s →
-    * 14.8 s at sf0.1). Borrow the caller's cache when one exists;
-    * own-and-release only a cache this call created. */
+  /** Persist the input for the sampling + shuffle double-read — UNLESS the
+    * caller already did: the paired `unpersist` would DROP the caller's cache
+    * and every later consumer would recompute it (q294: 5.9 s → 14.8 s). */
   private def borrowCache(df: DataFrame): (DataFrame, () => Unit) =
     if (df.storageLevel != StorageLevel.NONE) (df, () => ())
     else {
@@ -43,275 +39,120 @@ object GlobalOrder {
       (p, () => { p.unpersist(blocking = false); () })
     }
 
-  def withRowNumber(df: DataFrame, sortCols: Seq[Column], out: String,
-                    numPartitions: Int = 0): DataFrame =
-    withRowNumberAndTotal(df, sortCols, out, numPartitions)._1
-
-  /** Same, plus the total row count — already known from the per-partition
-    * count job, so callers needing `n` (quantile cuts, equal-split bucket
-    * math) get it without a `count(*) over ()` single-partition window or
-    * a second scan. */
-  def withRowNumberAndTotal(df: DataFrame, sortCols: Seq[Column], out: String,
-                    numPartitions: Int = 0): (DataFrame, Long) = {
+  /** `summarize` reduces one sorted partition; `starts` folds the summaries
+    * (in partition order) into n+1 values — the state before partition i,
+    * then the total; `label(start)` is partition i's per-row labeller. */
+  private def scan[S: ClassTag](df: DataFrame, sortCols: Seq[Column], out: String)(
+      summarize: Iterator[InternalRow] => S)(starts: Array[S] => Array[Long])(
+      label: Long => InternalRow => Long): (DataFrame, Long) = {
     val spark = df.sparkSession
-    val p = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-    // RangePartitioner SAMPLES the input to place boundaries — an extra
-    // pass over `df` before the shuffle pass. Persist the (caller-narrowed)
-    // input so sampling + shuffle read the computed frame once, then drop
-    // it as soon as the count job has run the shuffle's map stage.
     val (input, release) = borrowCache(df)
-    val sorted = input.repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    // ONE RDD instance shared by the count job and the numbering job: the
-    // second job skips the completed shuffle map stage and re-reads the
-    // shuffle files, so nothing table-sized needs to stay cached (only the
-    // reduce-side within-partition sort repeats). No persist → no leaked
-    // storage after the call.
-    val sortedRdd = sorted.rdd
-    val counts = sortedRdd
-      .mapPartitionsWithIndex { (i, it) =>
-        // count in a Long: Iterator.size returns Int and would wrap
-        // negative past 2^31 rows in one range partition — silently
-        // corrupting every offset at exactly the scale this exists for
-        var c = 0L
-        while (it.hasNext) { it.next(); c += 1 }
-        Iterator((i, c))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    release()
-    val offsets = counts.scanLeft(0L)(_ + _) // offsets(i) = rows before partition i
-    val schema = sorted.schema.add(StructField(out, LongType, nullable = false))
-    val numbered = sortedRdd.mapPartitionsWithIndex { (i, it) =>
-      var rn = offsets(i)
-      it.map { r => rn += 1; Row.fromSeq(r.toSeq :+ rn) }
+    val qe = input
+      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*).queryExecution
+    // planned under an execution id, as `Dataset.rdd` is: the sampling and
+    // shuffle-stage jobs then carry this call site and SQL listeners see them
+    val rows = SQLExecution.withNewExecutionId(qe, Some("toRdd"))(qe.toRdd)
+    // after the summary job only the shuffle output is read
+    val state = try starts(rows.mapPartitions(it => Iterator(summarize(it))).collect())
+                finally release()
+    val schema = df.schema.add(out, LongType, nullable = false)
+    val labelled = rows.mapPartitionsWithIndex[InternalRow] { (i, it) =>
+      val next = label(state(i))
+      val v = new SpecificInternalRow(Seq(LongType))
+      val joined = new JoinedRow
+      val append = UnsafeProjection.create(schema)
+      it.map { r => v.setLong(0, next(r)); append(joined(r, v)) }
     }
-    (spark.createDataFrame(numbered, schema), offsets.last)
+    (InternalFrames.fromRdd(spark, labelled, schema), state.last)
   }
 
-  /** Distributed DENSE rank over key columns — equal keys share a rank,
-    * ranks start at 1 and have no gaps — without the single-task sort an
-    * unpartitioned `dense_rank()` window degenerates to. The workhorse of
-    * the prefix-doubling suffix sort (X342/q364), where every doubling
-    * round re-ranks (rank, rank2) pairs and needs the count of DISTINCT
-    * keys back to decide termination.
-    *
-    * Same two-phase shape as [[withRowNumberAndTotal]], ONE range shuffle:
-    *   1. `repartitionByRange(keyCols)` + `sortWithinPartitions` — equal
-    *      keys are contiguous, possibly spanning a partition boundary;
-    *   2. a per-partition summary job returning (count, firstKey, lastKey,
-    *      keyChanges) — numPartitions tuples, driver tiny — merged on the
-    *      driver into per-partition starting ranks (a boundary where
-    *      lastKey(i) == firstKey(i+1) continues the run instead of
-    *      starting a new rank);
-    *   3. a narrow map assigning `startRank + local dense index`.
-    *
-    * Returns the ranked frame and the total number of distinct keys (free
-    * from the driver merge). Deterministic regardless of range-boundary
-    * placement: equal keys always sort adjacent, and the boundary merge
-    * makes the assigned rank independent of WHERE the sampler cut. Null
-    * keys sort first and form one rank of their own, like `dense_rank()`
-    * over an ascending window. */
-  def withDenseRank(df: DataFrame, keyCols: Seq[String], out: String,
-                    numPartitions: Int = 0): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val p = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-    val cols = keyCols.map(df.col)
-    val (input, release) = borrowCache(df)
-    val sorted = input.repartitionByRange(p, cols: _*)
-      .sortWithinPartitions(cols: _*)
-    val sortedRdd = sorted.rdd // shared: summary job + ranking job reuse the shuffle
-    val idxs = keyCols.map(sorted.schema.fieldIndex)
-    // all-LONG keys (the prefix-doubling case: every round compares
-    // (rank, r2) pairs over the whole suffix frame) take a primitive
-    // comparison path — no per-row Seq[Any] allocation, no boxed
-    // equality — with the generic path kept for string/mixed keys
-    // (q364's radix round). Pure per-task work (guide §1.2 step 2);
-    // identical ranks by construction. Null-aware per key: q364's r2
-    // comes from lead(), so nullable LONG keys stay on this path.
-    val allLong = idxs.forall(sorted.schema.fields(_).dataType == LongType)
-    val idxArr = idxs.toArray
-    val summaries = (if (allLong) sortedRdd.mapPartitionsWithIndex { (i, it) =>
-      if (!it.hasNext) Iterator((i, 0L, null: Seq[Any], null: Seq[Any], 0L))
-      else {
-        val last = new Array[Long](idxArr.length)
-        val lastNull = new Array[Boolean](idxArr.length)
-        loadLongKeys(it.next(), idxArr, last, lastNull)
-        val fk = boxLongKeys(last, lastNull)
-        var changes = 0L
-        var cnt = 1L
-        while (it.hasNext) {
-          cnt += 1
-          if (loadLongKeys(it.next(), idxArr, last, lastNull)) changes += 1
-        }
-        Iterator((i, cnt, fk, boxLongKeys(last, lastNull), changes))
-      }
-    } else sortedRdd.mapPartitionsWithIndex { (i, it) =>
-      if (!it.hasNext) Iterator((i, 0L, null: Seq[Any], null: Seq[Any], 0L))
-      else {
-        val fk: Seq[Any] = idxs.map(it.next().get)
-        var last = fk
-        var changes = 0L // key transitions within the partition
-        var cnt = 1L
-        while (it.hasNext) {
-          val k: Seq[Any] = idxs.map(it.next().get)
-          cnt += 1
-          if (k != last) { changes += 1; last = k }
-        }
-        Iterator((i, cnt, fk, last, changes))
-      }
-    }).collect().sortBy(_._1)
-    release()
-    // rank of the FIRST row of each partition; runningRank = rank of the
-    // last row seen so far, runningLast = its key (carried past empties)
-    val firstRank = new Array[Long](summaries.length)
-    var runningLast: Seq[Any] = null
-    var runningRank = 0L
-    summaries.foreach { case (i, cnt, fk, lk, changes) =>
-      if (cnt == 0L) firstRank(i) = runningRank // partition empty — unused
-      else {
-        val startsNew = runningLast == null || fk != runningLast
-        firstRank(i) = runningRank + (if (startsNew) 1L else 0L)
-        runningRank = firstRank(i) + changes
-        runningLast = lk
-      }
-    }
-    val totalDistinct = runningRank
-    val schema = sorted.schema.add(StructField(out, LongType, nullable = false))
-    val ranked = (if (allLong) sortedRdd.mapPartitionsWithIndex { (i, it) =>
-      var rank = firstRank(i)
-      val prev = new Array[Long](idxArr.length)
-      val prevNull = new Array[Boolean](idxArr.length)
-      var started = false
-      it.map { r =>
-        val diff = loadLongKeys(r, idxArr, prev, prevNull)
-        if (!started) started = true
-        else if (diff) rank += 1
-        Row.fromSeq(r.toSeq :+ rank)
-      }
-    } else sortedRdd.mapPartitionsWithIndex { (i, it) =>
-      var rank = firstRank(i)
-      var prev: Seq[Any] = null
-      var started = false
-      it.map { r =>
-        val k: Seq[Any] = idxs.map(r.get)
-        if (!started) started = true
-        else if (k != prev) rank += 1
-        prev = k
-        Row.fromSeq(r.toSeq :+ rank)
-      }
-    })
-    (spark.createDataFrame(ranked, schema), totalDistinct)
+  /** A non-null LONG column's reader: `getLong` reads NULL as 0, so a NULL
+    * fails naming the column. */
+  private def longValue(df: DataFrame, col: String, fn: String): InternalRow => Long = {
+    val i = df.schema.fieldIndex(col)
+    r => if (r.isNullAt(i)) throw new IllegalArgumentException(
+      s"GlobalOrder.$fn: NULL in value column '$col'") else r.getLong(i)
   }
 
-  /** Load row `r`'s LONG keys at `idxs` into (`keys`, `nulls`) and report
-    * whether any differs from what they held. A null key is held as
-    * (`nulls(j)` = true, 0L), so a null and a 0 never compare equal. */
-  private def loadLongKeys(r: Row, idxs: Array[Int], keys: Array[Long],
-                           nulls: Array[Boolean]): Boolean = {
-    var diff = false
-    var j = 0
-    while (j < idxs.length) {
-      val isNull = r.isNullAt(idxs(j))
-      val v = if (isNull) 0L else r.getLong(idxs(j))
-      if (isNull != nulls(j) || v != keys(j)) { diff = true; nulls(j) = isNull; keys(j) = v }
-      j += 1
+  /** Key runs over sorted rows: `next(r)` is true when r starts a new key
+    * (its key differs from the previous row's, or it is the first row). */
+  private final class KeyRuns(keys: Seq[Expression], ord: Ordering[InternalRow]) {
+    private val key = UnsafeProjection.create(keys)
+    var first, last: UnsafeRow = null
+    def next(r: InternalRow): Boolean = {
+      val k = key(r)
+      val isNew = last == null || ord.compare(last, k) != 0
+      if (isNew) { last = k.copy(); if (first == null) first = last }
+      isNew
     }
-    diff
   }
 
-  /** Boundary key for the driver merge: the generic path's Seq[Any] shape,
-    * null where the key is null. */
-  private def boxLongKeys(keys: Array[Long], nulls: Array[Boolean]): Seq[Any] =
-    keys.indices.map(j => if (nulls(j)) null else keys(j))
+  def withRowNumber(df: DataFrame, sortCols: Seq[Column], out: String): DataFrame =
+    withRowNumberAndTotal(df, sortCols, out)._1
 
-  /** Distributed inclusive prefix sum over a total order — the running-sum
-    * analogue of [[withRowNumberAndTotal]] (cumulative revenue, Pareto
-    * cuts, equal-bytes packing). Same two-phase shape: ONE range shuffle,
-    * a per-partition sums job (numPartitions longs — driver tiny) turned
-    * into broadcast prefix offsets, then a narrow map accumulating within
-    * each partition. `valueCol` must be LongType; the grand total comes
-    * back for free from the offsets. */
+  /** 1-based row numbers plus the row count, which callers needing `n`
+    * (quantile cuts, equal-split buckets) get without a `count(*) over ()`
+    * window or a second scan. */
+  def withRowNumberAndTotal(df: DataFrame, sortCols: Seq[Column],
+                            out: String): (DataFrame, Long) =
+    scan(df, sortCols, out)(_.foldLeft(0L)((c, _) => c + 1))(_.scanLeft(0L)(_ + _)) {
+      start => var rn = start; _ => { rn += 1; rn }
+    }
+
+  /** DENSE rank over key columns (equal keys share a rank; ranks start at
+    * 1 with no gaps) plus the number of distinct keys — the prefix-doubling
+    * suffix sort (X342/q364) re-ranks (rank, rank2) pairs every round and
+    * stops on that count. A partition's summary is (first key, last key,
+    * key runs); a partition whose first key equals the previous non-empty
+    * partition's last key continues its rank. Keys compare with Spark's
+    * ordering, so ties are `dense_rank()`'s for every type: NULLs first as
+    * one rank, NaN equal to NaN, -0.0 equal to 0.0. */
+  def withDenseRank(df: DataFrame, keyCols: Seq[String], out: String): (DataFrame, Long) = {
+    val fields = keyCols.map(df.schema(_))
+    val keys = fields.map(f => BoundReference(df.schema.fieldIndex(f.name), f.dataType, f.nullable))
+    val ord = LazilyGeneratedOrdering.forSchema(StructType(fields))
+    scan(df, keyCols.map(df.col), out) { it =>
+      val runs = new KeyRuns(keys, ord)
+      val n = it.foldLeft(0L)((n, r) => if (runs.next(r)) n + 1 else n)
+      (runs.first, runs.last, n)
+    } { summaries =>
+      var rank = 0L
+      var last: UnsafeRow = null
+      summaries.map { case (first, lk, n) =>
+        val start = if (first != null && last != null && ord.compare(last, first) == 0)
+                      rank - 1 else rank
+        if (first != null) { rank = start + n; last = lk }
+        start
+      } :+ rank
+    } { start =>
+      val runs = new KeyRuns(keys, ord)
+      var rank = start
+      r => { if (runs.next(r)) rank += 1; rank }
+    }
+  }
+
+  /** Inclusive prefix sum of a non-null LONG `valueCol` over a total order
+    * (cumulative revenue, Pareto cuts, equal-bytes packing), plus the
+    * grand total. */
   def withRunningSum(df: DataFrame, sortCols: Seq[Column], valueCol: String,
-                     out: String, numPartitions: Int = 0): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val p = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-    val (input, release) = borrowCache(df)
-    val sorted = input.repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val sortedRdd = sorted.rdd // shared: sums job + summing job reuse the shuffle
-    val vIdx = sorted.schema.fieldIndex(valueCol)
-    // a NULL would auto-unbox to an opaque executor NPE inside getLong —
-    // name the offending column instead
-    def valueOf(r: Row): Long = {
-      if (r.isNullAt(vIdx))
-        throw new IllegalArgumentException(
-          s"GlobalOrder.withRunningSum: NULL in value column '$valueCol'")
-      r.getLong(vIdx)
+                     out: String): (DataFrame, Long) = {
+    val value = longValue(df, valueCol, "withRunningSum")
+    scan(df, sortCols, out)(_.foldLeft(0L)((a, r) => a + value(r)))(_.scanLeft(0L)(_ + _)) {
+      start => var acc = start; r => { acc += value(r); acc }
     }
-    val sums = sortedRdd
-      .mapPartitionsWithIndex { (i, it) =>
-        var acc = 0L
-        it.foreach(r => acc += valueOf(r))
-        Iterator((i, acc))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    release()
-    val offsets = sums.scanLeft(0L)(_ + _) // offsets(i) = sum before partition i
-    val schema = sorted.schema.add(StructField(out, LongType, nullable = false))
-    val summed = sortedRdd.mapPartitionsWithIndex { (i, it) =>
-      var acc = offsets(i)
-      it.map { r => acc += valueOf(r); Row.fromSeq(r.toSeq :+ acc) }
-    }
-    (spark.createDataFrame(summed, schema), offsets.last)
   }
 
-  /** Distributed EXCLUSIVE prefix max over a total order — the
-    * running-frontier analogue of [[withRunningSum]] (watermark frontier,
-    * high-water marks). Each row gets the maximum of `valueCol` over all
-    * STRICTLY EARLIER rows in the total order; the first row gets
-    * `Long.MinValue` (no frontier yet — callers must treat it as "none",
-    * not subtract from it). Same two-phase shape: ONE range shuffle, a
-    * per-partition maxima job (numPartitions longs), broadcast prefix
-    * maxima, then a narrow map carrying the frontier within each
-    * partition. `valueCol` must be LongType and non-null. */
+  /** EXCLUSIVE prefix max of a non-null LONG `valueCol` over a total order
+    * (watermark frontier, high-water marks): each row gets the max over
+    * STRICTLY EARLIER rows; the first row gets `Long.MinValue` (no frontier
+    * yet — callers must treat it as "none", not subtract from it). */
   def withRunningMax(df: DataFrame, sortCols: Seq[Column], valueCol: String,
-                     out: String, numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val p = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-    val (input, release) = borrowCache(df)
-    val sorted = input.repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val sortedRdd = sorted.rdd // shared: maxima job + carry job reuse the shuffle
-    val vIdx = sorted.schema.fieldIndex(valueCol)
-    def valueOf(r: Row): Long = {
-      if (r.isNullAt(vIdx))
-        throw new IllegalArgumentException(
-          s"GlobalOrder.withRunningMax: NULL in value column '$valueCol'")
-      r.getLong(vIdx)
-    }
-    val maxima = sortedRdd
-      .mapPartitionsWithIndex { (i, it) =>
-        var acc = Long.MinValue
-        it.foreach(r => acc = math.max(acc, valueOf(r)))
-        Iterator((i, acc))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    release()
-    // offsets(i) = max over all partitions before i (MinValue for the first)
-    val offsets = maxima.scanLeft(Long.MinValue)(math.max)
-    val schema = sorted.schema.add(StructField(out, LongType, nullable = false))
-    val carried = sortedRdd.mapPartitionsWithIndex { (i, it) =>
-      var acc = offsets(i)
-      it.map { r =>
-        val prev = acc
-        acc = math.max(acc, valueOf(r))
-        Row.fromSeq(r.toSeq :+ prev)
-      }
-    }
-    spark.createDataFrame(carried, schema)
+                     out: String): DataFrame = {
+    val value = longValue(df, valueCol, "withRunningMax")
+    scan(df, sortCols, out)(_.foldLeft(Long.MinValue)((a, r) => math.max(a, value(r))))(
+      _.scanLeft(Long.MinValue)(math.max)) {
+      start => var acc = start; r => { val prev = acc; acc = math.max(acc, value(r)); prev }
+    }._1
   }
 }

@@ -167,4 +167,13 @@ class CatalogConfigSpec extends AnyFunSuite {
       "batch_insert_size: 9000\nmax_rows_per_batch: 100\n")
     assert(cfg.maxRowsPerBatch == 9000)
   }
+
+  test("config: a non-integer count names its key and value") {
+    for (key <- Seq("concurrency", "batch_insert_size", "max_rows_per_batch")) {
+      val e = intercept[IllegalArgumentException](GraftConfig.parseString(s"$key: abc\n"))
+      assert(e.getMessage == s"config key '$key' must be an integer, got 'abc'")
+    }
+    // out-of-range integers still clamp rather than fail
+    assert(GraftConfig.parseString("concurrency: 0\n").concurrency == 1)
+  }
 }

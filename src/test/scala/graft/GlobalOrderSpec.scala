@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.operators.GlobalOrder
 
-/** Direct contract tests for the distributed two-phase row_number: it must
-  * agree exactly with the single-partition window form (the semantics it
-  * replaces), independent of partition count, and report the right total.
+/** Direct contract tests for the distributed two-phase scan: each function
+  * must agree exactly with the single-partition window or sequential form
+  * it replaces, independent of the range partition count (the session's
+  * `spark.sql.shuffle.partitions`), and report the right total.
   */
 class GlobalOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -16,6 +17,18 @@ class GlobalOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = GraftSession("global-order-spec", 4)
 
   override def afterAll(): Unit = spark.stop()
+
+  /** Runs `f` with `p` range partitions (the scan reads the session's
+    * shuffle partition count), restoring the session's own afterwards. */
+  private def withPartitions[T](p: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, p.toString)
+    try f finally spark.conf.set(key, saved)
+  }
+
+  private def rankMap(df: org.apache.spark.sql.DataFrame, col: String): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getAs[Long](col)).toMap
 
   private def base = {
     import spark.implicits._
@@ -38,10 +51,8 @@ class GlobalOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("partition count does not change the assigned order") {
     import spark.implicits._
-    val a = GlobalOrder.withRowNumber(base, Seq($"o_custkey", $"o_orderkey"), "rn", 1)
-      .collect().map(r => r.getLong(0) -> r.getAs[Long]("rn")).toMap
-    val b = GlobalOrder.withRowNumber(base, Seq($"o_custkey", $"o_orderkey"), "rn", 7)
-      .collect().map(r => r.getLong(0) -> r.getAs[Long]("rn")).toMap
+    val Seq(a, b) = Seq(1, 7).map(p => withPartitions(p)(rankMap(
+      GlobalOrder.withRowNumber(base, Seq($"o_custkey", $"o_orderkey"), "rn"), "rn")))
     assert(a == b)
   }
 
@@ -75,9 +86,8 @@ class GlobalOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the first row in the total order carries the no-frontier sentinel
     assert(got(seq.head._1) == Long.MinValue)
     // partition count never changes the carried values
-    val p7 = GlobalOrder.withRunningMax(
-      base, Seq($"o_orderkey"), "o_custkey", "frontier", 7)
-      .collect().map(r => r.getLong(0) -> r.getAs[Long]("frontier")).toMap
+    val p7 = withPartitions(7)(rankMap(GlobalOrder.withRunningMax(
+      base, Seq($"o_orderkey"), "o_custkey", "frontier"), "frontier"))
     assert(p7 == expected)
   }
 
@@ -97,11 +107,10 @@ class GlobalOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(total == nDistinct)
     assert(gotMap == expected)
     // partition count never changes the assigned ranks (boundary stitch)
-    for (p <- Seq(1, 7)) {
-      val (gp, tp) = GlobalOrder.withDenseRank(df, Seq("k1", "k2"), "dr", p)
+    for (p <- Seq(1, 7)) withPartitions(p) {
+      val (gp, tp) = GlobalOrder.withDenseRank(df, Seq("k1", "k2"), "dr")
       assert(tp == nDistinct)
-      assert(gp.collect().map(r => r.getLong(0) -> r.getAs[Long]("dr")).toMap
-        == expected, s"partitions=$p")
+      assert(rankMap(gp, "dr") == expected, s"partitions=$p")
     }
   }
 
@@ -119,11 +128,10 @@ class GlobalOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getLong(0) -> r.getAs[Long]("dr")).toMap
     val nDistinct = df.select($"k1", $"k2").distinct().count()
     assert(nDistinct == 9, "3 k1 values × {null, 0, 1}")
-    for (p <- Seq(0, 1, 7)) {
-      val (got, total) = GlobalOrder.withDenseRank(df, Seq("k1", "k2"), "dr", p)
+    for (p <- Seq(4, 1, 7)) withPartitions(p) { // 4: the session's own
+      val (got, total) = GlobalOrder.withDenseRank(df, Seq("k1", "k2"), "dr")
       assert(total == nDistinct, s"partitions=$p")
-      assert(got.collect().map(r => r.getLong(0) -> r.getAs[Long]("dr")).toMap
-        == expected, s"partitions=$p")
+      assert(rankMap(got, "dr") == expected, s"partitions=$p")
     }
   }
 
@@ -137,9 +145,72 @@ class GlobalOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("dr", dense_rank().over(Window.orderBy($"k1")).cast("long"))
       .collect().map(r => r.getLong(0) -> r.getAs[Long]("dr")).toMap
     val nDistinct = df.select($"k1").distinct().count()
-    val (got, total) = GlobalOrder.withDenseRank(df, Seq("k1"), "dr", 5)
+    val (got, total) = withPartitions(5)(GlobalOrder.withDenseRank(df, Seq("k1"), "dr"))
     assert(total == nDistinct)
-    assert(got.collect().map(r => r.getLong(0) -> r.getAs[Long]("dr")).toMap
-      == expected)
+    assert(rankMap(got, "dr") == expected)
+  }
+
+  test("withDenseRank on DOUBLE keys: NaN ties NaN and -0.0 ties 0.0, as dense_rank()") {
+    import spark.implicits._
+    val df = Seq(Double.NaN, 0.0, Double.NaN, -0.0, 1.5, Double.NaN, 1.5)
+      .zipWithIndex.map { case (k, i) => (i.toLong, k) }.toDF("id", "k")
+    val expected = rankMap(
+      df.withColumn("dr", dense_rank().over(Window.orderBy($"k")).cast("long")), "dr")
+    val nDistinct = df.select($"k").distinct().count()
+    assert(nDistinct == 3 && expected.values.toSet == Set(1L, 2L, 3L))
+    for (p <- Seq(1, 3)) withPartitions(p) {
+      val (got, total) = GlobalOrder.withDenseRank(df, Seq("k"), "dr")
+      assert(total == nDistinct, s"partitions=$p")
+      assert(rankMap(got, "dr") == expected, s"partitions=$p")
+    }
+  }
+
+  test("withRowNumber on a nullable sort key equals row_number(), nulls first") {
+    import spark.implicits._
+    val df = base.select($"o_orderkey",
+      when($"o_orderkey" % 4L === 0L, lit(null).cast("long"))
+        .otherwise($"o_custkey" % 7L).as("nk"))
+    val order = Seq($"nk".asc_nulls_first, $"o_orderkey")
+    val expected = rankMap(
+      df.withColumn("rn", row_number().over(Window.orderBy(order: _*)).cast("long")), "rn")
+    for (p <- Seq(1, 7)) withPartitions(p) {
+      assert(rankMap(GlobalOrder.withRowNumber(df, order, "rn"), "rn") == expected,
+        s"partitions=$p")
+    }
+  }
+
+  test("withRowNumber on a STRING sort key equals row_number() (byte order)") {
+    import spark.implicits._
+    // "k10" sorts before "k9": the string order, not the numeric one
+    val df = base.select($"o_orderkey", format_string("k%d", $"o_orderkey").as("sk"))
+    val expected = rankMap(
+      df.withColumn("rn", row_number().over(Window.orderBy($"sk")).cast("long")), "rn")
+    val (got, total) = GlobalOrder.withRowNumberAndTotal(df, Seq($"sk"), "rn")
+    assert(total == expected.size.toLong)
+    assert(rankMap(got, "rn") == expected)
+  }
+
+  test("withRunningSum equals the sequential inclusive prefix sum, with grand total") {
+    import spark.implicits._
+    val seq = base.orderBy($"o_orderkey")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    var acc = 0L
+    val expected = seq.map { case (k, v) => acc += v; k -> acc }.toMap
+    for (p <- Seq(1, 7)) withPartitions(p) {
+      val (got, total) = GlobalOrder.withRunningSum(
+        base, Seq($"o_orderkey"), "o_custkey", "cum")
+      assert(total == acc, s"partitions=$p")
+      assert(rankMap(got, "cum") == expected, s"partitions=$p")
+    }
+  }
+
+  test("withRunningSum names the value column when it holds a NULL") {
+    import spark.implicits._
+    val df = base.select($"o_orderkey",
+      when($"o_orderkey" % 97L === 0L, lit(null).cast("long")).otherwise($"o_custkey").as("v"))
+    val e = intercept[Exception](GlobalOrder.withRunningSum(df, Seq($"o_orderkey"), "v", "cum"))
+    val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x }
+    assert(iae.exists(_.getMessage.contains("NULL in value column 'v'")), e.toString)
   }
 }
