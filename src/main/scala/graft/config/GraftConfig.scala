@@ -14,14 +14,11 @@ final case class GraftConfig(
     sourceUrl: String = "",
     targetUrl: String = "",
     concurrency: Int = 4,                  // config.go default 10, clamped
-    batchInsertSize: Int = 1000,           // config.example.yml:53
-    maxRowsPerBatch: Int = 10000,          // README.md:397
     useTableList: Seq[String] = Nil,       // whitelist (metadata.go:89-104)
     excludeTableList: Seq[String] = Nil,   // blacklist (metadata.go:107-122)
     truncateBeforeSync: Boolean = false,
     validateData: Boolean = true,
     lowercaseColumns: Boolean = false,     // config.go:67
-    showProgress: Boolean = true,
     testOnly: Boolean = false,
     stages: Seq[String] = Seq("schema", "data", "validate"),
     enableFileLogging: Boolean = false,    // config.go:87 (RunConfig)
@@ -120,12 +117,9 @@ object GraftConfig {
       case (_, "source_url") | ("source", "url") => c.copy(sourceUrl = value)
       case (_, "target_url") | ("target", "url") => c.copy(targetUrl = value)
       case (_, "concurrency")       => c.copy(concurrency = int)
-      case (_, "batch_insert_size") => c.copy(batchInsertSize = int)
-      case (_, "max_rows_per_batch") => c.copy(maxRowsPerBatch = int)
       case (_, "truncate_before_sync") => c.copy(truncateBeforeSync = bool)
       case (_, "validate_data")     => c.copy(validateData = bool)
       case (_, "lowercase_columns") => c.copy(lowercaseColumns = bool)
-      case (_, "show_progress")     => c.copy(showProgress = bool)
       case (_, "test_only")         => c.copy(testOnly = bool)
       case (_, "enable_file_logging")  => c.copy(enableFileLogging = bool)
       case (_, "log_file_path")        => c.copy(logFilePath = value)
@@ -147,10 +141,6 @@ object GraftConfig {
     var out = c
     if (out.concurrency < 1) out = out.copy(concurrency = 1)
     if (out.concurrency > 50) out = out.copy(concurrency = 50)     // README.md:85
-    if (out.batchInsertSize < 1) out = out.copy(batchInsertSize = 1000)
-    if (out.batchInsertSize > 10000) out = out.copy(batchInsertSize = 10000)
-    if (out.maxRowsPerBatch < out.batchInsertSize)
-      out = out.copy(maxRowsPerBatch = out.batchInsertSize)
     out
   }
 }

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import scala.collection.mutable.ListBuffer
 
 /** Structured-Streaming incremental sync — the streaming extension the
   * batch-only reference lacks (SURVEY.md §1.1 note, §7). The `events` table
@@ -11,9 +12,19 @@ import java.sql.Timestamp
   * `readStream` (production) and on a static DataFrame (tests/backfill) —
   * that's the Spark contract this module leans on.
   *
-  * Scale design: both aggregations are keyed (windowed groupBy / user_id),
-  * so state is partitioned across executors; watermarks bound state size —
-  * without one, a 100 TB-scale stream would accumulate state forever.
+  * Stateless gates are narrow projections, and the windowed rollups are
+  * watermarked `groupBy(window)` aggregations. The keyed-state gates come
+  * in three shapes, each written once:
+  *  - `scopedFold`: a running fold per scope key (Update mode, no
+  *    timeout) — a key, a zero and a step;
+  *  - `gapSessions`: per-user gap sessions that close once the
+  *    watermark passes their last event + gap (Append mode, event-time
+  *    timeout) — a turn projection and an emit;
+  *  - `bufferedFold`: a per-user fold of everything below the watermark
+  *    plus a provisional tail (Update mode, event-time timeout).
+  * State is partitioned by key across executors, and watermarks bound the
+  * buffered part — without one, a 100 TB-scale stream would accumulate
+  * state forever.
   */
 object EventStream {
 
@@ -23,12 +34,140 @@ object EventStream {
   final case class SessionSummary(user_id: Long, n_events: Long,
       first_ts: Timestamp, last_ts: Timestamp, total_cents: Long)
 
-  // (event micros, event_id, cents): event_id completes the total order
-  // (same-microsecond ties would otherwise leave buffer order
-  // arrival-dependent) and cents keep the session sum order-independent
-  // exact integer math (Exact.cents' rule) — a List[Double].sum differs
-  // in the last bits between a run and its retry
-  final case class SessState(pending: List[(Long, Long, Long)])
+  /** Event time in MICROSECONDS (`getTime` ms + the sub-ms part of
+    * `getNanos`), the batch operators' precision: a millisecond compare
+    * merges or reorders pairs the batch forms keep apart. */
+  private def micros(t: Timestamp): Long =
+    t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
+
+  /** Cents under HALF_UP — Exact.cents' rule and Spark's `round` on a
+    * double (q312's `CAST(round(x * 100) AS BIGINT)`). `math.round` rounds
+    * negative half-cents toward +inf (-12.5 to -12, Spark gives -13) and
+    * would split a gate from its batch twin. */
+  private def cents(v: Double): Long =
+    java.math.BigDecimal.valueOf(v * 100.0)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+
+  /** The group's watermark in µs. Batch execution (no watermark tracking)
+    * reads +inf, so one call finalizes everything. */
+  private def watermarkUs(state: GroupState[_]): Long =
+    try {
+      val ms = state.getCurrentWatermarkMs()
+      if (ms <= 0L) 0L else ms * 1000L
+    } catch { case _: UnsupportedOperationException => Long.MaxValue }
+
+  /** The one running fold per scope key (Update mode, no timeout): each
+    * micro-batch, `step` gets the key, its stored state (or `zero`) and
+    * the batch's rows, and returns the state to store and the rows to
+    * emit. */
+  private def scopedFold[I, K: Encoder, S: Encoder, O: Encoder](
+      ds: Dataset[I])(key: I => K)(zero: S)(
+      step: (K, S, Iterator[I]) => (S, Iterator[O])): Dataset[O] =
+    ds.groupByKey(key).flatMapGroupsWithState[S, O](
+      OutputMode.Update, GroupStateTimeout.NoTimeout) {
+      (k: K, rows: Iterator[I], state: GroupState[S]) =>
+        val (s, out) = step(k, state.getOption.getOrElse(zero), rows)
+        state.update(s)
+        out
+    }
+
+  /** A user's buffered turns of still-open sessions, each (µs, event_id,
+    * the caller's payload), and the count of sessions already closed. */
+  final case class GapState[X](pending: List[(Long, Long, X)], closed: Long)
+
+  /** The one watermark-closed gap-session scan (Append mode, event-time
+    * timeout). Per user, the buffered turns plus the arrivals — each
+    * (µs, event_id, turn(e)); event_id completes the total order, so
+    * same-µs ties never depend on arrival — are sorted and split wherever
+    * two consecutive turns lie more than `gapMinutes` apart (a µs compare,
+    * the batch forms' precision).
+    *
+    * A session is FINAL once the watermark has passed its last turn + gap:
+    * any later in-watermark arrival has ts ≥ wm, so it can neither join
+    * nor split it (folding eagerly in arrival order rewinds boundaries).
+    * Each closed session goes to `emit` with its 1-based ordinal over the
+    * user's history; sessions close in watermark order, so a running
+    * counter reproduces the batch ordinal. Open sessions stay buffered
+    * with a wake-up at max(last) + gap + 1 ms — the +1 ms keeps the µs→ms
+    * truncation from landing the timeout AT the watermark (Spark requires
+    * strictly later ones). With nothing open, `keepOrdinal` keeps the
+    * counter on a real stream, so a later session does not restart at 1;
+    * otherwise, and in batch mode (one call finalizes everything), the
+    * state is dropped. State is bounded by one open gap window per user. */
+  private def gapSessions[X, O: Encoder](events: Dataset[Event],
+      gapMinutes: Int, keepOrdinal: Boolean)(turn: Event => X)(
+      emit: (Long, Long, Vector[(Long, Long, X)]) => Iterator[O])(
+      implicit stateEnc: Encoder[GapState[X]]): Dataset[O] = {
+    val gapUs = gapMinutes * 60L * 1000000L
+    events
+      .withWatermark("ts", "2 hours")
+      .groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState[GapState[X], O](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, rows: Iterator[Event], state: GroupState[GapState[X]]) =>
+          val wmUs = watermarkUs(state)
+          val st = state.getOption.getOrElse(GapState[X](Nil, 0L))
+          val all = (st.pending ++ rows.map(e => (micros(e.ts), e.event_id,
+            turn(e)))).sortBy(t => (t._1, t._2))
+          val sessions = ListBuffer.empty[Vector[(Long, Long, X)]]
+          var cur = Vector.empty[(Long, Long, X)]
+          all.foreach { p =>
+            if (cur.nonEmpty && p._1 - cur.last._1 > gapUs) {
+              sessions += cur; cur = Vector(p)
+            } else cur = cur :+ p
+          }
+          if (cur.nonEmpty) sessions += cur
+          val (closed, open) = sessions.partition(s => s.last._1 + gapUs <= wmUs)
+          val n = st.closed + closed.size
+          if (open.nonEmpty) {
+            state.update(GapState(open.flatten.toList, n))
+            state.setTimeoutTimestamp(open.map(_.last._1).max / 1000L +
+              gapMinutes * 60L * 1000L + 1L)
+          } else if (keepOrdinal && wmUs != Long.MaxValue && n > 0L)
+            state.update(GapState[X](Nil, n))
+          else state.remove()
+          closed.iterator.zipWithIndex.flatMap { case (s, i) =>
+            emit(user, st.closed + i + 1L, s)
+          }
+      }
+  }
+
+  /** A user's fold of every event below the watermark (`done`) plus the
+    * buffered (µs, …) events the watermark has not yet passed. */
+  final case class Buffered[S, A, B](done: S, pending: List[(Long, A, B)])
+
+  /** The one watermark-buffered fold with a provisional tail (Update mode,
+    * event-time timeout). Per user, the buffer plus the arrivals (`turn`
+    * projects an event to a (µs, …) triple; None drops it) are sorted and
+    * split at the watermark. Events strictly below it can never be
+    * preceded by a later valid arrival, so `step` folds them (`fin`) into
+    * `done` for good; the rest (`pend`, the == wm boundary included — an
+    * equal-timestamp event is still valid) stay buffered, and `step` may
+    * fold them provisionally into its output, which later batches refine.
+    * A user who goes silent still finalizes: a wake-up just past the
+    * newest buffered event calls back with no rows once the watermark
+    * passes it, so the buffer never stays pinned. Batch mode (wm = +inf)
+    * never buffers. */
+  private def bufferedFold[S, A: Ordering, B: Ordering, O: Encoder](
+      events: Dataset[Event])(zero: S)(turn: Event => Option[(Long, A, B)])(
+      step: (Long, S, List[(Long, A, B)], List[(Long, A, B)]) => (S, Iterator[O]))(
+      implicit stateEnc: Encoder[Buffered[S, A, B]]): Dataset[O] =
+    events
+      .withWatermark("ts", "2 hours")
+      .groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState[Buffered[S, A, B], O](
+        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, rows: Iterator[Event], state: GroupState[Buffered[S, A, B]]) =>
+          val wmUs = watermarkUs(state)
+          val st = state.getOption.getOrElse(Buffered[S, A, B](zero, Nil))
+          val (fin, pend) =
+            (st.pending ++ rows.flatMap(turn)).sorted.partition(_._1 < wmUs)
+          val (done, out) = step(user, st.done, fin, pend)
+          state.update(Buffered(done, pend))
+          if (pend.nonEmpty)
+            state.setTimeoutTimestamp(pend.map(_._1).max / 1000L + 1L)
+          out
+      }
 
   /** Tumbling 1-hour windowed counts per event type with a 2-hour
     * watermark. Works on both streaming and static frames. */
@@ -65,74 +204,25 @@ object EventStream {
         col("n_events"), col("open_cents"), col("high_cents"),
         col("low_cents"), col("close_cents"), col("volume_cents"))
 
-  /** Gap-based sessionization (30-minute inactivity) with
-    * flatMapGroupsWithState — custom keyed state, the Spark-native
-    * replacement for hand-rolled cursor loops over ordered scans.
-    *
-    * Watermark-aware buffering: events are held in state (bounded by the
-    * watermark horizon per user) and a session is emitted only once the
-    * watermark has passed its last event + gap — at that point no
-    * in-watermark arrival can extend it, split it, or slot into it, so an
-    * out-of-order-but-valid event can never rewind a session boundary
-    * (folding eagerly on arrival order does exactly that). Gap compares
-    * happen in MICROSECONDS, matching the batch form q54's precision —
-    * a millisecond compare merges pairs the batch form splits. */
+  /** Gap-based sessionization (30-minute inactivity), the Spark-native
+    * replacement for hand-rolled cursor loops over ordered scans: a
+    * `gapSessions` caller whose pending turn is the event's cents
+    * (three longs per buffered event) and whose session is emitted once
+    * the watermark has passed its last event + gap. Cents are summed as
+    * exact integers (a Double sum differs in the last bits between a run
+    * and its retry); no ordinal is kept. */
   def sessionize(events: Dataset[Event], gapMinutes: Int = 30): Dataset[SessionSummary] = {
     import events.sparkSession.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    def micros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     def tsOf(us: Long): Timestamp = {
       val t = new Timestamp(us / 1000L)
       t.setNanos(((us % 1000000L) * 1000L).toInt)
       t
     }
-
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, SessionSummary](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessState]) =>
-          // batch execution (no watermark tracking) finalizes everything
-          val wmUs =
-            try {
-              val ms = state.getCurrentWatermarkMs()
-              if (ms <= 0L) 0L else ms * 1000L
-            } catch { case _: UnsupportedOperationException => Long.MaxValue }
-          val prior = state.getOption.map(_.pending).getOrElse(Nil)
-          // HALF_UP like Exact.cents / Spark's round — math.round would
-          // round negative half-cents toward +inf (math.round(-0.5) == 0)
-          // and diverge from every batch operator's cents quantization
-          val incoming = rows.map(e => (micros(e.ts), e.event_id,
-            BigDecimal(e.value * 100)
-              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)).toList
-          val all = (prior ++ incoming).sortBy(t => (t._1, t._2))
-          // split the buffered span into gap-delimited sessions
-          val sessions = scala.collection.mutable.ListBuffer.empty[Vector[(Long, Long, Long)]]
-          var cur = Vector.empty[(Long, Long, Long)]
-          all.foreach { p =>
-            if (cur.nonEmpty && p._1 - cur.last._1 > gapUs) {
-              sessions += cur; cur = Vector(p)
-            } else cur = cur :+ p
-          }
-          if (cur.nonEmpty) sessions += cur
-          // FINAL iff the watermark passed last-event + gap: any future
-          // in-watermark arrival has ts >= wm, so it cannot join or split
-          val (closed, open) = sessions.partition(s => s.last._1 + gapUs <= wmUs)
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(SessState(open.flatten.toList))
-            // +1 ms: the µs→ms truncation must not land the timeout AT the
-            // watermark (Spark requires strictly-later timeouts)
-            state.setTimeoutTimestamp(open.map(_.last._1).max / 1000L +
-              gapMinutes * 60L * 1000L + 1L)
-          }
-          closed.iterator.map { s =>
-            SessionSummary(userId, s.size.toLong, tsOf(s.head._1),
-              tsOf(s.last._1), s.map(_._3).sum)
-          }
-      }
+    gapSessions(events, gapMinutes, keepOrdinal = false)(e => cents(e.value)) {
+      (user, _, s) =>
+        Iterator.single(SessionSummary(user, s.size.toLong, tsOf(s.head._1),
+          tsOf(s.last._1), s.map(_._3).sum))
+    }
   }
 
   /** Stream–static enrichment join: events stream × broadcast user dim —
@@ -287,38 +377,27 @@ object EventStream {
         col("click_ts"), col("err_ts"))
   }
 
-  final case class FunnelState(viewTs: Long, clickTs: Long, purchaseTs: Long,
-                               pending: List[(Long, Int, Long)]) // (us, rank, id)
-
   final case class FunnelUpdate(user_id: Long, stage: Int,
       view_ts: Long, click_ts: Long, purchase_ts: Long)
 
-  /** Streaming ordered funnel (view → click → purchase) with
-    * mapGroupsWithState — the streaming face of [[graft.ops.EventOps
-    * .q78Funnel]]: per user, a 3-slot stage machine that latches the first
-    * view, the first click at-or-after it, and the first purchase at-or-
-    * after that, emitting the user's current stage every micro-batch.
+  /** Streaming ordered funnel (view → click → purchase) — the streaming
+    * face of [[graft.ops.EventOps.q78Funnel]]: per user, a 3-slot stage
+    * machine that latches the first view, the first click at-or-after it,
+    * and the first purchase at-or-after that, emitting the user's current
+    * stage every micro-batch.
     *
-    * State per user: the FINALIZED stage fold (three longs) plus a buffer
-    * of events the watermark has not yet passed. Only events with
-    * ts strictly below the watermark fold into the persisted slots — an
-    * out-of-order-but-valid event (a view arriving after the click that
-    * follows it) still slots correctly because nothing at-or-after the
-    * watermark has been irrevocably consumed. The emitted update folds
-    * the buffer provisionally (Update-mode semantics: later batches
-    * refine it), so per-batch output stays incremental while the state
-    * converges to exactly the batch fold. Buffer size is bounded by the
-    * watermark horizon, not the stream.
-    *
-    * Timestamps are carried as MICROSECONDS (`getTime` ms + sub-ms from
-    * `getNanos`), matching the batch form's precision — comparing at ms
-    * would latch a click that is strictly (but sub-millisecond) earlier
-    * than its view, diverging from q78's `>=` on microseconds. */
+    * A `bufferedFold` caller: the FINALIZED stage fold (three longs)
+    * plus the (µs, rank, event_id) events the watermark has not yet
+    * passed. An out-of-order-but-valid event (a view arriving after the
+    * click that follows it) still slots correctly, because nothing
+    * at-or-after the watermark has been irrevocably consumed; the emitted
+    * update folds the buffer provisionally, so per-batch output stays
+    * incremental while the state converges to exactly the batch fold.
+    * Times compare in µs: at ms a click strictly (but sub-millisecond)
+    * earlier than its view would latch, diverging from q78's `>=`. */
   def funnel(events: Dataset[Event]): Dataset[FunnelUpdate] = {
     import events.sparkSession.implicits._
     val rank = Map("view" -> 0, "click" -> 1, "purchase" -> 2)
-    def micros(t: java.sql.Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     def fold(s0: (Long, Long, Long),
              evs: Seq[(Long, Int, Long)]): (Long, Long, Long) =
       evs.foldLeft(s0) { case ((v, c, p), (t, r, _)) =>
@@ -329,48 +408,16 @@ object EventStream {
           case _ => (v, c, p)
         }
       }
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[FunnelState, FunnelUpdate](
-        GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[FunnelState]) =>
-          // batch execution (no watermark tracking) finalizes everything
-          val wmUs =
-            try {
-              val ms = state.getCurrentWatermarkMs()
-              if (ms <= 0L) 0L else ms * 1000L
-            } catch { case _: UnsupportedOperationException => Long.MaxValue }
-          val st = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L, Nil))
-          val incoming = rows
-            .filter(e => rank.contains(e.event_type))
-            .map(e => (micros(e.ts), rank(e.event_type), e.event_id)).toList
-          val all = (st.pending ++ incoming)
-            .sortBy(t => (t._1, t._2, t._3))
-          // strictly-below-watermark events can never be joined by an
-          // earlier arrival — their fold is final; the boundary (== wm)
-          // stays buffered because an equal-timestamp event is still valid
-          val (fin, pend) = all.partition(_._1 < wmUs)
-          val (fv, fc, fp) = fold((st.viewTs, st.clickTs, st.purchaseTs), fin)
-          state.update(FunnelState(fv, fc, fp, pend))
-          // an idle user's buffer must still fold once the watermark
-          // passes it: with NoTimeout this function never runs again for
-          // a silent user and the pending list is retained forever. The
-          // timeout lands just past the newest buffered event; on firing
-          // (empty incoming, advanced watermark) the partition above
-          // finalizes the buffer and the state shrinks to the three
-          // lifetime slots. Batch mode never reaches here (wm = MaxValue
-          // -> pend is empty).
-          if (pend.nonEmpty)
-            state.setTimeoutTimestamp(pend.map(_._1).max / 1000L + 1L)
-          val (pv, pc, pp) = fold((fv, fc, fp), pend) // provisional output
-          FunnelUpdate(userId,
-            Seq(pv, pc, pp).count(_ >= 0), pv, pc, pp)
-      }
+    bufferedFold(events)((-1L, -1L, -1L))(
+      e => rank.get(e.event_type).map(r => (micros(e.ts), r, e.event_id))) {
+      (user, done, fin, pend) =>
+        val stages = fold(done, fin)
+        val (pv, pc, pp) = fold(stages, pend) // provisional output
+        (stages, Iterator.single(
+          FunnelUpdate(user, Seq(pv, pc, pp).count(_ >= 0), pv, pc, pp)))
+    }
   }
 
-  final case class AttribState(clickUs: Long, clickId: Long,
-      pending: List[(Long, Long, Int)]) // (micros, event_id, 0=click|1=purchase)
   final case class AttributionUpdate(purchase_id: Long, user_id: Long,
       click_id: Long, gap_minutes: Long, finalized: Boolean)
 
@@ -379,73 +426,41 @@ object EventStream {
     * prior click within the lookback, with the attribution emitted as the
     * purchase arrives rather than at end of day.
     *
-    * State per user: the last FINALIZED click (two longs) plus the
-    * watermark-buffered event tail (the funnel's buffering discipline —
-    * only events strictly below the watermark advance the persisted
-    * click slot, so an out-of-order click that precedes a buffered
-    * purchase still wins). Purchases below the watermark emit their FINAL
-    * attribution exactly once; buffered purchases emit provisional rows
-    * (`finalized = false`) that later batches refine — Update-mode
-    * semantics. State is two longs + a horizon-bounded buffer per user,
-    * regardless of stream length; in batch mode everything finalizes and
-    * the output matches q141 row for row. */
+    * A `bufferedFold` caller whose fold is the last FINALIZED click (µs,
+    * event_id) and whose events are (µs, event_id, 0=click|1=purchase),
+    * in q141's (µs, event_id) total order. Only events below the
+    * watermark advance the click slot, so an out-of-order click that
+    * precedes a buffered purchase still wins. Purchases below the
+    * watermark emit their FINAL attribution exactly once; buffered ones
+    * emit provisional rows (`finalized = false`) that later batches
+    * refine. State is two longs + a horizon-bounded buffer per user; in
+    * batch mode everything finalizes and the output matches q141 row for
+    * row. */
   def attributionFeed(events: Dataset[Event],
       lookbackDays: Int = 7): Dataset[AttributionUpdate] = {
     import events.sparkSession.implicits._
     val lookUs = lookbackDays * 86400L * 1000000L
-    def micros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttribState, AttributionUpdate](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[AttribState]) =>
-          val wmUs =
-            try {
-              val ms = state.getCurrentWatermarkMs()
-              if (ms <= 0L) 0L else ms * 1000L
-            } catch { case _: UnsupportedOperationException => Long.MaxValue }
-          val st = state.getOption.getOrElse(AttribState(-1L, -1L, Nil))
-          val incoming = rows.flatMap { e =>
-            e.event_type match {
-              case "click"    => Some((micros(e.ts), e.event_id, 0))
-              case "purchase" => Some((micros(e.ts), e.event_id, 1))
-              case _          => None
-            }
-          }.toList
-          // (us, event_id) is q141's total order — ties resolve identically
-          val all = (st.pending ++ incoming).sortBy(t => (t._1, t._2))
-          val (fin, pend) = all.partition(_._1 < wmUs)
-          val out = List.newBuilder[AttributionUpdate]
-          var cUs = st.clickUs; var cId = st.clickId
-          fin.foreach { case (us, id, r) =>
-            if (r == 1) {
+    val kind = Map("click" -> 0, "purchase" -> 1)
+    bufferedFold(events)((-1L, -1L))(
+      e => kind.get(e.event_type).map(k => (micros(e.ts), e.event_id, k))) {
+      (user, last, fin, pend) =>
+        val out = List.newBuilder[AttributionUpdate]
+        // credits each purchase to the click slot, which each click advances
+        def walk(click: (Long, Long), evs: List[(Long, Long, Int)],
+                 finalized: Boolean): (Long, Long) =
+          evs.foldLeft(click) { case ((cUs, cId), (us, id, k)) =>
+            if (k == 0) (us, id)
+            else {
               val hit = cUs >= 0 && us - cUs <= lookUs
-              out += AttributionUpdate(id, userId,
-                if (hit) cId else -1L,
-                if (hit) (us - cUs) / 60000000L else -1L, finalized = true)
-            } else { cUs = us; cId = id }
+              out += AttributionUpdate(id, user, if (hit) cId else -1L,
+                if (hit) (us - cUs) / 60000000L else -1L, finalized)
+              (cUs, cId)
+            }
           }
-          state.update(AttribState(cUs, cId, pend))
-          // funnel's rule: a buffered purchase of a user who goes silent
-          // must still emit its FINAL row once the watermark passes it —
-          // schedule a wake-up just past the newest buffered event
-          // (NoTimeout would leave the provisional row unrefined and the
-          // buffer pinned forever). Batch mode never buffers.
-          if (pend.nonEmpty)
-            state.setTimeoutTimestamp(pend.map(_._1).max / 1000L + 1L)
-          var pUs = cUs; var pId = cId
-          pend.foreach { case (us, id, r) =>
-            if (r == 1) {
-              val hit = pUs >= 0 && us - pUs <= lookUs
-              out += AttributionUpdate(id, userId,
-                if (hit) pId else -1L,
-                if (hit) (us - pUs) / 60000000L else -1L, finalized = false)
-            } else { pUs = us; pId = id }
-          }
-          out.result().iterator
-      }
+        val done = walk(last, fin, finalized = true)
+        walk(done, pend, finalized = false)
+        (done, out.result().iterator)
+    }
   }
 
   /** File-source incremental sync: watch a directory of parquet drops and
@@ -469,18 +484,6 @@ object EventStream {
       .start()
   }
 
-  /** Streaming domain-blocklist gate — the continuous form of the q159
-    * policy filter (X126). The blocklist is policy-sized and STATIC for
-    * the life of the query: collected once at query definition and
-    * compiled into a literal membership array, so the per-document check
-    * is a narrow `arrays_overlap` over the extracted URL authorities —
-    * no state, no stream-static shuffle, scan throughput at ingest.
-    * (Blocklist updates = restart with the new snapshot, the standard
-    * policy-rollout discipline; a stream-static join feeding a per-doc
-    * re-aggregation would instead hold every document to the watermark
-    * for no semantic gain.) Input schema as [[docQualityGate]]; every
-    * document is EMITTED with its domains and the verdict — routing
-    * (quarantine vs pass) belongs to the sink, auditability to the flag. */
   /** Streaming secret/credential gate — q246's detectors applied at
     * ingest (X213's continuous form): a leaked key caught here never
     * reaches the corpus. ONE detector definition
@@ -593,38 +596,30 @@ object EventStream {
   def latenessAudit(events: Dataset[Event],
       watermarkDelay: String = "2 hours"): Dataset[LatenessUpdate] = {
     import events.sparkSession.implicits._
-    def micros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState[LatenessState, LatenessUpdate](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (_, rows, state: GroupState[LatenessState]) =>
-          val st = state.getOption.getOrElse(LatenessState(Long.MinValue, Map.empty))
-          val ordered = rows.toSeq.sortBy(e =>
-            (e.event_id / 64L, Math.floorMod(e.user_id, 4L), e.event_id))
-          var frontier = st.frontier
-          var acc = st.byType
-          val touched = scala.collection.mutable.LinkedHashSet.empty[String]
-          ordered.foreach { e =>
-            val us = micros(e.ts)
-            val late =
-              if (frontier == Long.MinValue) 0L
-              else math.max(frontier - us, 0L)
-            val (n, nl, mx, sm) = acc.getOrElse(e.event_type, (0L, 0L, 0L, 0L))
-            acc = acc.updated(e.event_type,
-              (n + 1L, nl + (if (late > 0L) 1L else 0L),
-                math.max(mx, late), sm + late))
-            touched += e.event_type
-            if (us > frontier) frontier = us
-          }
-          state.update(LatenessState(frontier, acc))
-          touched.iterator.map { t =>
-            val (n, nl, mx, sm) = acc(t)
-            LatenessUpdate(t, n, nl, mx, sm, nl * 1000000L / n)
-          }
+    scopedFold(events.withWatermark("ts", watermarkDelay))(_ => 0)(
+      LatenessState(Long.MinValue, Map.empty)) { (_, st, rows) =>
+      val ordered = rows.toSeq.sortBy(e =>
+        (e.event_id / 64L, Math.floorMod(e.user_id, 4L), e.event_id))
+      var frontier = st.frontier
+      var acc = st.byType
+      val touched = scala.collection.mutable.LinkedHashSet.empty[String]
+      ordered.foreach { e =>
+        val us = micros(e.ts)
+        val late =
+          if (frontier == Long.MinValue) 0L
+          else math.max(frontier - us, 0L)
+        val (n, nl, mx, sm) = acc.getOrElse(e.event_type, (0L, 0L, 0L, 0L))
+        acc = acc.updated(e.event_type,
+          (n + 1L, nl + (if (late > 0L) 1L else 0L),
+            math.max(mx, late), sm + late))
+        touched += e.event_type
+        if (us > frontier) frontier = us
       }
+      (LatenessState(frontier, acc), touched.iterator.map { t =>
+        val (n, nl, mx, sm) = acc(t)
+        LatenessUpdate(t, n, nl, mx, sm, nl * 1000000L / n)
+      })
+    }
   }
 
   final case class EwmaState(pending: Map[Long, Long], s: Long, c: Long,
@@ -653,42 +648,33 @@ object EventStream {
   def ewmaFeed(events: Dataset[Event],
       watermarkDelay: String = "2 hours"): Dataset[EwmaUpdate] = {
     import events.sparkSession.implicits._
-    def micros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[EwmaState, EwmaUpdate](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (t, rows, state: GroupState[EwmaState]) =>
-          val st0 = state.getOption.getOrElse(
-            EwmaState(Map.empty, 0L, 0L, 0L, 0L, 0L, 0L))
-          var pending = st0.pending
-          var total = st0.total
-          rows.foreach { e =>
-            val d = micros(e.ts) / 86400000000L
-            pending = pending.updated(d, pending.getOrElse(d, 0L) + 1L)
-            total += 1L
-          }
-          // q258's fold step, shared by finalization and provisional view
-          def step(acc: (Long, Long, Long, Long, Long), cnt: Long) = {
-            val (s, c, eE, eN, seen) = acc
-            if (seen == 0L) (cnt * 1000L, cnt, 0L, 0L, 1L)
-            else ((300L * cnt * 1000L + 700L * s) / 1000L, cnt,
-              eE + math.abs(cnt * 1000L - s),
-              eN + math.abs(cnt - c) * 1000L, seen + 1L)
-          }
-          val frontier =
-            if (pending.isEmpty) Long.MinValue else pending.keys.max
-          val (fin, keep) = pending.partition(_._1 < frontier)
-          val folded = fin.toSeq.sortBy(_._1).map(_._2)
-            .foldLeft((st0.s, st0.c, st0.eE, st0.eN, st0.seen))(step)
-          state.update(EwmaState(keep, folded._1, folded._2, folded._3,
-            folded._4, folded._5, total))
-          val prov = keep.toSeq.sortBy(_._1).map(_._2).foldLeft(folded)(step)
-          Iterator.single(EwmaUpdate(t, prov._5, total, prov._3, prov._4,
-            if (prov._4 == 0L) -1L else prov._3 * 1000000L / prov._4))
+    scopedFold(events.withWatermark("ts", watermarkDelay))(_.event_type)(
+      EwmaState(Map.empty, 0L, 0L, 0L, 0L, 0L, 0L)) { (t, st0, rows) =>
+      var pending = st0.pending
+      var total = st0.total
+      rows.foreach { e =>
+        val d = micros(e.ts) / 86400000000L
+        pending = pending.updated(d, pending.getOrElse(d, 0L) + 1L)
+        total += 1L
       }
+      // q258's fold step, shared by finalization and provisional view
+      def step(acc: (Long, Long, Long, Long, Long), cnt: Long) = {
+        val (s, c, eE, eN, seen) = acc
+        if (seen == 0L) (cnt * 1000L, cnt, 0L, 0L, 1L)
+        else ((300L * cnt * 1000L + 700L * s) / 1000L, cnt,
+          eE + math.abs(cnt * 1000L - s),
+          eN + math.abs(cnt - c) * 1000L, seen + 1L)
+      }
+      val frontier =
+        if (pending.isEmpty) Long.MinValue else pending.keys.max
+      val (fin, keep) = pending.partition(_._1 < frontier)
+      val folded = fin.toSeq.sortBy(_._1).map(_._2)
+        .foldLeft((st0.s, st0.c, st0.eE, st0.eN, st0.seen))(step)
+      val prov = keep.toSeq.sortBy(_._1).map(_._2).foldLeft(folded)(step)
+      (EwmaState(keep, folded._1, folded._2, folded._3, folded._4, folded._5,
+        total), Iterator.single(EwmaUpdate(t, prov._5, total, prov._3,
+        prov._4, if (prov._4 == 0L) -1L else prov._3 * 1000000L / prov._4)))
+    }
   }
 
   final case class CusumUpdate(day: Long, idx: Long, x: Long,
@@ -716,36 +702,28 @@ object EventStream {
   def cusumGate(events: Dataset[Event],
       watermarkDelay: String = "2 hours"): Dataset[CusumUpdate] = {
     import events.sparkSession.implicits._
-    def micros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState[Map[Long, Long], CusumUpdate](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (_, rows, state: GroupState[Map[Long, Long]]) =>
-          var m = state.getOption.getOrElse(Map.empty[Long, Long])
-          rows.foreach { e =>
-            val d = micros(e.ts) / 86400000000L
-            m = m.updated(d, m.getOrElse(d, 0L) + 1L)
-          }
-          state.update(m)
-          val days = m.toSeq.sortBy(_._1)
-          if (days.size < 7) Iterator.empty
-          else {
-            val xs = days.zipWithIndex.map { case ((d, n), i) =>
-              (d, i + 1L, if (i + 1 >= 16) n + n / 4 else n)
-            }
-            val t0 = xs.take(7).map(_._3).sum
-            var sp = 0L; var sn = 0L
-            xs.iterator.map { case (d, idx, x) =>
-              sp = math.max(0L, sp + 7L * x - t0 - t0 / 10L)
-              sn = math.max(0L, sn - 7L * x + t0 - t0 / 10L)
-              CusumUpdate(d, idx, x, sp, sn,
-                if (sp > t0 / 2L || sn > t0 / 2L) 1L else 0L)
-            }
-          }
+    scopedFold(events.withWatermark("ts", watermarkDelay))(_ => 0)(
+      Map.empty[Long, Long]) { (_, m0, rows) =>
+      val m = rows.foldLeft(m0) { (m, e) =>
+        val d = micros(e.ts) / 86400000000L
+        m.updated(d, m.getOrElse(d, 0L) + 1L)
       }
+      val days = m.toSeq.sortBy(_._1)
+      (m, if (days.size < 7) Iterator.empty
+      else {
+        val xs = days.zipWithIndex.map { case ((d, n), i) =>
+          (d, i + 1L, if (i + 1 >= 16) n + n / 4 else n)
+        }
+        val t0 = xs.take(7).map(_._3).sum
+        var sp = 0L; var sn = 0L
+        xs.iterator.map { case (d, idx, x) =>
+          sp = math.max(0L, sp + 7L * x - t0 - t0 / 10L)
+          sn = math.max(0L, sn - 7L * x + t0 - t0 / 10L)
+          CusumUpdate(d, idx, x, sp, sn,
+            if (sp > t0 / 2L || sn > t0 / 2L) 1L else 0L)
+        }
+      })
+    }
   }
 
   final case class SprtTrial(scope: String, idx: Long, conv: Long)
@@ -779,25 +757,20 @@ object EventStream {
   def sprtGate(trials: Dataset[SprtTrial],
       batchSize: Long = 250L): Dataset[SprtStatus] = {
     import trials.sparkSession.implicits._
-    trials
-      .groupByKey(_.scope)
-      .flatMapGroupsWithState[Map[Long, (Long, Long)], SprtStatus](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (scope, rows, state: GroupState[Map[Long, (Long, Long)]]) =>
-          var m = state.getOption.getOrElse(Map.empty[Long, (Long, Long)])
-          rows.foreach { t =>
-            val b = t.idx / batchSize
-            val (n, k) = m.getOrElse(b, (0L, 0L))
-            m = m.updated(b, (n + 1L, k + t.conv))
-          }
-          state.update(m)
-          val bs = m.toSeq.sortBy(_._1).map { case (b, (n, k)) => (b, n, k) }
-          val (dec, bDec, nDec, llrDec, nT, kT) =
-            graft.ops.PipelineOps.sprtWalk(bs)
-          Iterator.single(SprtStatus(scope, nT, kT,
-            if (nT == 0L) 0L else kT * 1000000L / nT,
-            dec, bDec, nDec, llrDec, graft.ops.PipelineOps.SprtBound))
-      }
+    scopedFold(trials)(_.scope)(Map.empty[Long, (Long, Long)]) {
+      (scope, m0, rows) =>
+        val m = rows.foldLeft(m0) { (m, t) =>
+          val b = t.idx / batchSize
+          val (n, k) = m.getOrElse(b, (0L, 0L))
+          m.updated(b, (n + 1L, k + t.conv))
+        }
+        val bs = m.toSeq.sortBy(_._1).map { case (b, (n, k)) => (b, n, k) }
+        val (dec, bDec, nDec, llrDec, nT, kT) =
+          graft.ops.PipelineOps.sprtWalk(bs)
+        (m, Iterator.single(SprtStatus(scope, nT, kT,
+          if (nT == 0L) 0L else kT * 1000000L / nT,
+          dec, bDec, nDec, llrDec, graft.ops.PipelineOps.SprtBound)))
+    }
   }
 
   final case class F2Obs(scope: String, key: String)
@@ -832,36 +805,29 @@ object EventStream {
   def f2Feed(obs: Dataset[F2Obs]): Dataset[F2Row] = {
     import obs.sparkSession.implicits._
     val r = graft.ops.PipelineOps.AmsReps
-    obs
-      .groupByKey(_.scope)
-      .flatMapGroupsWithState[F2State, F2Row](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (scope, rows, state: GroupState[F2State]) =>
-          val st0 = state.getOption.getOrElse(F2State(0L, Seq.fill(r)(0L)))
-          var n = st0.n
-          val zs = st0.zs.toArray
-          rows.foreach { o =>
-            n += 1L
-            var i = 0
-            while (i < r) {
-              zs(i) += graft.ops.PipelineOps.amsSign("ams", i, o.key)
-              i += 1
-            }
+    scopedFold(obs)(_.scope)(F2State(0L, Seq.fill(r)(0L))) {
+      (scope, st0, rows) =>
+        var n = st0.n
+        val zs = st0.zs.toArray
+        rows.foreach { o =>
+          n += 1L
+          var i = 0
+          while (i < r) {
+            zs(i) += graft.ops.PipelineOps.amsSign("ams", i, o.key)
+            i += 1
           }
-          state.update(F2State(n, zs.toSeq))
-          val (mean, mom) = graft.ops.PipelineOps.amsMeanMom(zs.toSeq)
-          val est = (0 until r).map(i =>
-            F2Row(scope, i.toLong, zs(i), zs(i) * zs(i)))
-          (est ++ Seq(
-            F2Row(scope, 97L, n, 0L),
-            F2Row(scope, 98L, r.toLong, mean),
-            F2Row(scope, 99L, (r / 4).toLong, mom))).iterator
-      }
+        }
+        val (mean, mom) = graft.ops.PipelineOps.amsMeanMom(zs.toSeq)
+        val est = (0 until r).map(i =>
+          F2Row(scope, i.toLong, zs(i), zs(i) * zs(i)))
+        (F2State(n, zs.toSeq), (est ++ Seq(
+          F2Row(scope, 97L, n, 0L),
+          F2Row(scope, 98L, r.toLong, mean),
+          F2Row(scope, 99L, (r / 4).toLong, mom))).iterator)
+    }
   }
 
   final case class CbfOp(scope: String, op: String, key: Long)
-
-  final case class CbfState(counts: Map[Long, Long])
 
   final case class CbfRow(scope: String, key: Long, present: Long)
 
@@ -883,29 +849,24 @@ object EventStream {
     * positions); per arrival O(k) updates. */
   def cbfGate(ops: Dataset[CbfOp]): Dataset[CbfRow] = {
     import ops.sparkSession.implicits._
-    ops
-      .groupByKey(_.scope)
-      .flatMapGroupsWithState[CbfState, CbfRow](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (scope, rows, state: GroupState[CbfState]) =>
-          var counts = state.getOption.map(_.counts).getOrElse(Map.empty)
-          val out = scala.collection.mutable.ArrayBuffer.empty[CbfRow]
-          rows.foreach { o =>
-            val ps = graft.ops.PipelineOps.cbfPositions(o.key)
-            o.op match {
-              case "add" => ps.foreach(h =>
-                counts = counts.updated(h, counts.getOrElse(h, 0L) + 1L))
-              case "del" => ps.foreach { h =>
-                val v = counts.getOrElse(h, 0L) - 1L
-                counts = if (v <= 0L) counts - h else counts.updated(h, v)
-              }
-              case _ => out += CbfRow(scope, o.key,
-                if (ps.forall(h => counts.getOrElse(h, 0L) > 0L)) 1L else 0L)
-            }
+    scopedFold(ops)(_.scope)(Map.empty[Long, Long]) { (scope, counts0, rows) =>
+      var counts = counts0
+      val out = scala.collection.mutable.ArrayBuffer.empty[CbfRow]
+      rows.foreach { o =>
+        val ps = graft.ops.PipelineOps.cbfPositions(o.key)
+        o.op match {
+          case "add" => ps.foreach(h =>
+            counts = counts.updated(h, counts.getOrElse(h, 0L) + 1L))
+          case "del" => ps.foreach { h =>
+            val v = counts.getOrElse(h, 0L) - 1L
+            counts = if (v <= 0L) counts - h else counts.updated(h, v)
           }
-          state.update(CbfState(counts))
-          out.iterator
+          case _ => out += CbfRow(scope, o.key,
+            if (ps.forall(h => counts.getOrElse(h, 0L) > 0L)) 1L else 0L)
+        }
       }
+      (counts, out.iterator)
+    }
   }
 
   final case class SrmObs(scope: String, arm: Long, pAPpm: Long)
@@ -933,22 +894,16 @@ object EventStream {
     * experiments cost a thousand counter pairs. */
   def srmGate(obs: Dataset[SrmObs]): Dataset[SrmRow] = {
     import obs.sparkSession.implicits._
-    obs
-      .groupByKey(_.scope)
-      .flatMapGroupsWithState[SrmState, SrmRow](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (scope, rows, state: GroupState[SrmState]) =>
-          val st0 = state.getOption.getOrElse(SrmState(0L, 0L, 500000L))
-          var (na, nb, p) = (st0.nA, st0.nB, st0.pAPpm)
-          rows.foreach { o =>
-            if (o.arm == 0L) na += 1L else nb += 1L
-            p = o.pAPpm
-          }
-          state.update(SrmState(na, nb, p))
-          val x2 = graft.ops.PipelineOps.srmX2Milli(na, nb, p)
-          Iterator.single(SrmRow(scope, na, nb, x2,
-            if (x2 > 3841L) 1L else 0L))
+    scopedFold(obs)(_.scope)(SrmState(0L, 0L, 500000L)) { (scope, st0, rows) =>
+      var (na, nb, p) = (st0.nA, st0.nB, st0.pAPpm)
+      rows.foreach { o =>
+        if (o.arm == 0L) na += 1L else nb += 1L
+        p = o.pAPpm
       }
+      val x2 = graft.ops.PipelineOps.srmX2Milli(na, nb, p)
+      (SrmState(na, nb, p), Iterator.single(SrmRow(scope, na, nb, x2,
+        if (x2 > 3841L) 1L else 0L)))
+    }
   }
 
   final case class MgObs(scope: String, word: String)
@@ -982,27 +937,21 @@ object EventStream {
   def mgGate(obs: Dataset[MgObs],
              k: Int = graft.ops.CorpusOps.MgK): Dataset[MgRow] = {
     import obs.sparkSession.implicits._
-    obs
-      .groupByKey(_.scope)
-      .flatMapGroupsWithState[MgState, MgRow](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (scope, rows, state: GroupState[MgState]) =>
-          val st0 = state.getOption.getOrElse(MgState(Map.empty, 0L))
-          val agg = new graft.functions.MisraGries(k)
-          val buf = new graft.functions.MGBuffer(
-            scala.collection.mutable.HashMap(st0.counts.toSeq: _*),
-            scala.collection.mutable.HashMap.empty,
-            0L, st0.counts.size.toLong, st0.total)
-          st0.counts.values.foreach(v =>
-            buf.hist.update(v, buf.hist.getOrElse(v, 0L) + 1L))
-          rows.foreach(o => agg.reduce(buf, o.word))
-          val eff = buf.effective
-          state.update(MgState(eff, buf.total))
-          val slack = (buf.total - eff.values.sum) / (k + 1L)
-          eff.toSeq.sortBy(_._1).map { case (w, c) =>
-            MgRow(scope, w, c, buf.total, slack)
-          }.iterator
-      }
+    scopedFold(obs)(_.scope)(MgState(Map.empty, 0L)) { (scope, st0, rows) =>
+      val agg = new graft.functions.MisraGries(k)
+      val buf = new graft.functions.MGBuffer(
+        scala.collection.mutable.HashMap(st0.counts.toSeq: _*),
+        scala.collection.mutable.HashMap.empty,
+        0L, st0.counts.size.toLong, st0.total)
+      st0.counts.values.foreach(v =>
+        buf.hist.update(v, buf.hist.getOrElse(v, 0L) + 1L))
+      rows.foreach(o => agg.reduce(buf, o.word))
+      val eff = buf.effective
+      val slack = (buf.total - eff.values.sum) / (k + 1L)
+      (MgState(eff, buf.total), eff.toSeq.sortBy(_._1).map { case (w, c) =>
+        MgRow(scope, w, c, buf.total, slack)
+      }.iterator)
+    }
   }
 
   final case class IvmDelta(ck: Long, cents: Long, op: Long)
@@ -1029,30 +978,24 @@ object EventStream {
     * deliberately refuses; dirty groups are repair work, not state. */
   def retractGate(deltas: Dataset[IvmDelta]): Dataset[IvmRow] = {
     import deltas.sparkSession.implicits._
-    deltas
-      .groupByKey(_.ck)
-      .flatMapGroupsWithState[IvmState, IvmRow](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (ck, rows, state: GroupState[IvmState]) =>
-          var st = state.getOption.getOrElse(
-            IvmState(0L, 0L, Long.MaxValue, Long.MinValue, 0L))
-          rows.foreach { d =>
-            if (d.op >= 0L) {
-              st = IvmState(st.n + 1L, st.sm + d.cents,
-                math.min(st.mn, d.cents), math.max(st.mx, d.cents), st.dirty)
-            } else {
-              val dirty = if (st.n > 1L && (d.cents == st.mn || d.cents == st.mx))
-                1L else st.dirty
-              st = IvmState(st.n - 1L, st.sm - d.cents, st.mn, st.mx, dirty)
-            }
-            if (st.n == 0L)
-              st = IvmState(0L, 0L, Long.MaxValue, Long.MinValue, 0L)
+    val empty = IvmState(0L, 0L, Long.MaxValue, Long.MinValue, 0L)
+    scopedFold(deltas)(_.ck)(empty) { (ck, st0, rows) =>
+      val st = rows.foldLeft(st0) { (st, d) =>
+        val next =
+          if (d.op >= 0L)
+            IvmState(st.n + 1L, st.sm + d.cents,
+              math.min(st.mn, d.cents), math.max(st.mx, d.cents), st.dirty)
+          else {
+            val dirty = if (st.n > 1L && (d.cents == st.mn || d.cents == st.mx))
+              1L else st.dirty
+            IvmState(st.n - 1L, st.sm - d.cents, st.mn, st.mx, dirty)
           }
-          state.update(st)
-          Iterator.single(IvmRow(ck, st.n, st.sm,
-            if (st.n == 0L) 0L else st.mn,
-            if (st.n == 0L) 0L else st.mx, st.dirty))
+        if (next.n == 0L) empty else next
       }
+      (st, Iterator.single(IvmRow(ck, st.n, st.sm,
+        if (st.n == 0L) 0L else st.mn,
+        if (st.n == 0L) 0L else st.mx, st.dirty)))
+    }
   }
 
   final case class UrlState(minDocId: Long, nDocs: Long, raw: Set[String])
@@ -1076,25 +1019,21 @@ object EventStream {
     * global consistency point; per-key state is variants-bounded. */
   def urlDedupGate(docs: DataFrame): Dataset[UrlUpdate] = {
     import docs.sparkSession.implicits._
-    graft.ops.TextOps.withCanonicalUrl(
+    val urls = graft.ops.TextOps.withCanonicalUrl(
       docs.withColumn("t2", coalesce(col("text"), lit(""))))
       .select(col("canonical_url"), col("doc_id"), col("u"))
       .as[(String, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[UrlState, UrlUpdate](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key, rows, state: GroupState[UrlState]) =>
-          val st0 = state.getOption.getOrElse(
-            UrlState(Long.MaxValue, 0L, Set.empty))
-          var (minId, n, raw) = (st0.minDocId, st0.nDocs, st0.raw)
-          rows.foreach { case (_, id, u) =>
-            minId = math.min(minId, id)
-            n += 1L
-            if (raw.size < 1024) raw += u
-          }
-          state.update(UrlState(minId, n, raw))
-          Iterator.single(UrlUpdate(key, minId, n, raw.size.toLong))
-      }
+    scopedFold(urls)(_._1)(UrlState(Long.MaxValue, 0L, Set.empty)) {
+      (key, st0, rows) =>
+        var (minId, n, raw) = (st0.minDocId, st0.nDocs, st0.raw)
+        rows.foreach { case (_, id, u) =>
+          minId = math.min(minId, id)
+          n += 1L
+          if (raw.size < 1024) raw += u
+        }
+        (UrlState(minId, n, raw),
+          Iterator.single(UrlUpdate(key, minId, n, raw.size.toLong)))
+    }
   }
 
   final case class ChatConv(user_id: Long, conv_idx: Long, n_turns: Long,
@@ -1103,30 +1042,29 @@ object EventStream {
       n_empty_turns: Long, n_pii_turns: Long, n_secret_turns: Long,
       contract_ok: Long, transcript_fp: Long)
 
-  // (us, event_id, event_type, props) pending turns + conversations
-  // already closed for this user (the batch conv_idx is the ordinal over
-  // the user's full history; sessions close in watermark order, so a
-  // running counter reproduces it)
-  final case class ChatState(pending: List[(Long, Long, String, String)],
-      closed: Long)
+  /** Chat role of an event: purchases are assistant turns, errors system
+    * turns, everything else user turns (q311/q327's role map). */
+  private def role(eventType: String): String =
+    if (eventType == "purchase") "assistant"
+    else if (eventType == "error") "system" else "user"
 
-  /** X285 — streaming chat-contract gate: q311's real-stream twin. Turns
-    * buffer per user exactly like [[sessionize]] (same 30-minute gap,
-    * same watermark-finalization rule: a conversation closes when the
-    * watermark passes its last turn + gap), and each CLOSED conversation
-    * emits the IDENTICAL audit row as the oracle-gated batch operator —
-    * same role map, same shared [[graft.ops.PiiPatterns]]/
-    * [[graft.ops.SecretPatterns]] detectors, same transcript fingerprint
-    * over the ordered role-tagged turns (StreamingSpec pins the finalize
-    * output row-identical to the q311 frame). State is watermark-bounded:
-    * pending turns of at most one open conversation window per user plus
-    * one counter. */
+  private def matches(pats: Seq[java.util.regex.Pattern], s: String): Boolean =
+    pats.exists(_.matcher(s).find())
+
+  /** X285 — streaming chat-contract gate: q311's real-stream twin. A
+    * `gapSessions` caller with [[sessionize]]'s 30-minute gap whose
+    * pending turn is (event_type, props) and which keeps the conversation
+    * ordinal across empty state (the batch conv_idx counts the user's full
+    * history). Each CLOSED conversation emits the IDENTICAL audit row as
+    * the oracle-gated batch operator — same role map, same shared
+    * [[graft.ops.PiiPatterns]]/[[graft.ops.SecretPatterns]] detectors, same
+    * transcript fingerprint over the ordered role-tagged turns
+    * (StreamingSpec pins the finalize output row-identical to the q311
+    * frame). State is watermark-bounded: the pending turns of at most one
+    * open conversation window per user plus one counter. */
   def chatContractGate(events: Dataset[Event], gapMinutes: Int = 30)
       : Dataset[ChatConv] = {
     import events.sparkSession.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    def micros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     // compiled once on the driver, shipped serialized (java Pattern is
     // Serializable) — q254's lesson: never acquire per row what a
     // prologue can own
@@ -1135,74 +1073,30 @@ object EventStream {
     val secretPat = Seq(graft.ops.SecretPatterns.HexRun,
       graft.ops.SecretPatterns.AwsKeyId, graft.ops.SecretPatterns.CredAssign)
       .map(java.util.regex.Pattern.compile)
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ChatState, ChatConv](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[ChatState]) =>
-          val wmUs =
-            try {
-              val ms = state.getCurrentWatermarkMs()
-              if (ms <= 0L) 0L else ms * 1000L
-            } catch { case _: UnsupportedOperationException => Long.MaxValue }
-          val st0 = state.getOption.getOrElse(ChatState(Nil, 0L))
-          val incoming = rows.map(e => (micros(e.ts), e.event_id,
-            e.event_type, Option(e.props).getOrElse(""))).toList
-          val all = (st0.pending ++ incoming).sortBy(t => (t._1, t._2))
-          val convs = scala.collection.mutable.ListBuffer
-            .empty[Vector[(Long, Long, String, String)]]
-          var cur = Vector.empty[(Long, Long, String, String)]
-          all.foreach { p =>
-            if (cur.nonEmpty && p._1 - cur.last._1 > gapUs) {
-              convs += cur; cur = Vector(p)
-            } else cur = cur :+ p
-          }
-          if (cur.nonEmpty) convs += cur
-          val (closed, open) = convs.partition(c => c.last._1 + gapUs <= wmUs)
-          if (open.isEmpty) {
-            // keep the ordinal counter alive on a real stream (a later
-            // conversation must not restart at conv_idx 1); the batch
-            // path (wm = +inf) finalizes everything in one invocation
-            // and can drop state entirely
-            if (wmUs != Long.MaxValue && st0.closed + closed.size > 0L)
-              state.update(ChatState(Nil, st0.closed + closed.size))
-            else state.remove()
-          } else {
-            state.update(ChatState(open.flatten.toList,
-              st0.closed + closed.size))
-            state.setTimeoutTimestamp(open.map(_.last._1).max / 1000L +
-              gapMinutes * 60L * 1000L + 1L)
-          }
-          def role(et: String): String =
-            if (et == "purchase") "assistant"
-            else if (et == "error") "system" else "user"
-          def find(pats: Seq[java.util.regex.Pattern], s: String): Boolean =
-            pats.exists(_.matcher(s).find())
-          closed.iterator.zipWithIndex.map { case (c, i) =>
-            val roles = c.map(t => role(t._3))
-            val texts = c.map(_._4)
-            val samePairs = roles.sliding(2).count {
-              case Seq(a, b) => a == b
-              case _ => false
-            }.toLong
-            val opener = if (roles.head == "assistant") 1L else 0L
-            val tail = if (roles.last == "user") 1L else 0L
-            val empty = texts.count(_.trim.isEmpty).toLong
-            val pii = texts.count(find(piiPat, _)).toLong
-            val secret = texts.count(find(secretPat, _)).toLong
-            val fp = graft.functions.Fingerprint.hashString(
-              roles.zip(texts).map { case (r, t) => s"$r:$t" }.mkString("\n"))
-            ChatConv(userId, st0.closed + i + 1L, c.size.toLong,
-              roles.count(_ == "user").toLong,
-              roles.count(_ == "assistant").toLong,
-              roles.count(_ == "system").toLong,
-              samePairs, opener, tail, empty, pii, secret,
-              if (samePairs + opener + tail + empty + pii + secret == 0L) 1L
-              else 0L,
-              fp)
-          }
-      }
+    gapSessions(events, gapMinutes, keepOrdinal = true)(
+      e => (e.event_type, Option(e.props).getOrElse(""))) { (user, idx, c) =>
+      val roles = c.map(t => role(t._3._1))
+      val texts = c.map(_._3._2)
+      val samePairs = roles.sliding(2).count {
+        case Seq(a, b) => a == b
+        case _ => false
+      }.toLong
+      val opener = if (roles.head == "assistant") 1L else 0L
+      val tail = if (roles.last == "user") 1L else 0L
+      val empty = texts.count(_.trim.isEmpty).toLong
+      val pii = texts.count(matches(piiPat, _)).toLong
+      val secret = texts.count(matches(secretPat, _)).toLong
+      val fp = graft.functions.Fingerprint.hashString(
+        roles.zip(texts).map { case (r, t) => s"$r:$t" }.mkString("\n"))
+      Iterator.single(ChatConv(user, idx, c.size.toLong,
+        roles.count(_ == "user").toLong,
+        roles.count(_ == "assistant").toLong,
+        roles.count(_ == "system").toLong,
+        samePairs, opener, tail, empty, pii, secret,
+        if (samePairs + opener + tail + empty + pii + secret == 0L) 1L
+        else 0L,
+        fp))
+    }
   }
 
   final case class PrefPair(user_id: Long, conv_idx: Long, prompt_fp: Long,
@@ -1210,29 +1104,22 @@ object EventStream {
       chosen_cents: Long, rejected_cents: Long, margin_cents: Long,
       pii_prompt: Long)
 
-  // pending turns carry (us, event_id, event_type, value, props); the
-  // ordinal counter covers EVERY closed conversation (qualifying or
-  // not) so conv_idx matches the batch ordinal over the full history
-  final case class PrefState(
-      pending: List[(Long, Long, String, Double, String)], closed: Long)
-
-  /** X312 — streaming preference-pair gate: q327's real-stream twin.
-    * Conversations buffer per user exactly like [[chatContractGate]]
-    * (same 30-minute gap, same watermark-finalization rule, same
-    * running conversation ordinal that survives the state going
-    * pending-empty between conversations), and each CLOSED conversation
-    * runs the IDENTICAL q327 selection contract — first turn must be a
-    * non-empty user prompt, ≥ 2 assistant candidates, candidates sorted
-    * by (cents, event_id, fp) with chosen = last / rejected = first,
-    * UNIQUE argmax and argmin, strictly positive margin, distinct
-    * chosen/rejected fingerprints, PII-flagged (not dropped) prompt via
-    * the shared [[graft.ops.PiiPatterns]]. Cents replicate the batch
-    * `CAST(round(value·100) AS BIGINT)` through the same
-    * BigDecimal.HALF_UP rounding Spark's Round applies to doubles.
-    * NON-qualifying conversations still advance the ordinal — they emit
-    * nothing, exactly like the batch filter. StreamingSpec pins the
-    * finalize output row-identical to the oracle-gated q327 frame and
-    * the ordinal across a closed-then-reopened state.
+  /** X312 — streaming preference-pair gate: q327's real-stream twin. A
+    * `gapSessions` caller exactly like [[chatContractGate]] (same gap,
+    * same finalization rule, same running ordinal over EVERY closed
+    * conversation, qualifying or not) whose pending turn is (event_type,
+    * value, props). Each CLOSED conversation runs the IDENTICAL q327
+    * selection contract — first turn must be a non-empty user prompt,
+    * ≥ 2 assistant candidates, candidates sorted by (cents, event_id, fp)
+    * with chosen = last / rejected = first, UNIQUE argmax and argmin,
+    * strictly positive margin, distinct chosen/rejected fingerprints,
+    * PII-flagged (not dropped) prompt via the shared
+    * [[graft.ops.PiiPatterns]]. Cents replicate the batch
+    * `CAST(round(value·100) AS BIGINT)` via [[cents]]. NON-qualifying
+    * conversations still advance the ordinal — they emit nothing, exactly
+    * like the batch filter. StreamingSpec pins the finalize output
+    * row-identical to the oracle-gated q327 frame and the ordinal across a
+    * closed-then-reopened state.
     *
     * Scale: state partitions by user across executors; pending turns
     * are bounded by one open conversation window per user (the
@@ -1241,82 +1128,32 @@ object EventStream {
   def prefPairGate(events: Dataset[Event], gapMinutes: Int = 30)
       : Dataset[PrefPair] = {
     import events.sparkSession.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    def micros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     val piiPat = Seq(graft.ops.PiiPatterns.Email, graft.ops.PiiPatterns.Ipv4,
       graft.ops.PiiPatterns.LongNumber).map(java.util.regex.Pattern.compile)
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[PrefState, PrefPair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[PrefState]) =>
-          val wmUs =
-            try {
-              val ms = state.getCurrentWatermarkMs()
-              if (ms <= 0L) 0L else ms * 1000L
-            } catch { case _: UnsupportedOperationException => Long.MaxValue }
-          val st0 = state.getOption.getOrElse(PrefState(Nil, 0L))
-          val incoming = rows.map(e => (micros(e.ts), e.event_id,
-            e.event_type, e.value, Option(e.props).getOrElse(""))).toList
-          val all = (st0.pending ++ incoming).sortBy(t => (t._1, t._2))
-          val convs = scala.collection.mutable.ListBuffer
-            .empty[Vector[(Long, Long, String, Double, String)]]
-          var cur = Vector.empty[(Long, Long, String, Double, String)]
-          all.foreach { p =>
-            if (cur.nonEmpty && p._1 - cur.last._1 > gapUs) {
-              convs += cur; cur = Vector(p)
-            } else cur = cur :+ p
-          }
-          if (cur.nonEmpty) convs += cur
-          val (closed, open) = convs.partition(c => c.last._1 + gapUs <= wmUs)
-          if (open.isEmpty) {
-            // ordinal persistence across pending-empty state — the
-            // chatContractGate discipline (batch wm = +inf drops state)
-            if (wmUs != Long.MaxValue && st0.closed + closed.size > 0L)
-              state.update(PrefState(Nil, st0.closed + closed.size))
-            else state.remove()
-          } else {
-            state.update(PrefState(open.flatten.toList,
-              st0.closed + closed.size))
-            state.setTimeoutTimestamp(open.map(_.last._1).max / 1000L +
-              gapMinutes * 60L * 1000L + 1L)
-          }
-          def cents(v: Double): Long =
-            java.math.BigDecimal.valueOf(v * 100.0)
-              .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-          def find(pats: Seq[java.util.regex.Pattern], s: String): Boolean =
-            pats.exists(_.matcher(s).find())
-          closed.iterator.zipWithIndex.flatMap { case (c, i) =>
-            val convIdx = st0.closed + i + 1L
-            val first = c.head
-            val firstRole =
-              if (first._3 == "purchase") "assistant"
-              else if (first._3 == "error") "system" else "user"
-            // (cents, event_id, fp) — the batch array_sort order
-            val cands = c.filter(t =>
-              (if (t._3 == "purchase") "assistant"
-               else if (t._3 == "error") "system" else "user") == "assistant")
-              .map(t => (cents(t._4), t._2,
-                graft.functions.Fingerprint.hashString(t._5)))
-              .sortBy(identity)
-            if (firstRole != "user" || first._5.trim.isEmpty ||
-              cands.size < 2) Iterator.empty
-            else {
-              val ch = cands.last; val rj = cands.head
-              val nmax = cands.count(_._1 == ch._1)
-              val nmin = cands.count(_._1 == rj._1)
-              if (ch._1 > rj._1 && nmax == 1 && nmin == 1 && ch._3 != rj._3)
-                Iterator.single(PrefPair(userId, convIdx,
-                  graft.functions.Fingerprint.hashString(first._5),
-                  cands.size.toLong, ch._2, rj._2, ch._1, rj._1,
-                  ch._1 - rj._1,
-                  if (find(piiPat, first._5)) 1L else 0L))
-              else Iterator.empty
-            }
-          }
-      }
+    gapSessions(events, gapMinutes, keepOrdinal = true)(
+      e => (e.event_type, e.value, Option(e.props).getOrElse(""))) {
+      (user, idx, c) =>
+        val (firstType, _, prompt) = c.head._3
+        // (cents, event_id, fp) — the batch array_sort order
+        val cands = c.filter(t => role(t._3._1) == "assistant")
+          .map(t => (cents(t._3._2), t._2,
+            graft.functions.Fingerprint.hashString(t._3._3)))
+          .sortBy(identity)
+        if (role(firstType) != "user" || prompt.trim.isEmpty ||
+          cands.size < 2) Iterator.empty
+        else {
+          val ch = cands.last; val rj = cands.head
+          val nmax = cands.count(_._1 == ch._1)
+          val nmin = cands.count(_._1 == rj._1)
+          if (ch._1 > rj._1 && nmax == 1 && nmin == 1 && ch._3 != rj._3)
+            Iterator.single(PrefPair(user, idx,
+              graft.functions.Fingerprint.hashString(prompt),
+              cands.size.toLong, ch._2, rj._2, ch._1, rj._1,
+              ch._1 - rj._1,
+              if (matches(piiPat, prompt)) 1L else 0L))
+          else Iterator.empty
+        }
+    }
   }
 
   final case class MaskDoc(doc_id: Long, ts: Timestamp, source: String,
@@ -1367,12 +1204,10 @@ object EventStream {
         case _ =>
       }
       val ls = sb.toString.split("\n", -1)
-      def hit(ps: Seq[java.util.regex.Pattern], s: String) =
-        ps.exists(_.matcher(s).find())
       val bset = boilerMap.getOrElse(d.source, Set.empty)
-      val pii = ls.map(hit(piiPat, _))
-      val secF = ls.map(hit(secretPat, _))
-      val spc = ls.map(hit(specialPat, _))
+      val pii = ls.map(matches(piiPat, _))
+      val secF = ls.map(matches(secretPat, _))
+      val spc = ls.map(matches(specialPat, _))
       val boi = ls.map(bset.contains)
       val masked = ls.indices.map(i => pii(i) || secF(i) || spc(i) || boi(i))
       // Codepoint lengths (not UTF-16 code units): batch q313 and the
@@ -1438,52 +1273,56 @@ object EventStream {
   def kllGate(events: Dataset[Event], shards: Int = 8, cap: Int = 32,
       watermarkDelay: String = "2 hours"): Dataset[KllUpdate] = {
     import events.sparkSession.implicits._
-    def micros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(e => java.lang.Math.floorMod(e.event_id, shards.toLong))
-      .flatMapGroupsWithState[KllShardState, KllUpdate](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (shard, rows, state: GroupState[KllShardState]) =>
-          val st0 = state.getOption.getOrElse(
-            KllShardState(Seq(KllLevel(Seq.empty)), 0L, 0L))
-          var levels = st0.levels.map(_.items.toVector).toVector
-          var bound = st0.bound
-          var n = st0.nItems
-          rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val cents = math.round(e.value * 100).toLong
-            levels = levels.updated(0, levels(0) :+ ((cents, e.event_id)))
-            n += 1
-            var l = 0
-            while (levels(l).size >= cap) {
-              val promoted = levels(l).sortBy(identity)
-                .zipWithIndex.collect { case (x, i) if i % 2 == 0 => x }
-              if (levels.size == l + 1) levels = levels :+ Vector.empty
-              levels = levels.updated(l, Vector.empty)
-                .updated(l + 1, levels(l + 1) ++ promoted)
-              bound += 1L << l
-              l += 1
-            }
-          }
-          state.update(KllShardState(levels.map(v => KllLevel(v)), n, bound))
-          if (n == 0L) Iterator.empty
-          else {
-            var cw = 0L
-            val cum = levels.zipWithIndex
-              .flatMap { case (buf, l) =>
-                buf.map { case (c, id) => (c, id, 1L << l) } }
-              .sortBy(x => (x._1, x._2))
-              .map { case (c, id, w) => cw += w; (c, id, cw) }
-            (1 to 9).iterator.map { d =>
-              val t = math.min(d.toLong * n / 10L + 1L, n)
-              val (c, id, _) = cum(cum.indexWhere(_._3 >= t))
-              KllUpdate(shard, d.toLong, t, c, id, n, bound)
-            }
-          }
+    scopedFold(events.withWatermark("ts", watermarkDelay))(
+      e => java.lang.Math.floorMod(e.event_id, shards.toLong))(
+      KllShardState(Seq(KllLevel(Seq.empty)), 0L, 0L)) { (shard, st0, rows) =>
+      var levels = st0.levels.map(_.items.toVector).toVector
+      var bound = st0.bound
+      var n = st0.nItems
+      rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
+        levels = levels.updated(0, levels(0) :+ ((cents(e.value), e.event_id)))
+        n += 1
+        var l = 0
+        while (levels(l).size >= cap) {
+          val promoted = levels(l).sortBy(identity)
+            .zipWithIndex.collect { case (x, i) if i % 2 == 0 => x }
+          if (levels.size == l + 1) levels = levels :+ Vector.empty
+          levels = levels.updated(l, Vector.empty)
+            .updated(l + 1, levels(l + 1) ++ promoted)
+          bound += 1L << l
+          l += 1
+        }
       }
+      (KllShardState(levels.map(v => KllLevel(v)), n, bound),
+        if (n == 0L) Iterator.empty
+        else {
+          var cw = 0L
+          val cum = levels.zipWithIndex
+            .flatMap { case (buf, l) =>
+              buf.map { case (c, id) => (c, id, 1L << l) } }
+            .sortBy(x => (x._1, x._2))
+            .map { case (c, id, w) => cw += w; (c, id, cw) }
+          (1 to 9).iterator.map { d =>
+            val t = math.min(d.toLong * n / 10L + 1L, n)
+            val (c, id, _) = cum(cum.indexWhere(_._3 >= t))
+            KllUpdate(shard, d.toLong, t, c, id, n, bound)
+          }
+        })
+    }
   }
 
+  /** Streaming domain-blocklist gate — the continuous form of the q159
+    * policy filter (X126). The blocklist is policy-sized and STATIC for
+    * the life of the query: collected once at query definition and
+    * compiled into a literal membership array, so the per-document check
+    * is a narrow `arrays_overlap` over the extracted URL authorities —
+    * no state, no stream-static shuffle, scan throughput at ingest.
+    * (Blocklist updates = restart with the new snapshot, the standard
+    * policy-rollout discipline; a stream-static join feeding a per-doc
+    * re-aggregation would instead hold every document to the watermark
+    * for no semantic gain.) Input schema as [[docQualityGate]]; every
+    * document is EMITTED with its domains and the verdict — routing
+    * (quarantine vs pass) belongs to the sink, auditability to the flag. */
   def blocklistGate(docs: DataFrame, blocklist: DataFrame): DataFrame = {
     val blocked: Array[String] = blocklist
       .select(col("domain").cast("string")).collect().map(_.getString(0))
@@ -1519,9 +1358,8 @@ object EventStream {
   def bootstrapGate(orders: Dataset[Order]): Dataset[BootUpdate] = {
     import orders.sparkSession.implicits._
     val reps = graft.ops.PipelineOps.BootReps
-    orders.flatMap { o =>
-      val x = java.math.BigDecimal.valueOf(o.o_totalprice * 100.0)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+    val weighted = orders.flatMap { o =>
+      val x = cents(o.o_totalprice)
       val k = o.o_orderkey
       (0 until reps).iterator.map { rep =>
         val h = graft.functions.Fingerprint.hashString(
@@ -1533,16 +1371,10 @@ object EventStream {
         (rep.toLong, w, w * x)
       }
     }
-      .groupByKey(_._1)
-      .mapGroupsWithState[BootState, BootUpdate](GroupStateTimeout.NoTimeout) {
-        (rep: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[BootState]) =>
-          var st = state.getOption.getOrElse(BootState(0L, 0L))
-          rows.foreach { r =>
-            st = BootState(st.wCount + r._2, st.wSumCents + r._3)
-          }
-          state.update(st)
-          BootUpdate(rep, st.wCount, st.wSumCents)
-      }
+    scopedFold(weighted)(_._1)(BootState(0L, 0L)) { (rep, st0, rows) =>
+      val st = rows.foldLeft(st0)((st, r) =>
+        BootState(st.wCount + r._2, st.wSumCents + r._3))
+      (st, Iterator.single(BootUpdate(rep, st.wCount, st.wSumCents)))
+    }
   }
 }

@@ -46,8 +46,7 @@ import java.sql.{Connection, PreparedStatement}
   * Scale notes: connections scale with partitions, not rows; nothing is
   * buffered beyond one batch. Partition count should be pre-sized via
   * [[graft.catalog.Catalog.suggestNumPartitions]] so each transaction stays
-  * within WAL/undo comfort (the per-batch-transaction bound the reference
-  * gets from max_rows_per_batch).
+  * within WAL/undo comfort (the reference's per-batch-transaction bound).
   */
 object BatchSink {
 

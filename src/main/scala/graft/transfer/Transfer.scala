@@ -159,20 +159,18 @@ object Transfer {
 
   // ---------------------------------------------------------- validation
 
-  /** Order-independent checksum: xor-aggregate of xxhash64 over all columns.
-    * Strictly stronger than the reference's row-count compare (P3) at the
-    * same cost class (one scan each side, map-side combinable). KNOWN
+  /** (row count, xor-xxhash64 checksum) of `df` in ONE job with no
+    * shuffle: [[BatchSink.stats]] folds each task's `InternalRow`s in one
+    * loop (the fold the JDBC write runs) and the driver merges one pair per
+    * task — no aggregate stage, no sink, no generated hash code.
+    *
+    * The checksum is order-independent and strictly stronger than the
+    * reference's row-count compare (P3) at the same cost class. KNOWN
     * LIMIT: xor is blind to EVEN-multiplicity drift — a row lost twice
     * while another is duplicated twice cancels out of both the count and
     * the xor (relevant only for PK-less tables with duplicated rows; a
     * wrapping SUM of hashes would catch it but overflows under ANSI
     * arithmetic, so the trade is documented rather than swapped). */
-  def checksum(df: DataFrame): Long = stats(df)._2
-
-  /** (row count, xor-xxhash64 checksum) of `df` in ONE job with no
-    * shuffle: [[BatchSink.stats]] folds each task's `InternalRow`s in one
-    * loop (the fold the JDBC write runs) and the driver merges one pair per
-    * task — no aggregate stage, no sink, no generated hash code. */
   def stats(df: DataFrame): (Long, Long) = BatchSink.stats(df)
 
   /** Write `df` to `dst`; (count, checksum) of exactly the rows written:
@@ -393,7 +391,7 @@ object Transfer {
     }
     // Re-size write parallelism from row count × estimated row width.
     // For JDBC this bounds per-partition transaction size (the scalable
-    // version of the reference's max_rows_per_batch pagination bound);
+    // version of the reference's per-batch pagination bound);
     // for file targets it decouples writer parallelism from the source's
     // split count (a single-row-group source file would otherwise funnel
     // the whole encode+write through one task). Only ever scales UP —

@@ -153,7 +153,6 @@ class CatalogConfigSpec extends AnyFunSuite {
     assert(cfg.sourceUrl == "jdbc:derby:memory:src")
     assert(cfg.targetUrl == "jdbc:derby:memory:dst")
     assert(cfg.concurrency == 50)            // clamped (README.md:85)
-    assert(cfg.batchInsertSize == 500)
     assert(cfg.truncateBeforeSync && cfg.lowercaseColumns)
     assert(cfg.useTableList == Seq("customer", "orders"))
     assert(cfg.excludeTableList == Seq("scratch", "tmp"))
@@ -162,17 +161,9 @@ class CatalogConfigSpec extends AnyFunSuite {
     assert(p.includeTables == Seq("customer", "orders") && p.truncateBeforeSync)
   }
 
-  test("config: maxRowsPerBatch >= batchInsertSize invariant") {
-    val cfg = GraftConfig.parseString(
-      "batch_insert_size: 9000\nmax_rows_per_batch: 100\n")
-    assert(cfg.maxRowsPerBatch == 9000)
-  }
-
   test("config: a non-integer count names its key and value") {
-    for (key <- Seq("concurrency", "batch_insert_size", "max_rows_per_batch")) {
-      val e = intercept[IllegalArgumentException](GraftConfig.parseString(s"$key: abc\n"))
-      assert(e.getMessage == s"config key '$key' must be an integer, got 'abc'")
-    }
+    val e = intercept[IllegalArgumentException](GraftConfig.parseString("concurrency: abc\n"))
+    assert(e.getMessage == "config key 'concurrency' must be an integer, got 'abc'")
     // out-of-range integers still clamp rather than fail
     assert(GraftConfig.parseString("concurrency: 0\n").concurrency == 1)
   }

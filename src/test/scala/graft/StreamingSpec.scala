@@ -1022,7 +1022,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toSeq.foreach { case (shL, es) =>
           val sh = shL.toInt
           es.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val cents = math.round(e.value * 100).toLong
+            // HALF_UP, Spark's `round` on a double (q312's cents rule)
+            val cents = new java.math.BigDecimal(java.lang.Double.toString(
+              e.value * 100)).setScale(0, java.math.RoundingMode.HALF_UP)
+              .longValueExact()
             levels(sh)(0) = levels(sh)(0) :+ ((cents, e.event_id))
             exact(sh) += ((cents, e.event_id))
             nArr(sh) += 1
@@ -1083,6 +1086,80 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val trueRank = gExact.indexOf((c, id)) + 1L
       assert(math.abs(trueRank - t) <= gBound, s"merged d$d")
     }
+  }
+
+  test("kllGate rounds a negative half-cent HALF_UP, like q312's cents") {
+    import spark.implicits._
+    // -0.125 * 100 is exactly -12.5: Spark's round gives -13, math.round -12
+    val got = EventStream.kllGate(Seq(ev(1, 0, 1, value = -0.125)).toDS())
+      .collect()
+    assert(got.length == 9 && got.forall(_.est_cents == -13L),
+      got.mkString(";"))
+  }
+
+  test("gap-session state: sessionize drops a closed user, chatContractGate keeps one ordinal row") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    // state rows left once every session of user 1 has closed; user 9
+    // only pushes the watermark and keeps its own open session in state
+    def stateRows(gate: org.apache.spark.sql.Dataset[Event] =>
+        org.apache.spark.sql.Dataset[_], name: String): Long = {
+      val mem = MemoryStream[Event]
+      val q = gate(mem.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append).start()
+      try {
+        mem.addData(ev(1, 0, 1, "view"), ev(2, 10, 1, "purchase"))
+        q.processAllAvailable()
+        assert(q.lastProgress.stateOperators(0).numRowsTotal == 1L, name)
+        // wm -> 600 - 120 = 480, past user 1's last event + gap; the
+        // second push makes sure a batch runs at that watermark
+        mem.addData(ev(100, 600, 9, "view"))
+        q.processAllAvailable()
+        mem.addData(ev(101, 620, 9, "view"))
+        q.processAllAvailable()
+        assert(spark.table(name).where("user_id = 1").count() == 1L, name)
+        q.lastProgress.stateOperators(0).numRowsTotal
+      } finally q.stop()
+    }
+    assert(stateRows(EventStream.sessionize(_), "retain_sessions") == 1L)
+    assert(stateRows(EventStream.chatContractGate(_), "retain_chat") == 2L)
+  }
+
+  test("funnel and attribution finalize a silent user's buffer on timeout") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    // user 1 buffers below no watermark and goes silent; user 9 pushes
+    // the watermark past it in two batches (the wm applies a batch late),
+    // so only user 1's event-time timeout can emit its later rows
+    def drive(gate: org.apache.spark.sql.Dataset[Event] =>
+        org.apache.spark.sql.Dataset[_], name: String): Seq[org.apache.spark.sql.Row] = {
+      val mem = MemoryStream[Event]
+      val q = gate(mem.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Update).start()
+      try {
+        mem.addData(ev(1, 0, 1, "click"), ev(2, 5, 1, "purchase"),
+          ev(3, 0, 2, "view"), ev(4, 5, 2, "click"))
+        q.processAllAvailable()
+        mem.addData(ev(100, 600, 9, "view"))
+        q.processAllAvailable()
+        mem.addData(ev(101, 620, 9, "view"))
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).collect().toSeq
+    }
+    val attrib = drive(EventStream.attributionFeed(_), "idle_attrib")
+      .filter(_.getAs[Long]("user_id") == 1L)
+      .map(r => (r.getAs[Long]("purchase_id"), r.getAs[Long]("click_id"),
+        r.getAs[Long]("gap_minutes"), r.getAs[Boolean]("finalized")))
+    assert(attrib.sortBy(_._4) == Seq((2L, 1L, 5L, false), (2L, 1L, 5L, true)))
+    // the funnel's only user-2 input is batch 1: a second row can come
+    // only from the timeout folding the buffer into the final stage
+    val stages = drive(EventStream.funnel(_), "idle_funnel")
+      .filter(_.getAs[Long]("user_id") == 2L)
+      .map(r => (r.getAs[Int]("stage"), r.getAs[Long]("view_ts"),
+        r.getAs[Long]("click_ts")))
+    val (v, c) = (ts(0).getTime * 1000L, ts(5).getTime * 1000L)
+    assert(stages == Seq((2, v, c), (2, v, c)))
   }
 
   test("urlDedupGate through a real stream equals the ORACLE-GATED q269 frame") {
