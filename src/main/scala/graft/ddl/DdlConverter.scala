@@ -1,6 +1,7 @@
 package graft.ddl
 
 import org.apache.spark.sql.types._
+import graft.sqlrewrite.MySqlLexer
 import graft.sqlrewrite.SqlRewriter.{matchParen, splitTopLevelCommas}
 import graft.types.TypeMapper
 
@@ -58,156 +59,41 @@ object DdlConverter {
     else t.stripPrefix("\"").stripSuffix("\"")
   }
 
-  /** Backtick identifiers inside an expression → PG double quotes
-    * (`` escapes unfolded). Literal-safe: only backtick runs are touched. */
-  private def requoteIdents(expr: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < expr.length) {
-      val c = expr.charAt(i)
-      if (c == '`') {
-        val e = new StringBuilder
-        i += 1
-        var done = false
-        while (i < expr.length && !done) {
-          if (expr.charAt(i) == '`' && i + 1 < expr.length && expr.charAt(i + 1) == '`') {
-            e.append('`'); i += 2
-          } else if (expr.charAt(i) == '`') { i += 1; done = true }
-          else { e.append(expr.charAt(i)); i += 1 }
-        }
-        out.append('"').append(e.toString.replace("\"", "\"\"")).append('"')
-      } else if (c == '\'') {
-        val start = i
-        i += 1
-        var done = false
-        while (i < expr.length && !done) {
-          if (expr.charAt(i) == '\\' && i + 1 < expr.length) i += 2
-          else if (expr.charAt(i) == '\'' && i + 1 < expr.length && expr.charAt(i + 1) == '\'') i += 2
-          else if (expr.charAt(i) == '\'') { i += 1; done = true }
-          else i += 1
-        }
-        out.append(expr.substring(start, i))
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
+  /** Backtick identifiers → PG double quotes (`` escapes unfolded, `"`
+    * doubled); strings and comments stay verbatim. */
+  private[ddl] def requoteIdents(sql: String): String = pgQuoted(sql)(identity)
 
-  private def stripVersionComments(s: String): String = {
-    // single scan with JOINT literal/comment state: a mask-then-regex
-    // approach mishandles an apostrophe INSIDE a comment (the masker,
-    // which knows nothing of comments, opens a phantom literal there and
-    // blanks past the newline, so the EOL-comment deletion overruns and
-    // eats real DDL). Version-comment markers drop, their content stays;
-    // `-- `/`# ` comments (whitespace-delimited, outside literals) run to
-    // the REAL end of line.
-    val out = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val quote = c
-        val start = i
-        i += 1
-        var done = false
-        while (i < s.length && !done) {
-          val ch = s.charAt(i)
-          if (ch == '\\' && quote != '`' && i + 1 < s.length) i += 2
-          else if (ch == quote && i + 1 < s.length && s.charAt(i + 1) == quote) i += 2
-          else if (ch == quote) { i += 1; done = true }
-          else i += 1
-        }
-        out.append(s.substring(start, i))
-      } else if (c == '/' && s.regionMatches(i, "/*!", 0, 3) &&
-          i + 7 < s.length && s.substring(i + 3, i + 8).forall(_.isDigit)) {
-        i += 8 // drop the version marker, keep its content
-      } else if (c == '*' && i + 1 < s.length && s.charAt(i + 1) == '/') {
-        out.append(' '); i += 2
-      } else if ((c == '-' && s.regionMatches(i, "-- ", 0, 3) ||
-          c == '#' && s.regionMatches(i, "# ", 0, 2)) &&
-          (out.isEmpty || out.last.isWhitespace)) {
-        while (i < s.length && s.charAt(i) != '\n') i += 1 // to real EOL
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
+  /** PG-dialect scrub of [[graft.sqlrewrite.SqlRewriter.rewrite]] output:
+    * the rewriter targets Spark SQL, which natively accepts IFNULL and
+    * backtick identifiers, so it leaves them — PostgreSQL accepts neither.
+    * Only the unambiguous swaps live here (backtick → double quote, IFNULL
+    * → COALESCE), and only in code: 'use IFNULL(..)' inside a string
+    * survives. */
+  private[ddl] def pgScrub(sql: String): String =
+    pgQuoted(sql)(_.replaceAll("(?i)\\bIFNULL\\s*\\(", "COALESCE("))
 
-  /** Length-preserving literal mask: contents of '...'/"..." literals are
-    * replaced with spaces (quotes kept), so keyword/paren/comma positions
-    * found on the masked copy are valid indexes into the RAW string.
-    * Backtick-quoted identifiers have their content FULLY blanked too
-    * (doubled-backtick escapes honored, the delimiting backticks kept):
-    * a paren/comma inside an identifier — legal MySQL, e.g. `a(b` or
-    * `x,y` — must not unbalance the paren matcher or split a column line,
-    * a keyword inside one (CONSTRAINT `must check` ...) must not classify
-    * the line, and an apostrophe inside one (`it's`) must not open a
-    * phantom literal that would swallow the next separator.
-    * `SqlRewriter.maskStringLiterals` swaps literals for tokens of a
-    * different length and must never be mixed with raw-string offsets. */
-  private def maskSameLen(s: String): String = {
-    val out = s.toCharArray
-    var i = 0
-    while (i < out.length) {
-      val quote = out(i)
-      if (quote == '`') {
-        i += 1
-        var done = false
-        while (i < out.length && !done) {
-          val ch = out(i)
-          if (ch == '`' && i + 1 < out.length && out(i + 1) == '`') {
-            out(i) = ' '; out(i + 1) = ' '; i += 2
-          }
-          else if (ch == '`') { i += 1; done = true }
-          else { out(i) = ' '; i += 1 }
-        }
-      } else if (quote == '\'' || quote == '"') {
-        i += 1
-        var done = false
-        while (i < out.length && !done) {
-          val ch = out(i)
-          if (ch == '\\' && i + 1 < out.length) {
-            out(i) = ' '; out(i + 1) = ' '; i += 2
-          } else if (ch == quote && i + 1 < out.length && out(i + 1) == quote) {
-            out(i) = ' '; out(i + 1) = ' '; i += 2
-          } else if (ch == quote) { i += 1; done = true }
-          else { out(i) = ' '; i += 1 }
-        }
-      } else i += 1
-    }
-    new String(out)
-  }
-
-  /** splitTopLevelCommas with literal awareness: depth/commas are tracked on
-    * the same-length masked copy, slices are taken from the raw string — a
-    * `COMMENT 'a, b'` or `DEFAULT ')('` can no longer split or unbalance. */
-  private def splitLinesLiteralSafe(raw: String): List[String] = {
-    val masked = maskSameLen(raw)
-    val parts = List.newBuilder[String]
-    var depth = 0; var start = 0; var i = 0
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          parts += raw.substring(start, i).trim; start = i + 1
-        case _ =>
+  private def pgQuoted(sql: String)(code: String => String): String =
+    MySqlLexer.render(sql) { (r, text) =>
+      r.kind match {
+        case MySqlLexer.Code => code(text)
+        case MySqlLexer.Ident =>
+          val name = text.substring(1, if (r.closed) text.length - 1 else text.length)
+          "\"" + name.replace("``", "`").replace("\"", "\"\"") + "\""
+        case _ => text
       }
-      i += 1
     }
-    if (start <= raw.length) parts += raw.substring(start).trim
-    parts.result()
-  }
 
   // ------------------------------------------------------------- parsing
 
   def parse(ddl0: String): TableSpec = {
-    val ddl = stripVersionComments(ddl0).trim
+    val ddl = MySqlLexer.stripComments(ddl0).trim
     val temporary = ddl.matches("(?is)^\\s*CREATE\\s+TEMPORARY\\s+.*")
     val nameM = "(?is)CREATE\\s+(?:TEMPORARY\\s+)?TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?([`\"\\w.]+)".r
       .findFirstMatchIn(ddl)
       .getOrElse(throw new IllegalArgumentException(s"not a CREATE TABLE: ${ddl.take(60)}"))
     val tableName = unquoteIdent(nameM.group(1).split('.').last)
 
-    val maskedDdl = maskSameLen(ddl)
+    val maskedDdl = MySqlLexer.blank(ddl)
     val open = maskedDdl.indexOf('(', nameM.end - 1)
     require(open >= 0, s"no column body (LIKE/AS-SELECT copy form?): ${ddl.take(60)}")
     val close = matchParen(maskedDdl, open)
@@ -215,7 +101,7 @@ object DdlConverter {
     val body = ddl.substring(open + 1, close)
     val tail = ddl.substring(close + 1)
 
-    val lines = splitLinesLiteralSafe(body)
+    val lines = splitTopLevelCommas(body)
     val cols = Vector.newBuilder[ColumnSpec]
     var pk: Seq[String] = Nil
     val checks = Vector.newBuilder[String]
@@ -228,13 +114,13 @@ object DdlConverter {
       // The mask is LENGTH-PRESERVING, so every index found on `upper` is
       // a valid index into the raw `line` (a token mask would drift once a
       // literal precedes the keyword).
-      val upper = maskSameLen(line).toUpperCase
+      val upper = MySqlLexer.blank(line).toUpperCase
       def starts(kw: String): Boolean = upper.matches(s"^$kw\\b.*")
       if (upper.startsWith("PRIMARY KEY")) {
         val o = upper.indexOf('(')
         if (o >= 0) {
           val c = matchParen(upper, o)
-          pk = splitLinesLiteralSafe(line.substring(o + 1, c))
+          pk = splitTopLevelCommas(line.substring(o + 1, c))
             .map(x => unquoteIdent(x.replaceAll("\\(\\d+\\)\\s*$", ""))) // prefix length
         }
       } else if (starts("CONSTRAINT") || starts("CHECK")) {
@@ -289,7 +175,7 @@ object DdlConverter {
 
     // flag checks run on a literal-masked copy so COMMENT/DEFAULT text
     // ('marks INVISIBLE rows', 'the PRIMARY KEY is...') can't trigger them
-    def masked(s: String): String = maskSameLen(s).toUpperCase
+    def masked(s: String): String = MySqlLexer.blank(s).toUpperCase
     if (masked(line).contains(" INVISIBLE")) return None
 
     // type: word(+args) plus optional unsigned/zerofill modifiers
@@ -311,7 +197,7 @@ object DdlConverter {
     // string containing 'DEFAULT 0' or 'GENERATED ALWAYS AS (x)' must not
     // fabricate a clause) and their text EXTRACTED from the raw string by
     // index — maskedRest is same-length by construction
-    val maskedRest = upperRest // same maskSameLen pass, uppercase is index-safe
+    val maskedRest = upperRest // same blank mask, uppercase is index-safe
     val generated = "(?i)GENERATED\\s+ALWAYS\\s+AS\\s*(\\(.*\\))\\s*(VIRTUAL|STORED)?".r
       .findFirstMatchIn(maskedRest)
       .map(m => rest.substring(m.start(1), m.end(1))) // VIRTUAL→STORED at emit (:627-673)
@@ -482,25 +368,13 @@ object DdlConverter {
       else body0
     // DIALECT BOUNDARY: SqlRewriter targets Spark SQL (the repo executes
     // rewritten views through Catalyst — operators/Views.scala); when the
-    // emitted DDL runs on a JDBC target instead, the unambiguous swaps are
-    // applied here (backtick identifiers → double quotes, IFNULL →
-    // COALESCE — FunctionDdl's pgScrub rule), LITERAL-SAFE: both run on
-    // the masked copy so 'use IFNULL(..)' inside a string survives.
-    // Views whose bodies need Spark-specific constructs (GROUP_CONCAT's
-    // collect_list lambdas, Java date patterns) remain Spark-dialect and
-    // will be reported as stage failures on targets that cannot parse
-    // them rather than silently rewritten to something different.
-    val body = {
-      val (masked, lits) = graft.sqlrewrite.SqlRewriter.maskStringLiterals(body1)
-      val swapped = masked.replaceAll("(?i)\\bIFNULL\\s*\\(", "COALESCE(")
-      val requoted = lits.map { l =>
-        if (l.length >= 2 && l.head == '`')
-          "\"" + l.substring(1, l.length - 1)
-            .replace("``", "`").replace("\"", "\"\"") + "\""
-        else l
-      }
-      graft.sqlrewrite.SqlRewriter.unmask(swapped, requoted)
-    }
+    // emitted DDL runs on a JDBC target instead, pgScrub applies the
+    // unambiguous swaps. Views whose bodies need Spark-specific constructs
+    // (GROUP_CONCAT's collect_list lambdas, Java date patterns) remain
+    // Spark-dialect and will be reported as stage failures on targets that
+    // cannot parse them rather than silently rewritten to something
+    // different.
+    val body = pgScrub(body1)
     Seq(
       s"DROP VIEW IF EXISTS ${q(view, lowercase)} CASCADE",
       s"CREATE OR REPLACE VIEW ${q(view, lowercase)} AS $body")

@@ -1,6 +1,6 @@
 package graft.ddl
 
-import graft.sqlrewrite.SqlRewriter
+import graft.sqlrewrite.{MySqlLexer, SqlRewriter}
 
 /** MySQL stored-function DDL → PostgreSQL PL/pgSQL — the reference's
   * `ConvertFunctionDDL` (sync_functions.go:156-1426) re-expressed
@@ -50,8 +50,7 @@ object FunctionDdl {
   private val NameRe =
     "(?is)CREATE\\s+(?:DEFINER\\s*=\\s*\\S+\\s+)?FUNCTION\\s+`?([\\w$]+)`?".r
 
-  private def cleanTypes(s: String): String = s
-    .replace("`", "\"")
+  private def cleanTypes(s: String): String = DdlConverter.requoteIdents(s)
     .replaceAll("(?i)\\bDATETIME\\b", "TIMESTAMP")
     .replaceAll("(?i)\\bTINYINT\\b", "SMALLINT")
     .replaceAll("(?i)\\s+UNSIGNED\\b", "")
@@ -59,57 +58,6 @@ object FunctionDdl {
     .replaceAll("(?i)\\s+CHARACTER\\s+SET\\s+\\w+", "")
     .replaceAll("(?i)\\s+CHARSET\\s+\\w+", "")
     .replaceAll("(?i)\\s+COLLATE\\s+\\w+", "")
-
-  /** PG-dialect scrub applied AFTER [[SqlRewriter.rewrite]]: the shared
-    * rewriter targets Spark SQL, which natively accepts IFNULL and
-    * backtick identifiers, so it deliberately leaves them — PostgreSQL
-    * accepts neither. Only the unambiguous swaps live here (backtick →
-    * double quote, IFNULL → COALESCE); string literals are masked so
-    * neither touches quoted text. */
-  private def pgScrub(sql: String): String = {
-    val (masked, lits) = SqlRewriter.maskStringLiterals(sql)
-    val s = masked.replaceAll("(?i)\\bIFNULL\\s*\\(", "COALESCE(")
-    // the shared masker now tokenizes backtick identifiers too — requote
-    // them in the LITERAL list (`` escapes unfolded, PG "" escapes applied)
-    val requoted = lits.map { l =>
-      if (l.length >= 2 && l.head == '`')
-        "\"" + l.substring(1, l.length - 1)
-          .replace("``", "`").replace("\"", "\"\"") + "\""
-      else l
-    }
-    SqlRewriter.unmask(s, requoted)
-  }
-
-  /** Same-length copy of `s` with every string-literal span (quotes
-    * included) blanked to spaces, so keyword indexes found on the mask
-    * are valid in the original — a COMMENT 'begin ...' characteristic
-    * must not anchor the body. Handles '' and \' escapes like
-    * [[SqlRewriter.maskStringLiterals]] (which swaps in variable-length
-    * tokens and therefore cannot be used for index math). */
-  private def blankLiterals(s: String): String = {
-    val out = s.toCharArray
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'' || c == '"') {
-        val quote = c
-        out(i) = ' '; i += 1
-        var done = false
-        while (i < s.length && !done) {
-          val ch = s.charAt(i)
-          if (ch == '\\' && i + 1 < s.length) {
-            out(i) = ' '; out(i + 1) = ' '; i += 2
-          } else if (ch == quote && i + 1 < s.length &&
-              s.charAt(i + 1) == quote) {
-            out(i) = ' '; out(i + 1) = ' '; i += 2
-          } else if (ch == quote) {
-            out(i) = ' '; i += 1; done = true
-          } else { out(i) = ' '; i += 1 }
-        }
-      } else i += 1
-    }
-    new String(out)
-  }
 
   /** First whole-word occurrence of `word` in `hay` at or after `from`;
     * -1 if none. Guards against BEGIN matching inside an identifier. */
@@ -125,21 +73,6 @@ object FunctionDdl {
     -1
   }
 
-  /** Matching close paren for the open paren at `open`. -1 if unbalanced. */
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
   def convert(mysqlDdl: String): Option[Converted] = {
     // DELIMITER wrappers and the custom terminator are client syntax, not
     // function text
@@ -149,12 +82,12 @@ object FunctionDdl {
       .trim
     // keyword anchors are found on a literal-blanked, same-length mask:
     // 'begin'/'returns' inside a COMMENT string must not anchor the body
-    val upper = blankLiterals(ddl).toUpperCase
+    val upper = MySqlLexer.blank(ddl).toUpperCase
     for {
       m <- NameRe.findFirstMatchIn(ddl)
       name = m.group(1)
       open = ddl.indexOf('(', m.end - 1) if open >= 0
-      close = matchParen(ddl, open) if close > open
+      close = SqlRewriter.matchParen(ddl, open) if close > open
       returnsIdx = indexOfWord(upper, "RETURNS", close) if returnsIdx >= 0
       beginIdx = indexOfWord(upper, "BEGIN", returnsIdx) if beginIdx >= 0
     } yield {
@@ -185,7 +118,7 @@ object FunctionDdl {
       // containing 'not deterministic' cannot flip volatility — only the
       // COMMENT extraction below needs the real text
       val chars = afterReturns.substring(math.min(cut, afterReturns.length))
-      val uchars = blankLiterals(chars).toUpperCase
+      val uchars = MySqlLexer.blank(chars).toUpperCase
       val volatility =
         if (uchars.contains("NOT DETERMINISTIC")) "VOLATILE"
         else if (uchars.contains("DETERMINISTIC")) "IMMUTABLE"
@@ -247,7 +180,7 @@ object FunctionDdl {
       // (IFNULL, backticks, …) or OPEN fails on the target
       val cursorDecls = cursorRe.findAllMatchIn(body)
         .map(c => s"${c.group(1)} CURSOR FOR " +
-          s"${pgScrub(SqlRewriter.rewrite(c.group(2).trim))};").toSeq
+          s"${DdlConverter.pgScrub(SqlRewriter.rewrite(c.group(2).trim))};").toSeq
       body = cursorRe.replaceAllIn(body, "")
       // MySQL allows `DECLARE a, b INT`; PL/pgSQL wants one name per line.
       // The type may be multi-word (DOUBLE PRECISION, INT UNSIGNED,
@@ -369,7 +302,7 @@ object FunctionDdl {
       body = SqlRewriter.unmask(mb, bodyLits)
 
       // expression-level MySQL builtins → PG through the shared rewriter
-      body = pgScrub(SqlRewriter.rewrite(body)).trim
+      body = DdlConverter.pgScrub(SqlRewriter.rewrite(body)).trim
 
       // coerce the NOT FOUND flag's declaration to boolean (its MySQL
       // spelling is usually `DECLARE done INT DEFAULT FALSE` — invalid in

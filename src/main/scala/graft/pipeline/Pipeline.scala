@@ -77,8 +77,10 @@ object Pipeline {
     * ANSI-only targets too. Statements carrying a dollar-quoted body
     * (PL/pgSQL functions, DO blocks) are never rewritten — the sugar may
     * be INSIDE the body, and stripping it there would silently change the
-    * installed function's semantics. Returns the ORIGINAL error if both
-    * attempts fail. */
+    * installed function's semantics. If both attempts fail, the error
+    * carries the original message first and the retry's message after it:
+    * the retry's is often the real cause (a type the target lacks) once
+    * the sugar the target rejected first is gone. */
   private[graft] def execLenient(url: String, ddl: String): Try[Unit] =
     Try(Catalog.executeDdl(url, ddl)).recoverWith { case e =>
       // reference parity (manager.go:1337-1414): a failed COMMENT ON
@@ -98,7 +100,10 @@ object Pipeline {
             .replaceAll("(?i)\\bOR\\s+REPLACE\\s+", "")
             .replaceAll("(?i)\\s+CASCADE\\s*$", "")
         if (stripped != ddl)
-          Try(Catalog.executeDdl(url, stripped)).recoverWith { case _ => Failure(e) }
+          Try(Catalog.executeDdl(url, stripped)).recoverWith { case r =>
+            Failure(new java.sql.SQLException(
+              s"${e.getMessage}; retry without PG sugar: ${r.getMessage}", e))
+          }
         else Failure(e)
       }
     }

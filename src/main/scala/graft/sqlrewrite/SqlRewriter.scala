@@ -1,6 +1,5 @@
 package graft.sqlrewrite
 
-import scala.collection.mutable
 import scala.util.matching.Regex
 
 /** MySQL-dialect → Spark SQL rewriter — the reference's query-semantics
@@ -40,59 +39,37 @@ object SqlRewriter {
 
   // ---------------------------------------------------------------- masking
 
-  private val MaskToken = "␀STR%d␀"
+  private val Token = "␀STR(\\d+)␀".r
 
-  /** Replace string literals AND backtick-quoted identifiers with
-    * placeholders so regexes never fire inside quotes; returns (masked,
-    * literals). Handles '' escapes and \' escapes. Backtick identifiers
-    * are masked too: an apostrophe inside one (`it's`) would otherwise
-    * open a phantom string literal and swallow real SQL, and keyword
-    * rewrites (REGEXP → RLIKE) must never rename a quoted identifier. */
+  /** Replace every string literal, backtick identifier and comment (the
+    * non-code runs of [[MySqlLexer]]) with a placeholder so regexes never
+    * fire inside them; returns (masked, the replaced texts in order).
+    * Keyword rewrites (REGEXP → RLIKE) must never rename a quoted
+    * identifier, and an apostrophe inside one (`it's`) or inside a
+    * comment must not open a phantom literal. */
   def maskStringLiterals(sql: String): (String, Vector[String]) = {
-    val out = new StringBuilder
-    val lits = mutable.ArrayBuffer[String]()
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val quote = c
-        val start = i
-        i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          val ch = sql.charAt(i)
-          if (ch == '\\' && i + 1 < sql.length) i += 2
-          else if (ch == quote && i + 1 < sql.length && sql.charAt(i + 1) == quote) i += 2
-          else if (ch == quote) { i += 1; done = true }
-          else i += 1
-        }
-        lits += sql.substring(start, i)
-        out.append(MaskToken.format(lits.size - 1))
-      } else { out.append(c); i += 1 }
+    val lits = scala.collection.mutable.ArrayBuffer[String]()
+    val masked = MySqlLexer.render(sql) { (r, text) =>
+      r.kind match {
+        case MySqlLexer.Code | MySqlLexer.Marker => text
+        case _ => lits += text; s"␀STR${lits.size - 1}␀"
+      }
     }
-    (out.toString, lits.toVector)
+    (masked, lits.toVector)
   }
 
+  /** Put the masked texts back, in one pass over `sql`. */
   def unmask(sql: String, lits: Vector[String]): String =
-    lits.zipWithIndex.foldLeft(sql) { case (s, (lit, idx)) =>
-      s.replace(MaskToken.format(idx), lit)
-    }
+    Token.replaceAllIn(sql, m => Regex.quoteReplacement(lits(m.group(1).toInt)))
 
-  /** Lowercase SQL text with string literals (and quoted identifiers —
-    * the masker treats both quote kinds) preserved verbatim. Used by the
-    * view converter's lowercase_columns mode; folding literals too would
-    * silently change `WHERE status = 'ACTIVE'` semantics. */
-  def lowercaseOutsideLiterals(sql: String): String = {
-    val (masked, lits) = maskStringLiterals(sql)
-    // backtick-quoted IDENTIFIERS fold with the statement (they are
-    // identifiers, not data — leaving `MyCol` unfolded while the table
-    // DDL lowercases would emit case-mismatched references); string
-    // literals restore verbatim
-    val folded = lits.map(l =>
-      if (l.length >= 2 && l.head == '`') l.toLowerCase else l)
-    folded.zipWithIndex.foldLeft(masked.toLowerCase) { case (s, (lit, idx)) =>
-      s.replace(MaskToken.format(idx).toLowerCase, lit)
-    }
+  /** Lowercase SQL text with string literals preserved verbatim. Used by
+    * the view converter's lowercase_columns mode; folding literals too
+    * would silently change `WHERE status = 'ACTIVE'` semantics. Backtick
+    * identifiers fold with the statement: they are identifiers, not data,
+    * and leaving `MyCol` unfolded while the table DDL lowercases would
+    * emit case-mismatched references. */
+  def lowercaseOutsideLiterals(sql: String): String = MySqlLexer.render(sql) { (r, text) =>
+    if (r.kind == MySqlLexer.Str) text else text.toLowerCase
   }
 
   // ------------------------------------------------------- call extraction
@@ -126,34 +103,41 @@ object SqlRewriter {
     s
   }
 
-  /** Index of the ')' matching the '(' at `open`, or -1. */
+  /** [[rewriteCalls]] for a rewrite defined on some argument lists only;
+    * a call outside `pf` keeps its arguments under the name `fn`. */
+  private def rewriteSome(sql: String, fn: String)(pf: PartialFunction[List[String], String]): String =
+    rewriteCalls(sql, fn)(args => pf.applyOrElse(args, (a: List[String]) => s"$fn(${a.mkString(", ")})"))
+
+  /** Index of the ')' matching the '(' at `open`, or -1. Parens inside
+    * strings, identifiers and comments do not count. */
   def matchParen(s: String, open: Int): Int = {
     var depth = 0
-    var i = open
-    while (i < s.length) {
+    MySqlLexer.codeIndexes(s, open).find { i =>
       s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
+        case '(' => depth += 1; false
+        case ')' => depth -= 1; depth == 0
+        case _ => false
       }
-      i += 1
-    }
-    -1
+    }.getOrElse(-1)
   }
 
-  /** Split on commas at paren depth 0 (reference splitTopLevelCommas). */
+  /** Split on commas at paren depth 0 (reference splitTopLevelCommas),
+    * trimming each part; commas and parens inside strings, identifiers
+    * and comments do not count. */
   def splitTopLevelCommas(s: String): List[String] = {
-    val parts = mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
+    val parts = List.newBuilder[String]
     var depth = 0
-    s.foreach {
-      case '(' => depth += 1; cur.append('(')
-      case ')' => depth -= 1; cur.append(')')
-      case ',' if depth == 0 => parts += cur.toString.trim; cur.clear()
-      case c => cur.append(c)
+    var start = 0
+    MySqlLexer.codeIndexes(s).foreach { i =>
+      s.charAt(i) match {
+        case '(' => depth += 1
+        case ')' => depth -= 1
+        case ',' if depth == 0 => parts += s.substring(start, i).trim; start = i + 1
+        case _ =>
+      }
     }
-    if (cur.nonEmpty || parts.nonEmpty) parts += cur.toString.trim
-    parts.toList
+    if (start < s.length || start > 0) parts += s.substring(start).trim
+    parts.result()
   }
 
   // ------------------------------------------------- format-string mapping
@@ -202,16 +186,16 @@ object SqlRewriter {
   /** Resolve an arg that is exactly one masked literal token to its
     * unquoted text (None for anything else). */
   private def litText(arg: String, lits: Vector[String]): Option[String] =
-    "^␀STR(\\d+)␀$".r.findFirstMatchIn(arg.trim).map { m =>
-      val raw = lits(m.group(1).toInt)
-      raw.substring(1, raw.length - 1)
+    arg.trim match {
+      case Token(idx) => val raw = lits(idx.toInt); Some(raw.substring(1, raw.length - 1))
+      case _ => None
     }
 
   /** Translate EVERY masked literal inside a format arg — the arg may be
     * an expression (CONCAT('%Y','-%m')); replacing the whole arg with its
     * first literal would silently drop the surrounding expression. */
   private def translateFmtArg(arg: String, lits: Vector[String]): String =
-    "␀STR(\\d+)␀".r.replaceAllIn(arg, mm => {
+    Token.replaceAllIn(arg, mm => {
       val raw = lits(mm.group(1).toInt)
       if (raw.length >= 2 && (raw.head == '\'' || raw.head == '"')) {
         val inner = raw.substring(1, raw.length - 1)
@@ -224,11 +208,10 @@ object SqlRewriter {
 
   /** Rewrite one MySQL SELECT/VIEW body into Spark SQL. */
   def rewrite(mysqlSql: String): String = {
+    // strings, identifiers and comments become tokens; MySQL version
+    // comments /*!40101 ... */ unwrap (sync_tableddl.go:63)
     val (masked0, lits) = maskStringLiterals(mysqlSql)
-    var s = masked0
-
-    // strip MySQL version comments /*!40101 ... */  (sync_tableddl.go:63)
-    s = s.replaceAll("/\\*!\\d{5}", "").replaceAll("\\*/", " ")
+    var s = MySqlLexer.stripComments(masked0)
     // COLLATE / charset introducers dropped (sync_viewddl.go:207)
     s = s.replaceAll("(?i)\\s+COLLATE\\s+\\w+", "")
     s = s.replaceAll("(?i)_utf8mb4\\s*", "").replaceAll("(?i)_latin1\\s*", "")
@@ -246,26 +229,21 @@ object SqlRewriter {
     s = s.replaceAll("(?i)\\bAS\\s+SIGNED(\\s+INTEGER)?\\b", "AS BIGINT")
 
     // CONVERT(x USING charset) → CAST(x AS STRING); CONVERT(x, t) → CAST
-    s = rewriteCalls(s, "CONVERT") { args =>
-      if (args.size == 1 && args.head.matches("(?is).*\\bUSING\\b.*")) {
-        val e = args.head.replaceAll("(?is)\\bUSING\\b.*$", "").trim
-        s"CAST($e AS STRING)"
-      } else if (args.size == 2) {
-        val ty = args(1).trim.toUpperCase match {
+    val usingCharset: PartialFunction[List[String], String] = {
+      case List(a) if a.matches("(?is).*\\bUSING\\b.*") =>
+        s"CAST(${a.replaceAll("(?is)\\bUSING\\b.*$", "").trim} AS STRING)"
+    }
+    s = rewriteSome(s, "CONVERT")(usingCharset orElse {
+      case List(e, t) =>
+        val ty = t.trim.toUpperCase match {
           case "SIGNED" | "UNSIGNED" => "BIGINT"
           case "CHAR" => "STRING"
           case other => other
         }
-        s"CAST(${args.head} AS $ty)"
-      } else s"CONVERT(${args.mkString(", ")})"
-    }
+        s"CAST($e AS $ty)"
+    })
     // CAST(x USING charset) variant
-    s = rewriteCalls(s, "CAST") { args =>
-      if (args.size == 1 && args.head.matches("(?is).*\\bUSING\\b.*")) {
-        val e = args.head.replaceAll("(?is)\\bUSING\\b.*$", "").trim
-        s"CAST($e AS STRING)"
-      } else s"CAST(${args.mkString(", ")})"
-    }
+    s = rewriteSome(s, "CAST")(usingCharset)
 
     // GROUP_CONCAT([DISTINCT] x [ORDER BY k [ASC|DESC]] [SEPARATOR 's'])
     //   → array_join over a sorted collect. Unlike the reference, which
@@ -331,54 +309,42 @@ object SqlRewriter {
     }
 
     // DATE_FORMAT(x, fmt) → date_format(x, javaFmt)
-    s = rewriteCalls(s, "DATE_FORMAT") {
+    s = rewriteSome(s, "DATE_FORMAT") {
       case List(x, fmt) => s"date_format($x, ${translateFmtArg(fmt, lits)})"
-      case args => s"DATE_FORMAT(${args.mkString(", ")})"
     }
     // STR_TO_DATE(x, fmt) → to_timestamp(x, javaFmt)
-    s = rewriteCalls(s, "STR_TO_DATE") {
+    s = rewriteSome(s, "STR_TO_DATE") {
       case List(x, fmt) => s"to_timestamp($x, ${translateFmtArg(fmt, lits)})"
-      case args => s"STR_TO_DATE(${args.mkString(", ")})"
     }
 
     // STRCMP(a,b) → CASE (sync_viewddl.go:342-347)
-    s = rewriteCalls(s, "STRCMP") {
+    s = rewriteSome(s, "STRCMP") {
       case List(a, b) =>
         s"(CASE WHEN ($a) = ($b) THEN 0 WHEN ($a) < ($b) THEN -1 ELSE 1 END)"
-      case args => s"STRCMP(${args.mkString(", ")})"
     }
 
     // TO_DAYS(x) → days since year 0 (MySQL TO_DAYS('1970-01-01')=719528)
-    s = rewriteCalls(s, "TO_DAYS") {
+    s = rewriteSome(s, "TO_DAYS") {
       case List(x) => s"CAST(datediff(CAST($x AS DATE), DATE '1970-01-01') + 719528 AS BIGINT)"
-      case args => s"TO_DAYS(${args.mkString(", ")})"
     }
     // TIME_TO_SEC(x) → seconds since midnight
-    s = rewriteCalls(s, "TIME_TO_SEC") {
+    s = rewriteSome(s, "TIME_TO_SEC") {
       case List(x) =>
         s"(hour($x)*3600 + minute($x)*60 + second($x))"
-      case args => s"TIME_TO_SEC(${args.mkString(", ")})"
     }
     // TIMEDIFF(a,b) → interval subtraction (sync_viewddl.go:97,595)
-    s = rewriteCalls(s, "TIMEDIFF") {
-      case List(a, b) => s"($a - $b)"
-      case args => s"TIMEDIFF(${args.mkString(", ")})"
-    }
+    s = rewriteSome(s, "TIMEDIFF") { case List(a, b) => s"($a - $b)" }
     // SEC_TO_TIME(n) → day-time interval (sync_viewddl.go:687-699)
-    s = rewriteCalls(s, "SEC_TO_TIME") {
+    s = rewriteSome(s, "SEC_TO_TIME") {
       case List(n) => s"make_dt_interval(0, 0, 0, CAST($n AS DOUBLE))"
-      case args => s"SEC_TO_TIME(${args.mkString(", ")})"
     }
     // TIME(x) → time-of-day string (consistent with the TIME mapping note)
-    s = rewriteCalls(s, "TIME") {
-      case List(x) => s"date_format($x, 'HH:mm:ss')"
-      case args => s"TIME(${args.mkString(", ")})"
-    }
+    s = rewriteSome(s, "TIME") { case List(x) => s"date_format($x, 'HH:mm:ss')" }
     // JSON_DEPTH / JSON_OVERLAPS unsupported → NULL (sync_viewddl.go:432-437)
     s = rewriteCalls(s, "JSON_DEPTH") { _ => "CAST(NULL AS INT)" }
     s = rewriteCalls(s, "JSON_OVERLAPS") { _ => "CAST(NULL AS BOOLEAN)" }
     // JSON_TYPE(j) → first-character heuristic (sync_viewddl.go:438-443)
-    s = rewriteCalls(s, "JSON_TYPE") {
+    s = rewriteSome(s, "JSON_TYPE") {
       case List(j) =>
         s"(CASE WHEN ($j) IS NULL THEN NULL" +
           s" WHEN left(ltrim($j), 1) = '{' THEN 'OBJECT'" +
@@ -387,7 +353,6 @@ object SqlRewriter {
           s" WHEN lower(trim($j)) IN ('true', 'false') THEN 'BOOLEAN'" +
           s" WHEN trim($j) = 'null' THEN 'NULL'" +
           s" ELSE 'NUMBER' END)"
-      case args => s"JSON_TYPE(${args.mkString(", ")})"
     }
 
     // COALESCE args force-cast to string (sync_viewddl.go:377-383) — MySQL
@@ -397,73 +362,49 @@ object SqlRewriter {
       s"coalesce(${args.map(a => s"CAST($a AS STRING)").mkString(", ")})"
     }
     // WEEK(d) → ISO week (reference maps to extract(week), :636-655)
-    s = rewriteCalls(s, "WEEK") {
-      case List(d) => s"weekofyear($d)"
-      case args => s"WEEK(${args.mkString(", ")})"
-    }
+    s = rewriteSome(s, "WEEK") { case List(d) => s"weekofyear($d)" }
     // JSON_CONTAINS_PATH(j, 'one'|'all', p...) → null-check combination
     // (sync_viewddl.go:424-431)
-    s = rewriteCalls(s, "JSON_CONTAINS_PATH") { args =>
-      if (args.size >= 3) {
-        val j = args.head
+    s = rewriteSome(s, "JSON_CONTAINS_PATH") {
+      case j :: modeArg :: paths if paths.nonEmpty =>
         // the mode arg is a MASKED literal token at this point — the raw
         // text never contains 'all', so resolve it through lits (a bare
         // contains() on the token silently degraded every 'all' to OR)
-        val mode = litText(args(1), lits).getOrElse(args(1)).toLowerCase
-        val checks = args.drop(2).map(p => s"get_json_object($j, $p) IS NOT NULL")
-        val op = if (mode.contains("all")) " AND " else " OR "
-        s"(${checks.mkString(op)})"
-      } else s"JSON_CONTAINS_PATH(${args.mkString(", ")})"
+        val mode = litText(modeArg, lits).getOrElse(modeArg).toLowerCase
+        val checks = paths.map(p => s"get_json_object($j, $p) IS NOT NULL")
+        s"(${checks.mkString(if (mode.contains("all")) " AND " else " OR ")})"
     }
 
     // JSON mutators → graft_json_* custom expressions, multi-pair calls
     // folded into nested binary/ternary applications
     // (sync_viewddl.go:39-45, :452-474; JsonFunctions must be registered)
-    def foldJsonPairs(mode: String, passName: String)(args: List[String]): String =
-      if (args.size >= 3 && args.size % 2 == 1)
-        args.tail.grouped(2).foldLeft(args.head) {
-          case (acc, List(p, v)) => s"graft_json_$mode($acc, $p, $v)"
-          case (acc, _) => acc
-        }
-      else s"$passName(${args.mkString(", ")})"
-    s = rewriteCalls(s, "JSON_SET")(foldJsonPairs("set", "JSON_SET"))
-    s = rewriteCalls(s, "JSON_INSERT")(foldJsonPairs("insert", "JSON_INSERT"))
-    s = rewriteCalls(s, "JSON_REPLACE")(foldJsonPairs("replace", "JSON_REPLACE"))
-    s = rewriteCalls(s, "JSON_ARRAY_APPEND")(foldJsonPairs("array_append", "JSON_ARRAY_APPEND"))
-    s = rewriteCalls(s, "JSON_REMOVE") { args =>
-      if (args.size >= 2)
-        args.tail.foldLeft(args.head)((acc, p) => s"graft_json_remove($acc, $p)")
-      else s"JSON_REMOVE(${args.mkString(", ")})"
+    def foldPairs(fn: String): PartialFunction[List[String], String] = {
+      case j :: pairs if pairs.nonEmpty && pairs.size % 2 == 0 =>
+        pairs.grouped(2).foldLeft(j)((acc, pv) => s"$fn($acc, ${pv.mkString(", ")})")
     }
-    s = rewriteCalls(s, "JSON_MERGE_PATCH") { args =>
-      if (args.size >= 2)
-        args.tail.foldLeft(args.head)((acc, x) => s"graft_json_merge_patch($acc, $x)")
-      else s"JSON_MERGE_PATCH(${args.mkString(", ")})"
+    def nest(fn: String): PartialFunction[List[String], String] = {
+      case j :: rest if rest.nonEmpty => rest.foldLeft(j)((acc, x) => s"$fn($acc, $x)")
     }
-    def foldMergePreserve(passName: String)(args: List[String]): String =
-      if (args.size >= 2)
-        args.tail.foldLeft(args.head)((acc, x) => s"graft_json_merge_preserve($acc, $x)")
-      else s"$passName(${args.mkString(", ")})"
-    s = rewriteCalls(s, "JSON_MERGE_PRESERVE")(foldMergePreserve("JSON_MERGE_PRESERVE"))
-    s = rewriteCalls(s, "JSON_MERGE")(foldMergePreserve("JSON_MERGE"))
+    s = rewriteSome(s, "JSON_SET")(foldPairs("graft_json_set"))
+    s = rewriteSome(s, "JSON_INSERT")(foldPairs("graft_json_insert"))
+    s = rewriteSome(s, "JSON_REPLACE")(foldPairs("graft_json_replace"))
+    s = rewriteSome(s, "JSON_ARRAY_APPEND")(foldPairs("graft_json_array_append"))
+    s = rewriteSome(s, "JSON_REMOVE")(nest("graft_json_remove"))
+    s = rewriteSome(s, "JSON_MERGE_PATCH")(nest("graft_json_merge_patch"))
+    s = rewriteSome(s, "JSON_MERGE_PRESERVE")(nest("graft_json_merge_preserve"))
+    s = rewriteSome(s, "JSON_MERGE")(nest("graft_json_merge_preserve"))
 
     // JSON surface → Spark JSON functions (sync_viewddl.go:389-474)
     s = rewriteCalls(s, "JSON_UNQUOTE") { args => args.mkString(", ") } // get_json_object already unquotes
-    s = rewriteCalls(s, "JSON_EXTRACT") {
-      case List(j, p) => s"get_json_object($j, $p)"
-      case args => s"JSON_EXTRACT(${args.mkString(", ")})"
-    }
-    s = rewriteCalls(s, "JSON_VALUE") {
-      case List(j, p) => s"get_json_object($j, $p)"
-      case args => s"JSON_VALUE(${args.mkString(", ")})"
-    }
+    s = rewriteSome(s, "JSON_EXTRACT") { case List(j, p) => s"get_json_object($j, $p)" }
+    s = rewriteSome(s, "JSON_VALUE") { case List(j, p) => s"get_json_object($j, $p)" }
     s = rewriteCalls(s, "JSON_OBJECT") { args =>
       s"to_json(named_struct(${args.mkString(", ")}))"
     }
     s = rewriteCalls(s, "JSON_ARRAY") { args =>
       s"to_json(array(${args.mkString(", ")}))"
     }
-    s = rewriteCalls(s, "JSON_LENGTH") {
+    s = rewriteSome(s, "JSON_LENGTH") {
       // MySQL: array → element count, object → key count, scalar → 1
       // (json_array_length alone returns NULL for objects/scalars)
       case List(j) =>
@@ -471,66 +412,42 @@ object SqlRewriter {
           s" WHEN startswith(ltrim($j), '[') THEN json_array_length($j)" +
           s" WHEN startswith(ltrim($j), '{') THEN size(from_json($j, 'map<string,string>'))" +
           s" ELSE 1 END)"
-      case args => s"JSON_LENGTH(${args.mkString(", ")})"
     }
-    s = rewriteCalls(s, "JSON_KEYS") {
-      case List(j) => s"json_object_keys($j)"
-      case args => s"JSON_KEYS(${args.mkString(", ")})"
-    }
-    s = rewriteCalls(s, "JSON_VALID") {
+    s = rewriteSome(s, "JSON_KEYS") { case List(j) => s"json_object_keys($j)" }
+    s = rewriteSome(s, "JSON_VALID") {
       case List(j) =>
         s"(CASE WHEN ($j) IS NULL THEN NULL WHEN get_json_object($j, '$$') IS NOT NULL OR from_json($j, 'map<string,string>') IS NOT NULL THEN true ELSE false END)"
-      case args => s"JSON_VALID(${args.mkString(", ")})"
     }
 
     // MySQL INSERT(str,pos,len,new) → overlay (sync_viewddl.go:99,477-502)
-    s = rewriteCalls(s, "INSERT") {
+    s = rewriteSome(s, "INSERT") {
       case List(str, pos, len, rep) => s"overlay($str, $rep, $pos, $len)"
-      case args => s"INSERT(${args.mkString(", ")})"
     }
     // DAYNAME / MONTHNAME → date_format patterns
-    s = rewriteCalls(s, "DAYNAME") {
-      case List(x) => s"date_format($x, 'EEEE')"
-      case args => s"DAYNAME(${args.mkString(", ")})"
-    }
-    s = rewriteCalls(s, "MONTHNAME") {
-      case List(x) => s"date_format($x, 'MMMM')"
-      case args => s"MONTHNAME(${args.mkString(", ")})"
-    }
+    s = rewriteSome(s, "DAYNAME") { case List(x) => s"date_format($x, 'EEEE')" }
+    s = rewriteSome(s, "MONTHNAME") { case List(x) => s"date_format($x, 'MMMM')" }
     // ADDDATE/SUBDATE(d, n) → date_add/date_sub; INTERVAL forms pass through
     // as native `d + INTERVAL n unit` arithmetic (sync_viewddl.go:57-67)
-    s = rewriteCalls(s, "ADDDATE") {
+    s = rewriteSome(s, "ADDDATE") {
       case List(d, n) if !n.toUpperCase.contains("INTERVAL") => s"date_add($d, $n)"
       case List(d, iv) => s"($d + ${iv.trim})"
-      case args => s"ADDDATE(${args.mkString(", ")})"
     }
-    s = rewriteCalls(s, "SUBDATE") {
+    s = rewriteSome(s, "SUBDATE") {
       case List(d, n) if !n.toUpperCase.contains("INTERVAL") => s"date_sub($d, $n)"
       case List(d, iv) => s"($d - ${iv.trim.replaceFirst("(?i)^INTERVAL\\s+", "INTERVAL ")})"
-      case args => s"SUBDATE(${args.mkString(", ")})"
     }
     // ELT(n, a, b, ...) → element_at(array(...), n)
-    s = rewriteCalls(s, "ELT") { args =>
-      if (args.size >= 2)
-        s"element_at(array(${args.tail.mkString(", ")}), CAST(${args.head} AS INT))"
-      else s"ELT(${args.mkString(", ")})"
+    s = rewriteSome(s, "ELT") {
+      case n :: xs if xs.nonEmpty => s"element_at(array(${xs.mkString(", ")}), CAST($n AS INT))"
     }
     // FIELD(x, a, b, ...) → array_position(array(...), x)
-    s = rewriteCalls(s, "FIELD") { args =>
-      if (args.size >= 2)
-        s"CAST(array_position(array(${args.tail.mkString(", ")}), ${args.head}) AS BIGINT)"
-      else s"FIELD(${args.mkString(", ")})"
+    s = rewriteSome(s, "FIELD") {
+      case x :: xs if xs.nonEmpty => s"CAST(array_position(array(${xs.mkString(", ")}), $x) AS BIGINT)"
     }
     // FORMAT(x, d) → format_number
-    s = rewriteCalls(s, "FORMAT") {
-      case List(x, d) => s"format_number($x, $d)"
-      case args => s"FORMAT(${args.mkString(", ")})"
-    }
+    s = rewriteSome(s, "FORMAT") { case List(x, d) => s"format_number($x, $d)" }
     // MID(s, p, l) → substring (MySQL alias Spark lacks)
-    s = rewriteCalls(s, "MID") {
-      case List(str, p, l) => s"substring($str, $p, $l)"
-      case args => s"MID(${args.mkString(", ")})"
-    }
+    s = rewriteSome(s, "MID") { case List(str, p, l) => s"substring($str, $p, $l)" }
     // DATE_ADD/DATE_SUB(d, INTERVAL n unit) → interval arithmetic
     // (sync_viewddl.go:57-67, 706-803); plain numeric second arg is native
     s = rewriteCalls(s, "DATE_ADD") {
@@ -543,10 +460,7 @@ object SqlRewriter {
     }
     // JSON_PRETTY → identity (PG jsonb_pretty has no Spark analogue; the
     // JSON text is already canonical for comparison purposes)
-    s = rewriteCalls(s, "JSON_PRETTY") {
-      case List(j) => j
-      case args => s"JSON_PRETTY(${args.mkString(", ")})"
-    }
+    s = rewriteSome(s, "JSON_PRETTY") { case List(j) => j }
     // a REGEXP b → a RLIKE b (sync_functions.go:21,505)
     s = s.replaceAll("(?i)\\bREGEXP\\b", "RLIKE")
 

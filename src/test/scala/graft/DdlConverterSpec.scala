@@ -253,6 +253,15 @@ class DdlConverterSpec extends AnyFunSuite {
       "CREATE TABLE t2 (`a``b` int, c int)")
     assert(esc.columns.map(_.name).length == 2)
     assert(esc.columns.last.name == "c")
+    // a backtick inside a "…" string is string text, not an identifier
+    val dq = DdlConverter.toPostgresDdl(DdlConverter.parse(
+      "CREATE TABLE t (a INT, CHECK (b <> \"x`y\"), c INT)"))
+    assert(dq.head.contains("CHECK (b <> \"x`y\")"), dq.head)
+    // a backslash inside a backtick identifier escapes nothing: the view
+    // keeps its table and its IFNULL still becomes COALESCE
+    val vd = DdlConverter.viewDdl("v", "SELECT `a\\` , IFNULL(b, 0) FROM t")
+    assert(vd.last == "CREATE OR REPLACE VIEW \"v\" AS SELECT \"a\\\" , COALESCE(b, 0) FROM t",
+      vd.last)
   }
 
   test("parens, commas, and keywords inside backtick identifiers are inert") {

@@ -174,6 +174,22 @@ class MigrateMatrixSpec extends AnyFunSuite with BeforeAndAfterAll {
       url, "CREATE TABLE t2 (a INT)").isSuccess)
   }
 
+  test("case: a failed sugar-stripped retry reports its own error after the original") {
+    import java.sql.DriverManager
+    val db = Files.createTempDirectory("mm_lenient").resolve("d")
+    val url = s"jdbc:derby:$db;create=true"
+    val conn = DriverManager.getConnection(url)
+    conn.createStatement().execute("CREATE TABLE t (a INT)")
+    conn.close()
+    // Derby rejects OR REPLACE; the retry without it then fails on the
+    // Spark-only STRING type, which is the cause that needs fixing
+    val r = graft.pipeline.Pipeline.execLenient(url,
+      "CREATE OR REPLACE VIEW v AS SELECT CAST(a AS STRING) AS s FROM t")
+    val msg = r.failed.get.getMessage
+    assert(msg.startsWith("Syntax error: Encountered \"OR\""), msg)
+    assert(msg.indexOf("STRING") > msg.indexOf("\"OR\""), msg)
+  }
+
   test("case: source-scan failure honors the stop-on-error policy") {
     import java.sql.DriverManager
     import graft.transfer.Transfer.Jdbc

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{Fingerprint, JsonFunctions, SortedIntersectSize}
-import graft.sqlrewrite.SqlRewriter
+import graft.sqlrewrite.{MySqlLexer, SqlRewriter}
 import graft.types.TypeMapper
 
 /** ScalaCheck property tests for the pure driver-side surfaces (SURVEY.md
@@ -67,7 +67,8 @@ class PropertySpec extends AnyFunSuite {
 
   test("maskStringLiterals round-trips arbitrary quoted SQL") {
     val fragment = Gen.oneOf("SELECT a", "x = ", ", ", "fn(", ")",
-      "'lit''eral'", "'it\\'s'", "\"dq\"", "'%Y-%m'", "b", " FROM t")
+      "'lit''eral'", "'it\\'s'", "\"dq\"", "'%Y-%m'", "b", " FROM t",
+      "`dir\\`", "/* it's \"q\" */", "-- it's a 'note'\n", "# \"x\n")
     val genSql = Gen.listOf(fragment).map(_.mkString)
     check("mask round-trip", Prop.forAll(genSql) { sql =>
       val (masked, lits) = SqlRewriter.maskStringLiterals(sql)
@@ -174,7 +175,11 @@ class PropertySpec extends AnyFunSuite {
       // apostrophes inside backtick identifiers, double quotes
       Gen.const("'it''s'"), Gen.const("'a\\'b'"), Gen.const("\"dq\""),
       Gen.const("`id`"), Gen.const("`it's`"), Gen.const("`a``b`"),
-      Gen.const("'-- not a comment'"), Gen.const("'%Y-%m'"))
+      Gen.const("'-- not a comment'"), Gen.const("'%Y-%m'"),
+      // backslashes inside backticks escape nothing; comments hold quotes
+      Gen.const("`a\\`"), Gen.const("`x\\``y`"),
+      Gen.const("-- it's `here`\n"), Gen.const("# \"dq\n"),
+      Gen.const("/* 'a', \"b\" */"))
     val genSql = Gen.listOf(frag).map(_.mkString)
     check("mask roundtrip", Prop.forAll(genSql) { sql =>
       val (masked, lits) = SqlRewriter.maskStringLiterals(sql)
@@ -182,6 +187,43 @@ class PropertySpec extends AnyFunSuite {
       // the input byte-for-byte
       val clean = !masked.contains("'") || sql.count(_ == '\'') % 2 == 1
       clean && SqlRewriter.unmask(masked, lits) == sql
+    })
+  }
+
+  // Space-separated code and non-code fragments, so which index holds code
+  // is known without lexing.
+  private val genRuns: Gen[List[(String, Boolean)]] = Gen.listOf(Gen.oneOf(
+    Gen.oneOf("SELECT a", "x =", ",", "fn(", ")", "b - c", "FROM t", "\n")
+      .map(_ -> true),
+    Gen.oneOf("'it''s'", "'a\\'b'", "\"d,q\"", "`id`", "`it's`", "`a\\`",
+      "`x``y`", "/* 'a', \"b\" */", "-- it's `here`", "# \"dq")
+      .map(_ -> false))).map(_.flatMap {
+        // a line comment needs its end of line
+        case (c, false) if c.startsWith("--") || c.startsWith("#") => List(c -> false, "\n" -> true)
+        case r => List(r)
+      })
+
+  private def render(runs: List[(String, Boolean)]): String = runs.map(_._1).mkString(" ")
+
+  test("blank mask keeps the length and blanks only non-code text") {
+    check("blank length", Prop.forAll(genRuns) { runs =>
+      val sql = render(runs)
+      val b = MySqlLexer.blank(sql)
+      b.length == sql.length && b.indices.forall(i => b(i) == sql(i) || b(i) == ' ')
+    })
+  }
+
+  test("blank mask keeps every code character at its index") {
+    check("blank code", Prop.forAll(genRuns) { runs =>
+      val sql = render(runs)
+      val b = MySqlLexer.blank(sql)
+      val starts = runs.scanLeft(0)((at, r) => at + r._1.length + 1)
+      runs.zip(starts).forall { case ((text, code), at) =>
+        val got = b.substring(at, at + text.length)
+        if (code) got == text
+        // quoted content and comments are blanked; only delimiters remain
+        else got.forall(c => c == ' ' || c == '\'' || c == '"' || c == '`')
+      }
     })
   }
 

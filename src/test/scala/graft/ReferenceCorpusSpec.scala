@@ -5,29 +5,30 @@ import org.scalatest.BeforeAndAfterAll
 import graft.sqlrewrite.SqlRewriter
 import scala.io.Source
 
-/** Parity gate against the reference's own fixture corpus: every view in
-  * `scripts/mysql/create_view.sql` (read from the read-only reference
-  * checkout at test time — never copied into this repo) must rewrite into
-  * SQL that Spark's parser accepts. Execution needs the case_* tables,
-  * which don't exist here; parseability is the round-1 bar, and it already
+/** Gate over the MySQL fixture corpus in `src/test/resources/mysql/`
+  * (written for this repo in the shape of the reference's
+  * `scripts/mysql/` scripts): every view in `create_view.sql` must
+  * rewrite into SQL that Spark's parser accepts, and the function, grant
+  * and index scripts must convert. Execution needs the case_* tables,
+  * which don't exist here; parseability is the bar, and it already
   * exceeds the reference's own guarantee (it never validated its emitted
   * text against a live parser at all).
   */
 class ReferenceCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val corpusPath = "/root/reference/scripts/mysql/create_view.sql"
-
   private lazy val spark = GraftSession("ref-corpus-spec", 2)
 
   override def afterAll(): Unit = spark.stop()
 
+  private def fixture(name: String): String = {
+    val s = Source.fromResource(s"mysql/$name", getClass.getClassLoader)
+    try s.mkString finally s.close()
+  }
+
   /** Split the script into statements on ';' at end of line, keep the
     * CREATE VIEW ones. */
   private def viewStatements(): Seq[String] = {
-    val text = {
-      val s = Source.fromFile(corpusPath, "UTF-8")
-      try s.mkString finally s.close()
-    }
+    val text = fixture("create_view.sql")
     text.split(";\\s*\\n")
       .map(_.trim)
       .filter(_.toUpperCase.contains("CREATE OR REPLACE VIEW"))
@@ -41,19 +42,15 @@ class ReferenceCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(views.size >= 10, s"expected >=10 views, got ${views.size}")
   }
 
-  /** The reference's stored-function fixture corpus
-    * (`scripts/mysql/create_function.sql`, 3 functions exercising 5.7/8.0
-    * reserved words, mixed joins, COALESCE, ORDER/LIMIT) must convert into
+  /** The stored-function fixture corpus (`create_function.sql`, 3
+    * functions exercising 5.7/8.0 reserved words, mixed joins, COALESCE,
+    * ORDER/LIMIT) must convert into
     * structurally sound PL/pgSQL through FunctionDdl — signature, RETURNS,
     * volatility from READS SQL DATA, hoisted DECLAREs, preserved
     * SELECT..INTO, and no MySQL client syntax left behind. */
   test("every reference fixture function converts to PL/pgSQL") {
     import graft.ddl.FunctionDdl
-    val text = {
-      val s = Source.fromFile(
-        "/root/reference/scripts/mysql/create_function.sql", "UTF-8")
-      try s.mkString finally s.close()
-    }
+    val text = fixture("create_function.sql")
     val blocks = "(?is)CREATE\\s+FUNCTION.*?END\\s*//".r
       .findAllIn(text).toSeq
     assert(blocks.size == 3, s"expected the 3 fixture functions, got ${blocks.size}")
@@ -80,18 +77,14 @@ class ReferenceCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(combined.contains("ORDER BY") && combined.contains("LIMIT 1"))
   }
 
-  /** The reference's user/grant fixture corpus
-    * (`scripts/mysql/create_user.sql`): every GRANT statement in it must
+  /** The user/grant fixture corpus (`create_user.sql`): every GRANT
+    * statement in it must
     * convert through userDdl into non-empty PG statements, with the
     * ALL PRIVILEGES form expanding to the table+sequence pair the
     * reference emits (sync_user_privilege.go:28-41). */
   test("every reference fixture grant converts through userDdl") {
     import graft.ddl.DdlConverter
-    val text = {
-      val s = Source.fromFile(
-        "/root/reference/scripts/mysql/create_user.sql", "UTF-8")
-      try s.mkString finally s.close()
-    }
+    val text = fixture("create_user.sql")
     val grants = text.linesIterator
       .map(_.trim).filter(_.toUpperCase.startsWith("GRANT ")).toSeq
     assert(grants.size >= 8, s"expected >=8 fixture grants, got ${grants.size}")
@@ -216,6 +209,13 @@ class ReferenceCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     val curIdx = cu.ddl.indexOf("c CURSOR FOR")
     assert(declIdx >= 0 && curIdx >= 0 && declIdx < curIdx,
       s"cursor declared before the variable it references:\n${cu.ddl}")
+    // an apostrophe inside a backtick parameter opens no literal that
+    // would hide RETURNS and BEGIN
+    val ap = FunctionDdl.convert(
+      "CREATE FUNCTION f(`it's` INT) RETURNS INT DETERMINISTIC BEGIN RETURN `it's` + 1; END")
+      .getOrElse(fail("backtick parameter with an apostrophe did not convert"))
+    assert(ap.ddl.contains("f(\"it's\" INT)") && ap.ddl.contains("RETURN \"it's\" + 1;"),
+      ap.ddl)
   }
 
   test("FunctionDdl procedural subset: loop control, user vars, ROW_COUNT") {

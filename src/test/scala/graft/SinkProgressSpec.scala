@@ -118,7 +118,7 @@ class SinkProgressSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("index corpus: reference CREATE INDEX statements convert cleanly") {
     val text = {
-      val s = Source.fromFile("/root/reference/scripts/mysql/create_index.sql", "UTF-8")
+      val s = Source.fromResource("mysql/create_index.sql", getClass.getClassLoader)
       try s.mkString finally s.close()
     }
     val stmts = text.replaceAll("(?m)^\\s*--.*$", "").split(";")

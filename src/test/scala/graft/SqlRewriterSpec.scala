@@ -9,6 +9,15 @@ class SqlRewriterSpec extends AnyFunSuite {
   test("LIMIT offset,n → LIMIT n OFFSET offset") {
     assert(rewrite("SELECT a FROM t LIMIT 5, 100").contains("LIMIT 100 OFFSET 5"))
     assert(rewrite("select a from t limit 0,10").contains("LIMIT 10 OFFSET 0"))
+    // a backslash inside a backtick identifier escapes nothing
+    assert(rewrite("SELECT `dir\\` AS d, IFNULL(x, 1) AS y FROM t LIMIT 5, 10") ==
+      "SELECT `dir\\` AS d, IFNULL(x, 1) AS y FROM t LIMIT 10 OFFSET 5")
+    // comments are masked and restored verbatim, closer included, and an
+    // apostrophe inside one opens no literal
+    assert(rewrite("SELECT /* note */ IFNULL(x, 1) AS y FROM t LIMIT 5, 10") ==
+      "SELECT /* note */ IFNULL(x, 1) AS y FROM t LIMIT 10 OFFSET 5")
+    assert(rewrite("SELECT x -- it's a note\nFROM t LIMIT 5, 10") ==
+      "SELECT x -- it's a note\nFROM t LIMIT 10 OFFSET 5")
   }
 
   test("LIMIT inside a string literal is untouched") {
