@@ -334,41 +334,41 @@ object Catalog {
   def executeDdl(url: String, ddl: String): Unit =
     withConnection(url)(_.createStatement().execute(ddl))
 
-  /** K6: existence probe driving skip-vs-drop (`TableExists`,
-    * postgres/connection.go:357-373; logic manager.go:1228-1278). */
-  def tableExists(url: String, table: String): Boolean =
+  /** K6: the name `table` is stored under on `url`, if any (`TableExists`,
+    * postgres/connection.go:357-373; skip-vs-create, manager.go:1228-1278).
+    * The one table lookup: [[tableExists]], [[rowCount]], Transfer's JDBC
+    * references and the privileges stage all resolve through it. Escaped
+    * name-pattern probes in the current schema (where an unqualified
+    * reference resolves), O(1) metadata rows each: the name as given first,
+    * so a stored name wins over its case variants, then upper and lower
+    * case; a mixed-case stored name falls back to a case-insensitive walk
+    * of the schema, O(|schema|) rows paid on every miss. */
+  def resolveTable(url: String, table: String): Option[String] =
     withConnection(url) { conn =>
       val md = conn.getMetaData
-      // name-pattern probes (O(1) metadata rows each) instead of walking
-      // the full table list per call — the schema stage calls this once
-      // per table, which was O(N²) metadata rows. JDBC patterns treat
-      // _/% as wildcards, so real name characters are escaped, and the
-      // three casings cover drivers that store identifiers folded.
       val esc = Option(md.getSearchStringEscape).getOrElse("\\")
-      def probe(p: String): Boolean = {
-        val q = p.replace(esc, esc + esc)
-          .replace("_", esc + "_").replace("%", esc + "%")
-        val rs = md.getTables(null, null, q, Array("TABLE"))
-        try rs.next() finally rs.close()
-      }
-      probe(table) || probe(table.toUpperCase) || probe(table.toLowerCase) || {
-        // a MIXED-case stored identifier (stored 'MyTable', caller passes
-        // 'MYTABLE') matches none of the three case-sensitive probes —
-        // fall back to the pre-probe full-list equalsIgnoreCase scan so
-        // the fast path never loses a table the slow path found.
-        // COST: the fallback pays O(|catalog|) metadata rows on every
-        // negative probe (the common case in a fresh migration's schema
-        // stage) — exactly the pre-probe behavior, so worst case equals
-        // the old cost while positive probes stay O(1)
-        val rs = md.getTables(null, null, "%", Array("TABLE"))
+      def pattern(p: String) =
+        p.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")
+      // MySQL's connector reports databases as catalogs and has no schema
+      val schema = scala.util.Try(conn.getSchema).toOption.flatMap(Option(_))
+      val catalog = scala.util.Try(conn.getCatalog).toOption.filter(_ => schema.isEmpty)
+      // hits are checked by name: without an escape character a pattern
+      // matches more than its name
+      def first(p: String): Option[String] = {
+        val rs = md.getTables(catalog.orNull, schema.map(pattern).orNull, p, Array("TABLE"))
         try {
-          var found = false
-          while (!found && rs.next())
-            found = table.equalsIgnoreCase(rs.getString("TABLE_NAME"))
-          found
+          var hit: Option[String] = None
+          while (hit.isEmpty && rs.next())
+            hit = Some(rs.getString("TABLE_NAME")).filter(_.equalsIgnoreCase(table))
+          hit
         } finally rs.close()
       }
+      (Seq(table, table.toUpperCase, table.toLowerCase).distinct.map(pattern) :+ "%")
+        .view.flatMap(first).headOption
     }
+
+  /** K6 as a yes/no: does `url` hold `table`, in any case? */
+  def tableExists(url: String, table: String): Boolean = resolveTable(url, table).isDefined
 
   /** S13: version probe (< 1 s test_only path, `cmd/main.go:96-144`). */
   def version(url: String): String =
@@ -377,10 +377,16 @@ object Catalog {
       s"${md.getDatabaseProductName} ${md.getDatabaseProductVersion}"
     }
 
-  /** S11: row count through plain JDBC (the validation-side count). */
+  /** S11: row count through plain JDBC of `table`, named as Transfer
+    * names it: resolved, and quoted by the dialect. */
   def rowCount(url: String, table: String): Long =
+    countRows(url, org.apache.spark.sql.jdbc.JdbcDialects.get(url)
+      .quoteIdentifier(resolveTable(url, table).getOrElse(table)))
+
+  /** `SELECT COUNT(*)` of a finished SQL table reference. */
+  private[graft] def countRows(url: String, ref: String): Long =
     withConnection(url) { conn =>
-      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $table")
+      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $ref")
       rs.next(); rs.getLong(1)
     }
 

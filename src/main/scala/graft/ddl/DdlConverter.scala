@@ -60,15 +60,15 @@ object DdlConverter {
   }
 
   /** Backtick identifiers → PG double quotes (`` escapes unfolded, `"`
-    * doubled); strings and comments stay verbatim. */
+    * doubled), `#` comments → `--` comments; strings stay verbatim. */
   private[ddl] def requoteIdents(sql: String): String = pgQuoted(sql)(identity)
 
   /** PG-dialect scrub of [[graft.sqlrewrite.SqlRewriter.rewrite]] output:
     * the rewriter targets Spark SQL, which natively accepts IFNULL and
     * backtick identifiers, so it leaves them — PostgreSQL accepts neither.
     * Only the unambiguous swaps live here (backtick → double quote, IFNULL
-    * → COALESCE), and only in code: 'use IFNULL(..)' inside a string
-    * survives. */
+    * → COALESCE, `#` comment → `--` comment, since PostgreSQL reads `#` as
+    * XOR), and only in code: 'use IFNULL(..)' inside a string survives. */
   private[ddl] def pgScrub(sql: String): String =
     pgQuoted(sql)(_.replaceAll("(?i)\\bIFNULL\\s*\\(", "COALESCE("))
 
@@ -79,6 +79,7 @@ object DdlConverter {
         case MySqlLexer.Ident =>
           val name = text.substring(1, if (r.closed) text.length - 1 else text.length)
           "\"" + name.replace("``", "`").replace("\"", "\"\"") + "\""
+        case MySqlLexer.Comment if text.startsWith("#") => "--" + text.substring(1)
         case _ => text
       }
     }
@@ -198,7 +199,8 @@ object DdlConverter {
     // fabricate a clause) and their text EXTRACTED from the raw string by
     // index — maskedRest is same-length by construction
     val maskedRest = upperRest // same blank mask, uppercase is index-safe
-    val generated = "(?i)GENERATED\\s+ALWAYS\\s+AS\\s*(\\(.*\\))\\s*(VIRTUAL|STORED)?".r
+    // `GENERATED ALWAYS` is optional in MySQL: `c int AS (expr)` is one too
+    val generated = "(?i)(?:\\bGENERATED\\s+ALWAYS\\s+)?\\bAS\\s*(\\(.*\\))\\s*(VIRTUAL|STORED)?".r
       .findFirstMatchIn(maskedRest)
       .map(m => rest.substring(m.start(1), m.end(1))) // VIRTUAL→STORED at emit (:627-673)
 
@@ -231,11 +233,11 @@ object DdlConverter {
     (spec.columns.map(_.name).map(n => n -> (if (lowercase) n.toLowerCase else n))
       :+ (spec.name -> (if (lowercase) spec.name.toLowerCase else spec.name))).toMap
 
-  /** Transfer-facing StructType; `mysqlCompat = true` keeps MySQL's own
-    * runtime typing (tinyint(1) numeric, native TIME) for serving the
-    * source's views rather than the PG-target mapping. */
+  /** Transfer-facing StructType, without the generated columns the target
+    * computes. `mysqlCompat = true` serves the source's views: MySQL's own
+    * runtime typing (tinyint(1) numeric, native TIME), generated columns kept. */
   def toStructType(spec: TableSpec, mysqlCompat: Boolean = false): StructType =
-    StructType(spec.columns.filter(_.generated.isEmpty).map { c =>
+    StructType(spec.columns.filter(c => mysqlCompat || c.generated.isEmpty).map { c =>
       val m = new MetadataBuilder()
       c.comment.foreach(m.putString("comment", _))
       c.default.foreach(m.putString("default", _))

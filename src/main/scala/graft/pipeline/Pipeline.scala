@@ -298,15 +298,11 @@ object Pipeline {
           // reference: manager.go:697-786; rows for tables absent from the
           // target are skipped, not failed (manager.go:1638-1645)
           ddlStage("privileges") { sj =>
-            // one metadata read for the whole stage, not one connection +
-            // full getTables walk per privilege row; keep the TARGET's
-            // stored casing so the emitted quoted GRANT names the table
-            // that actually exists (a lowercased target would otherwise
+            // the TARGET's stored name, so the emitted quoted GRANT names
+            // the table that exists (a lowercased target would otherwise
             // get GRANT ... ON "Orders" and fail)
-            val dstByLower = Catalog.listTables(dstJdbc.get.url)
-              .map(t => t.toLowerCase -> t).toMap
             Catalog.listTablePrivileges(sj.url)
-              .flatMap(p => dstByLower.get(p.table.toLowerCase).map(p -> _))
+              .flatMap(p => Catalog.resolveTable(dstJdbc.get.url, p.table).map(p -> _))
               .map { case (p, dstName) =>
                 (s"${p.user}/$dstName",
                   DdlConverter.tablePrivDdl(p.user, dstName, p.privCsv), false)

@@ -109,6 +109,18 @@ object MySqlLexer {
     new String(out)
   }
 
+  private val Escapes = Map("n" -> "\n", "t" -> "\t", "r" -> "\r", "b" -> "\b",
+    "0" -> "\u0000", "Z" -> "\u001a", "%" -> "\\%", "_" -> "\\_")
+
+  /** The value of one MySQL string literal, quotes included: its doubled
+    * quote and backslash escapes decoded (`\%`, `\_` keep the backslash). */
+  def stringValue(literal: String): String = {
+    val q = java.util.regex.Pattern.quote(literal.take(1) * 2)
+    s"(?s)\\\\(.)|$q".r.replaceAllIn(literal.substring(1, literal.length - 1), m =>
+      java.util.regex.Matcher.quoteReplacement(
+        Option(m.group(1)).fold(literal.take(1))(e => Escapes.getOrElse(e, e))))
+  }
+
   /** `s` with every comment dropped and every version comment unwrapped:
     * its marker goes, its closer becomes a space, its content stays. */
   def stripComments(s: String): String = render(s) { (r, text) =>

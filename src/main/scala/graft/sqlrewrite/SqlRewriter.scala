@@ -177,7 +177,7 @@ object SqlRewriter {
             sb.append(mysqlFmt.charAt(i)); i += 1
           }
           sb.append('\'')
-        } else { sb.append(c); i += 1 }
+        } else { sb.append(if (c == '\'') "''" else c); i += 1 } // ' is '' in Java
       }
     }
     sb.toString
@@ -198,9 +198,11 @@ object SqlRewriter {
     Token.replaceAllIn(arg, mm => {
       val raw = lits(mm.group(1).toInt)
       if (raw.length >= 2 && (raw.head == '\'' || raw.head == '"')) {
-        val inner = raw.substring(1, raw.length - 1)
+        // MySQL escapes decoded, then re-escaped for Spark SQL, where ''
+        // ends one literal and starts the next
+        val fmt = translateDateFormat(MySqlLexer.stringValue(raw))
         java.util.regex.Matcher.quoteReplacement(
-          "'" + translateDateFormat(inner).replace("'", "''") + "'")
+          "'" + fmt.replace("\\", "\\\\").replace("'", "\\'") + "'")
       } else java.util.regex.Matcher.quoteReplacement(mm.matched)
     })
 

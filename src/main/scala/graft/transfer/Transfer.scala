@@ -3,6 +3,8 @@ package graft.transfer
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.jdbc.JdbcDialects
+import graft.catalog.Catalog
 
 /** Table-transfer dataflow — the reference's hot path E2 (SURVEY.md §3:
   * `SyncTableData` sync_data.go:23-385) re-expressed as one distributed job
@@ -47,6 +49,8 @@ object Transfer {
       schema: Option[StructType] = None) extends Endpoint
   /** ORC directory endpoint — lossless columnar alternative to parquet. */
   final case class OrcDir(dir: String) extends Endpoint
+  /** `table` is a template: `%s` stands for the named table's SQL
+    * reference ([[pin]]); a template without `%s` is used verbatim. */
   final case class Jdbc(url: String, table: String,
       partitionColumn: Option[String] = None,
       numPartitions: Int = 4,
@@ -59,7 +63,7 @@ object Transfer {
 
   // ------------------------------------------------------------- reading
 
-  def read(spark: SparkSession, src: Endpoint, table: String): DataFrame = src match {
+  def read(spark: SparkSession, src: Endpoint, table: String): DataFrame = bind(src, table) match {
     case ParquetDir(dir) => graft.sources.Tables.load(spark, dir, table)
     case CsvDir(dir, schema) =>
       val r = spark.read.option("header", "true")
@@ -76,16 +80,14 @@ object Transfer {
       // unsigned widening, spatial→binary) via the custom dialect
       if (graft.types.MySqlGraftDialect.canHandle(j.url))
         graft.types.MySqlGraftDialect.install()
-      val base = spark.read.format("jdbc")
-        .option("url", j.url).option("dbtable", j.table.replace("%s", table))
+      val base = spark.read.format("jdbc").option("url", j.url).option("dbtable", j.table)
       j.partitionColumn match {
         case Some(pc) =>
           // range-partitioned scan: Spark's subsumption of keyset pagination.
           // Quote per target dialect (Derby et al. uppercase bare idents).
-          val qpc = org.apache.spark.sql.jdbc.JdbcDialects.get(j.url).quoteIdentifier(pc)
+          val qpc = JdbcDialects.get(j.url).quoteIdentifier(pc)
           val bounds = spark.read.format("jdbc").option("url", j.url)
-            .option("query",
-              s"SELECT MIN($qpc) AS lo, MAX($qpc) AS hi FROM ${j.table.replace("%s", table)}")
+            .option("query", s"SELECT MIN($qpc) AS lo, MAX($qpc) AS hi FROM ${j.table}")
             .load().collect().head
           if (bounds.isNullAt(0)) base.load()
           else base
@@ -135,7 +137,7 @@ object Transfer {
   // ------------------------------------------------------------- writing
 
   def write(df: DataFrame, dst: Endpoint, table: String, truncate: Boolean): Unit =
-    dst match {
+    bind(dst, table) match {
       case ParquetDir(dir) =>
         df.write.mode(if (truncate) SaveMode.Overwrite else SaveMode.Append)
           .parquet(s"$dir/$table.parquet")
@@ -153,8 +155,7 @@ object Transfer {
       case OrcDir(dir) =>
         df.write.mode(if (truncate) SaveMode.Overwrite else SaveMode.Append)
           .orc(s"$dir/$table.orc")
-      case j: Jdbc =>
-        BatchSink.write(df, j.url, j.table.replace("%s", table), j.batchSize, truncate)
+      case j: Jdbc => BatchSink.write(df, j.url, j.table, j.batchSize, truncate)
     }
 
   // ---------------------------------------------------------- validation
@@ -176,9 +177,8 @@ object Transfer {
   /** Write `df` to `dst`; (count, checksum) of exactly the rows written:
     * folded by the JDBC sink itself, `observe()`d on Spark's file writers. */
   private def writeCounted(df: DataFrame, dst: Endpoint, table: String,
-                           truncate: Boolean): (Long, Long) = dst match {
-    case j: Jdbc =>
-      BatchSink.write(df, j.url, j.table.replace("%s", table), j.batchSize, truncate)
+                           truncate: Boolean): (Long, Long) = bind(dst, table) match {
+    case j: Jdbc => BatchSink.write(df, j.url, j.table, j.batchSize, truncate)
     case _ =>
       val obs = org.apache.spark.sql.Observation()
       write(df.observe(obs, count(lit(1)).as("n"), BatchSink.checksumCol(df).as("chk")),
@@ -216,63 +216,16 @@ object Transfer {
   }
 
   /** Does the endpoint already hold `table`? Parquet: directory existence.
-    * JDBC: catalog metadata lookup. This is the ONLY signal syncIncrement
-    * treats as "destination absent" — transient read errors (network, auth,
-    * corrupt files) propagate instead of silently triggering a duplicate
-    * full load. */
+    * JDBC: [[Catalog.tableExists]], in any case. This is the ONLY signal
+    * syncIncrement treats as "destination absent" — transient read errors
+    * (network, auth, corrupt files) propagate instead of silently
+    * triggering a duplicate full load. */
   def exists(spark: SparkSession, ep: Endpoint, table: String): Boolean = ep match {
     case ParquetDir(dir) => pathExists(spark, s"$dir/$table.parquet")
     case CsvDir(dir, _)  => pathExists(spark, s"$dir/$table.csv")
     case JsonDir(dir, _) => pathExists(spark, s"$dir/$table.json")
     case OrcDir(dir)     => pathExists(spark, s"$dir/$table.orc")
-    case j: Jdbc =>
-      val parts = j.table.replace("%s", table).split('.')
-      val bare = parts.last.replaceAll("[\"`]", "")
-      // honor a schema qualifier if present: `archive.t` existing must not
-      // make `public.t` look present (case-insensitive compare rather than
-      // a getTables pattern — drivers disagree on pattern case folding)
-      val qualifier =
-        if (parts.length > 1) parts(parts.length - 2).replaceAll("[\"`]", "")
-        else null
-      val conn = java.sql.DriverManager.getConnection(j.url)
-      try {
-        // unqualified names resolve against the connection's CURRENT
-        // schema, not any schema: a same-named table in an unrelated
-        // schema (archive.t) must not make an unqualified `t` look
-        // present — syncIncrement would then query a table the
-        // connection can't resolve instead of running its full load.
-        // Filtered in the loop (not via schemaPattern) because drivers
-        // disagree on pattern case folding; getSchema() may be null on
-        // old drivers, which degrades to the any-schema match.
-        // MySQL's driver reports databases as CATALOGS (TABLE_SCHEM is
-        // null and getSchema() is null) — the qualifier must match EITHER
-        // namespace column, and the unqualified fallback tries the
-        // connection's current catalog when it has no current schema
-        val schema =
-          if (qualifier != null) qualifier
-          else {
-            val s0 = try conn.getSchema catch { case _: Throwable => null }
-            if (s0 != null) s0
-            else try conn.getCatalog catch { case _: Throwable => null }
-          }
-        val rs = conn.getMetaData.getTables(null, null, null, Array("TABLE"))
-        try {
-          var found = false
-          while (!found && rs.next())
-            found = bare.equalsIgnoreCase(rs.getString("TABLE_NAME")) && {
-              // the catalog column substitutes for the schema ONLY when
-              // the driver reports no schema at all (MySQL): on engines
-              // that populate TABLE_SCHEM, matching TABLE_CAT too would
-              // make a same-named table in ANY schema look present
-              // whenever the qualifier equals the database name
-              val rowSchema = rs.getString("TABLE_SCHEM")
-              schema == null ||
-                (if (rowSchema != null) schema.equalsIgnoreCase(rowSchema)
-                 else schema.equalsIgnoreCase(rs.getString("TABLE_CAT")))
-            }
-          found
-        } finally rs.close()
-      } finally conn.close()
+    case j: Jdbc         => Catalog.tableExists(j.url, table)
   }
 
   private def pathExists(spark: SparkSession, path: String): Boolean = {
@@ -289,6 +242,25 @@ object Transfer {
     case JsonDir(d, None) => JsonDir(d, Some(schema))
     case other => other
   }
+
+  /** The name `table` is stored under on a JDBC endpoint, else `table` as
+    * given, which is the name the schema stage creates. */
+  private def stored(ep: Endpoint, table: String): String = ep match {
+    case j: Jdbc if j.table.contains("%s") =>
+      Catalog.resolveTable(j.url, table).getOrElse(table)
+    case _ => table
+  }
+
+  /** The one SQL reference of a table: `name` quoted by the JDBC
+    * endpoint's dialect, in its template. File endpoints pass through. */
+  private def pin(ep: Endpoint, name: String): Endpoint = ep match {
+    case j: Jdbc =>
+      j.copy(table = j.table.replace("%s", JdbcDialects.get(j.url).quoteIdentifier(name)))
+    case other => other
+  }
+
+  /** `ep` with `table` resolved and pinned; a pinned endpoint binds to itself. */
+  private def bind(ep: Endpoint, table: String): Endpoint = pin(ep, stored(ep, table))
 
   /** Incremental (keyset-resume) sync: append only source rows whose key
     * exceeds the destination's current maximum — the reference's
@@ -376,15 +348,20 @@ object Transfer {
                 truncate: Boolean = true,
                 pointCols: Seq[String] = Nil,
                 validateChecksum: Boolean = true): TransferResult = {
-    val df1 = decodePoints(zeroDatesToNull(read(spark, src, table)), pointCols)
-    val rowsHint = src match {
-      case j: Jdbc => graft.catalog.Catalog.rowCount(j.url, j.table.replace("%s", table))
+    // one resolution per side: the write and the read-back land in the
+    // table that exists, else under the source's name, as the schema stage
+    // names it
+    val name = stored(src, table)
+    val (s, d) = (pin(src, name), bind(dst, name))
+    val df1 = decodePoints(zeroDatesToNull(read(spark, s, table)), pointCols)
+    val rowsHint = s match {
+      case j: Jdbc => Catalog.countRows(j.url, j.table)
       case _ =>
         // Catalyst strips the conversion projections under a bare count,
         // so file sources answer from row-group metadata (no scan)
         val n = df1.count()
         if (n == 0L) { // empty-table shortcut (sync_data.go:64-113)
-          write(df1, dst, table, truncate)
+          write(df1, d, table, truncate)
           return TransferResult(table, 0L, 0L, checksumMatch = true)
         }
         n
@@ -397,19 +374,19 @@ object Transfer {
     // the whole encode+write through one task). Only ever scales UP —
     // collapsing an already-parallel source would serialize the write.
     val width = math.max(df1.schema.defaultSize, 20 * df1.schema.size)
-    val targetBytes = dst match {
+    val targetBytes = d match {
       case _: Jdbc => 64L << 20
       case _ => 16L << 20
     }
-    val target = graft.catalog.Catalog.suggestNumPartitions(
+    val target = Catalog.suggestNumPartitions(
       rowsHint, width, targetBytesPerPartition = targetBytes)
     val reshuffle = target > df1.queryExecution.toRdd.getNumPartitions
-    val snapshot = reshuffle && src.isInstanceOf[Jdbc]
+    val snapshot = reshuffle && s.isInstanceOf[Jdbc]
     if (snapshot) df1.persist()
     try {
       val df = if (reshuffle) df1.repartition(target) else df1
-      val (srcRows, srcSum) = writeCounted(df, dst, table, truncate)
-      val (dstRows, dstSum) = stats(read(spark, typed(dst, df.schema), table))
+      val (srcRows, srcSum) = writeCounted(df, d, table, truncate)
+      val (dstRows, dstSum) = stats(read(spark, typed(d, df.schema), table))
       val ok = !validateChecksum || srcSum == dstSum
       TransferResult(table, srcRows, dstRows, ok && srcRows == dstRows)
     } finally if (snapshot) df1.unpersist()

@@ -8,10 +8,11 @@ import graft.sqlrewrite.SqlRewriter
 import scala.io.Source
 import scala.util.{Failure, Success, Try}
 
-/** End-to-end corpus gate: the reference's 63-case `create_table.sql` DDL
-  * corpus (read from the read-only checkout at test time) is parsed by
-  * [[DdlConverter]] into StructTypes, materialized as empty temp views, and
-  * then the 11 fixture views from `create_view.sql` are rewritten by
+/** End-to-end corpus gate: the 63-case `create_table.sql` DDL corpus in
+  * `src/test/resources/mysql/` (written for this repo in the shape of the
+  * reference's `scripts/mysql/` scripts) is parsed by [[DdlConverter]] into
+  * StructTypes, materialized as empty temp views, and then the fixture
+  * views from `create_view.sql` are rewritten by
   * [[SqlRewriter]] and *executed* against those schemas. This is the full
   * schema+dialect pipeline the reference implements, driven one step
   * further than the reference itself ever could (it only emitted text).
@@ -22,8 +23,8 @@ import scala.util.{Failure, Success, Try}
   */
 class CorpusExecutionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val tablesPath = "/root/reference/scripts/mysql/create_table.sql"
-  private val viewsPath = "/root/reference/scripts/mysql/create_view.sql"
+  private val tablesPath = "mysql/create_table.sql"
+  private val viewsPath = "mysql/create_view.sql"
 
   private lazy val spark = GraftSession("corpus-exec-spec", 2,
     Map("spark.sql.ansi.enabled" -> "false", "spark.sql.timeType.enabled" -> "true"))
@@ -32,7 +33,7 @@ class CorpusExecutionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def readStatements(path: String): Seq[String] = {
     val text = {
-      val s = Source.fromFile(path, "UTF-8")
+      val s = Source.fromResource(path, getClass.getClassLoader)(scala.io.Codec.UTF8)
       try s.mkString finally s.close()
     }
     text

@@ -82,6 +82,12 @@ class DdlConverterSpec extends AnyFunSuite {
     assert(ddl.contains("GENERATED ALWAYS AS (c1 + 1) STORED")) // VIRTUAL rewritten
     // generated columns excluded from the transfer StructType
     assert(DdlConverter.toStructType(spec).fieldNames.toSeq == Seq("c1"))
+    // but kept where the source's views read them
+    assert(DdlConverter.toStructType(spec, mysqlCompat = true).fieldNames.toSeq ==
+      Seq("c1", "c2", "c3"))
+    // the short form without GENERATED ALWAYS is a generated column too
+    val short = parse("CREATE TABLE t (c1 int, c4 varchar(20) AS (concat('n', c1)) VIRTUAL)")
+    assert(short.columns.map(_.generated) == Seq(None, Some("(concat('n', c1))")))
   }
 
   test("case_16: partition clause removed; case_17: TEMPORARY kept") {
@@ -262,6 +268,9 @@ class DdlConverterSpec extends AnyFunSuite {
     val vd = DdlConverter.viewDdl("v", "SELECT `a\\` , IFNULL(b, 0) FROM t")
     assert(vd.last == "CREATE OR REPLACE VIEW \"v\" AS SELECT \"a\\\" , COALESCE(b, 0) FROM t",
       vd.last)
+    // PostgreSQL reads # as XOR: a MySQL # comment becomes a -- comment
+    assert(DdlConverter.viewDdl("v", "SELECT a # note\nFROM t").last ==
+      "CREATE OR REPLACE VIEW \"v\" AS SELECT a -- note\nFROM t")
   }
 
   test("parens, commas, and keywords inside backtick identifiers are inert") {

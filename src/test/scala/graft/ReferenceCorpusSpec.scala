@@ -216,6 +216,14 @@ class ReferenceCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrElse(fail("backtick parameter with an apostrophe did not convert"))
     assert(ap.ddl.contains("f(\"it's\" INT)") && ap.ddl.contains("RETURN \"it's\" + 1;"),
       ap.ddl)
+    // a MySQL # comment in the body becomes a PL/pgSQL -- comment
+    val hc = FunctionDdl.convert(
+      """CREATE FUNCTION f5(p INT) RETURNS INT
+        |BEGIN
+        |  # bump it
+        |  RETURN p + 1;
+        |END""".stripMargin).get
+    assert(hc.ddl.contains("-- bump it") && !hc.ddl.contains("#"), hc.ddl)
   }
 
   test("FunctionDdl procedural subset: loop control, user vars, ROW_COUNT") {

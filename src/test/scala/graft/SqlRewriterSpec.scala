@@ -1,10 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
 import graft.sqlrewrite.SqlRewriter
 import graft.sqlrewrite.SqlRewriter.{rewrite, translateDateFormat}
 
-class SqlRewriterSpec extends AnyFunSuite {
+class SqlRewriterSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val spark = GraftSession("sql-rewriter-spec", 1)
+
+  override def afterAll(): Unit = spark.stop()
 
   test("LIMIT offset,n → LIMIT n OFFSET offset") {
     assert(rewrite("SELECT a FROM t LIMIT 5, 100").contains("LIMIT 100 OFFSET 5"))
@@ -82,6 +87,13 @@ class SqlRewriterSpec extends AnyFunSuite {
       "SELECT date_format(current_timestamp(), 'HH:mm:ss') FROM t")
     assert(rewrite("SELECT DATE_FORMAT(d, '%Y-%m-%d') FROM t") ==
       "SELECT date_format(d, 'yyyy-MM-dd') FROM t")
+  }
+
+  test("DATE_FORMAT decodes MySQL escapes in its pattern") {
+    // a backslash-escaped and a doubled quote both mean one apostrophe
+    for (fmt <- Seq("'%Y\\'s'", "'%Y''s'"))
+      assert(SqlRewriter.sql(spark, s"SELECT DATE_FORMAT(DATE '2024-01-01', $fmt) AS y")
+        .head().getString(0) == "2024's", fmt)
   }
 
   test("STR_TO_DATE → to_timestamp with translated pattern") {

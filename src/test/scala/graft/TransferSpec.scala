@@ -275,6 +275,13 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
       partitionColumn = Some("n_nationkey"), numPartitions = 4), "nation")
     assert(part.rdd.getNumPartitions == 4)
     assert(part.count() == 25)
+    // a table pre-created in another case receives the rows; none is added
+    val conn = java.sql.DriverManager.getConnection(url)
+    try conn.createStatement().execute("CREATE TABLE \"Region\" (R_REGIONKEY INT, R_NAME VARCHAR(25))")
+    finally conn.close()
+    val rr = Transfer.copyTable(spark, ParquetDir(sf), jdbc, "region", truncate = false)
+    assert(rr == Transfer.TransferResult("region", 5L, 5L, checksumMatch = true))
+    assert(graft.catalog.Catalog.listTables(url) == Seq("Region", "nation"))
   }
 
   test("empty-table shortcut") {
@@ -393,6 +400,28 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
       rs.next()
       assert(rs.getInt(1) == 5)
     } finally dst.close()
+    val stages = Seq("schema", "data", "validate")
+    // lowercase_columns: the data lands in the schema stage's lowercased table
+    val lowUrl = s"jdbc:derby:${Files.createTempDirectory("xfer_nulls_low")}/d;create=true"
+    val low = Pipeline.run(spark, Jdbc(srcUrl, "%s"), Jdbc(lowUrl, "%s"),
+      Pipeline.Config(stopOnError = false, stages = stages, lowercaseColumns = true), tables)
+    assert(low.stats.forall(_.failures.isEmpty), low.stats)
+    assert(low.results.map(r => (r.table, r.dstRows, r.checksumMatch)) == Seq(("NULLS", 20L, true)))
+    assert(graft.catalog.Catalog.listTables(lowUrl) == Seq("nulls"))
+    assert(graft.catalog.Catalog.rowCount(lowUrl, "nulls") == 20)
+    // a quoted lowercase source table is read and written under its own name
+    val src = java.sql.DriverManager.getConnection(srcUrl)
+    try {
+      src.createStatement().execute(
+        "CREATE TABLE \"accounts\" (id INT NOT NULL PRIMARY KEY, email VARCHAR(80))")
+      src.createStatement().execute(
+        "INSERT INTO \"accounts\" VALUES (1, 'a@x.io'), (2, 'b@x.io'), (3, NULL)")
+    } finally src.close()
+    val acc = Pipeline.run(spark, Jdbc(srcUrl, "%s"), Jdbc(dstUrl, "%s"),
+      Pipeline.Config(stopOnError = false, stages = stages), Seq("accounts"))
+    assert(acc.stats.forall(_.failures.isEmpty), acc.stats)
+    assert(acc.results == Seq(Transfer.TransferResult("accounts", 3L, 3L, checksumMatch = true)))
+    assert(graft.catalog.Catalog.listTables(dstUrl) == Seq("NULLS", "accounts"))
   }
 
   test("stats fold equals bit_xor(xxhash64(*)) over every atomic type, nulls and a struct") {
@@ -495,6 +524,8 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(report.inconsistent.isEmpty)
     // reference S13-style probe against the freshly-written target
     assert(graft.catalog.Catalog.rowCount(jdbc.url, "nation") == 25)
+    // the rows land in the schema stage's tables; no second table appears
+    assert(graft.catalog.Catalog.listTables(jdbc.url) == Seq("nation", "region"))
   }
 
   test("stored-function scalar accessors (reference UDF surface)") {
