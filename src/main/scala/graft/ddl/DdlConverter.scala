@@ -79,7 +79,12 @@ object DdlConverter {
         case MySqlLexer.Ident =>
           val name = text.substring(1, if (r.closed) text.length - 1 else text.length)
           "\"" + name.replace("``", "`").replace("\"", "\"\"") + "\""
-        case MySqlLexer.Comment if text.startsWith("#") => "--" + text.substring(1)
+        // a line comment runs to a newline: `#` is spelled ` --` (the space
+        // keeps `a-#x` from becoming `a---x`), and one that ends the text
+        // gets its newline, so what a caller appends stays code
+        case MySqlLexer.Comment if !text.startsWith("/*") =>
+          (if (text.startsWith("#")) " --" + text.substring(1) else text) +
+            (if (r.end == sql.length) "\n" else "")
         case _ => text
       }
     }

@@ -300,9 +300,12 @@ object Pipeline {
           ddlStage("privileges") { sj =>
             // the TARGET's stored name, so the emitted quoted GRANT names
             // the table that exists (a lowercased target would otherwise
-            // get GRANT ... ON "Orders" and fail)
-            Catalog.listTablePrivileges(sj.url)
-              .flatMap(p => Catalog.resolveTable(dstJdbc.get.url, p.table).map(p -> _))
+            // get GRANT ... ON "Orders" and fail); one lookup per table,
+            // not per grant
+            val privs = Catalog.listTablePrivileges(sj.url)
+            val stored = privs.map(_.table).distinct.flatMap(t =>
+              Catalog.resolveTable(dstJdbc.get.url, t).map(t -> _)).toMap
+            privs.flatMap(p => stored.get(p.table).map(p -> _))
               .map { case (p, dstName) =>
                 (s"${p.user}/$dstName",
                   DdlConverter.tablePrivDdl(p.user, dstName, p.privCsv), false)

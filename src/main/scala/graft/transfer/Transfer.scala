@@ -50,7 +50,10 @@ object Transfer {
   /** ORC directory endpoint — lossless columnar alternative to parquet. */
   final case class OrcDir(dir: String) extends Endpoint
   /** `table` is a template: `%s` stands for the named table's SQL
-    * reference ([[pin]]); a template without `%s` is used verbatim. */
+    * reference ([[pin]]) and must be the whole reference: the name is
+    * resolved in the connection's current schema, so a qualifier such as
+    * `archive.%s` is not supported. A template without `%s` is used
+    * verbatim. */
   final case class Jdbc(url: String, table: String,
       partitionColumn: Option[String] = None,
       numPartitions: Int = 4,

@@ -270,7 +270,14 @@ class DdlConverterSpec extends AnyFunSuite {
       vd.last)
     // PostgreSQL reads # as XOR: a MySQL # comment becomes a -- comment
     assert(DdlConverter.viewDdl("v", "SELECT a # note\nFROM t").last ==
-      "CREATE OR REPLACE VIEW \"v\" AS SELECT a -- note\nFROM t")
+      "CREATE OR REPLACE VIEW \"v\" AS SELECT a  -- note\nFROM t")
+    // ... after a space, so a minus before it stays a minus (`a---x` would
+    // comment out from the minus and alias a as b), and a comment that
+    // ends the text ends in a newline
+    assert(DdlConverter.viewDdl("v", "SELECT a-#x\n b FROM t").last ==
+      "CREATE OR REPLACE VIEW \"v\" AS SELECT a- --x\n b FROM t")
+    assert(DdlConverter.viewDdl("v", "SELECT a FROM t # note").last ==
+      "CREATE OR REPLACE VIEW \"v\" AS SELECT a FROM t  -- note\n")
   }
 
   test("parens, commas, and keywords inside backtick identifiers are inert") {

@@ -224,6 +224,16 @@ class ReferenceCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  RETURN p + 1;
         |END""".stripMargin).get
     assert(hc.ddl.contains("-- bump it") && !hc.ddl.contains("#"), hc.ddl)
+    // a cursor query that ends in a # comment keeps its terminator out of
+    // the comment
+    val hq = FunctionDdl.convert(
+      """CREATE FUNCTION f6(p INT) RETURNS INT
+        |BEGIN
+        |  DECLARE c CURSOR FOR SELECT a FROM t # note
+        |  ;
+        |  RETURN p;
+        |END""".stripMargin).get
+    assert(hq.ddl.contains("c CURSOR FOR SELECT a FROM t  -- note\n;"), hq.ddl)
   }
 
   test("FunctionDdl procedural subset: loop control, user vars, ROW_COUNT") {
