@@ -6,6 +6,7 @@ import graft.ddl.DdlConverter
 import graft.pipeline.{Pipeline, ProgressTracker}
 import graft.transfer.Transfer
 import graft.transfer.Transfer.{CsvDir, Endpoint, Jdbc, JsonDir, OrcDir, ParquetDir}
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** The user entry point — the reference's `./mysql2pg -c config.yml`
   * (cmd/main.go:16-158) re-expressed:
@@ -76,6 +77,9 @@ object Migrate {
       // JDBC targets, no-op for file targets whose formats carry schema);
       // all stages run under metric tracking with the file/error log split
       val runLog = cfg.toRunLog
+      // generated classes compiled by the run: a JDBC → JDBC copy compiles none
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+      val compiles0 = compiles.getCount
       val (report, metrics) = try ProgressTracker.track(spark) {
         Pipeline.run(spark, src, dst, cfg.toPipelineConfig, tables, runLog)
       } finally runLog.close()
@@ -95,7 +99,7 @@ object Migrate {
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[done] ${report.results.size} tables, $rows rows in $secs%.2f s " +
         f"(${rows / math.max(secs, 0.001)}%.0f rows/s; spark: ${metrics.tasks} tasks, " +
-        s"${metrics.recordsRead} records read)")
+        s"${metrics.recordsRead} records read, ${compiles.getCount - compiles0} classes compiled)")
     } finally spark.stop()
   }
 }

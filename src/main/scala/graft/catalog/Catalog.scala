@@ -390,6 +390,16 @@ object Catalog {
       rs.next(); rs.getLong(1)
     }
 
+  /** `SELECT MIN(col), MAX(col)` of a finished SQL table reference, `col`
+    * already quoted; None for an empty table. */
+  private[graft] def keyBounds(url: String, ref: String, col: String): Option[(Long, Long)] =
+    withConnection(url) { conn =>
+      val rs = conn.createStatement().executeQuery(s"SELECT MIN($col), MAX($col) FROM $ref")
+      rs.next()
+      val lo = rs.getLong(1)
+      if (rs.wasNull()) None else Some((lo, rs.getLong(2)))
+    }
+
   /** S12: row-size estimate — the reference's columns×20-bytes heuristic
     * (`connection.go:232-245`), used to derive numPartitions for transfers. */
   def estimateRowSize(columns: Seq[ColumnMeta]): Int = columns.size * 20

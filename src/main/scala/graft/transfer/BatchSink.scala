@@ -1,10 +1,12 @@
 package graft.transfer
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{QueryExecution, RowDataSourceScanExec, SQLExecution,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.internal.SQLConf
@@ -30,6 +32,13 @@ import java.sql.{Connection, PreparedStatement}
   *   column mapping        | `getSchemaOption` + `getInsertStatement`;
   *                         | COPY names the same matched target columns,
   *                         | quoted by the dialect
+  *   rows                  | a bare JDBC scan's own `InternalRow`s
+  *                         | ([[rows]]): no generated class, no copy into
+  *                         | an `UnsafeRow`; any other plan as executed
+  *   zero dates            | `zeroDatesToNull`: a string that is a whole
+  *                         | MySQL zero date ([[Transfer.isZeroDate]]) binds
+  *                         | and hashes as NULL, in place of Transfer's
+  *                         | DataFrame projection of the same rule
   *   NULL binding          | the TARGET column's JDBC type, read from the
   *                         | dialect's schema query (not the dialect's type
   *                         | for the Spark type: Derby strings would bind
@@ -52,9 +61,11 @@ object BatchSink {
 
   /** Load `df` into `table`; returns (rows, checksum) of the rows
     * committed. `truncate` empties an existing table first, else rows are
-    * appended; an absent table is created from the frame's schema. */
+    * appended; an absent table is created from the frame's schema.
+    * `zeroDatesToNull` lands (and hashes) every string column's MySQL zero
+    * date as NULL, as `Transfer.zeroDatesToNull` does to a frame. */
   def write(df: DataFrame, url: String, table: String, batchSize: Int = 1000,
-            truncate: Boolean = false): (Long, Long) = {
+            truncate: Boolean = false, zeroDatesToNull: Boolean = false): (Long, Long) = {
     val dialect = JdbcDialects.get(url)
     val options = new JdbcOptionsInWrite(url, table, Map(
       "batchsize" -> batchSize.toString, "truncate" -> truncate.toString))
@@ -84,8 +95,11 @@ object BatchSink {
     // INSERT body instead of stranding tasks
     val copy = url.startsWith("jdbc:postgresql") && CopyEncoder.copySupported()
     val types = schema.fields.map(_.dataType)
+    val zeroCols = if (!zeroDatesToNull) Array.empty[Int]
+      else types.indices.filter(types(_) == StringType).toArray
     val batch = math.max(batchSize, 1)
-    run(df, s"BatchSink.write $table") { rows =>
+    run(df, s"BatchSink.write $table") { in =>
+      val rows = if (zeroCols.isEmpty) in else in.map(nullZeroDates(_, zeroCols))
       if (!rows.hasNext) (0L, 0L)
       else inTransaction(dialect.createConnectionFactory(options)(-1)) { c =>
         if (copy && CopyEncoder.copySupported())
@@ -104,6 +118,23 @@ object BatchSink {
       rows.foreach { r => n += 1; chk ^= rowHash(r, types) }
       (n, chk)
     }
+  }
+
+  /** `row`, or a copy of it with NULL in each column of `cols` that holds a
+    * MySQL zero date; the row itself is never changed, since a scan may
+    * reuse it. */
+  private def nullZeroDates(row: InternalRow, cols: Array[Int]): InternalRow = {
+    var out = row
+    var k = 0
+    while (k < cols.length) {
+      val i = cols(k)
+      if (!row.isNullAt(i) && Transfer.isZeroDate(row.getUTF8String(i))) {
+        if (out eq row) out = row.copy()
+        out.setNullAt(i)
+      }
+      k += 1
+    }
+    out
   }
 
   /** The same checksum as a SQL aggregate, `bit_xor(xxhash64(cols))`, for
@@ -127,13 +158,25 @@ object BatchSink {
     h
   }
 
-  /** One job over `df`'s rows under its own SQL execution; per-partition
-    * (count, checksum) pairs merge by sum and xor. */
+  /** The rows a job over `qe` folds. A bare JDBC scan, with or without its
+    * whole-stage wrapper, hands over the source's own `InternalRow`s: no
+    * class is generated and no row is copied into an `UnsafeRow` (nor is
+    * the scan's `numOutputRows` SQL metric counted). Any other plan runs as
+    * planned. */
+  private[transfer] def rows(qe: QueryExecution): RDD[InternalRow] = qe.executedPlan match {
+    case WholeStageCodegenExec(scan: RowDataSourceScanExec) => scan.inputRDD
+    case scan: RowDataSourceScanExec => scan.inputRDD
+    case _ => qe.toRdd
+  }
+
+  /** One job over `df`'s rows ([[rows]]) under its own SQL execution;
+    * per-partition (count, checksum) pairs merge by sum and xor. */
   private def run(df: DataFrame, name: String)(
       part: Iterator[InternalRow] => (Long, Long)): (Long, Long) = {
     val qe = df.queryExecution
     SQLExecution.withNewExecutionId(qe, Some(name)) {
-      qe.toRdd.sparkContext.runJob(qe.toRdd, part)
+      val rdd = rows(qe)
+      rdd.sparkContext.runJob(rdd, part)
         .foldLeft((0L, 0L)) { case ((n, c), (pn, pc)) => (n + pn, c ^ pc) }
     }
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.jdbc.JdbcDialects
+import org.apache.spark.unsafe.types.UTF8String
 import graft.catalog.Catalog
 
 /** Table-transfer dataflow — the reference's hot path E2 (SURVEY.md §3:
@@ -17,7 +18,9 @@ import graft.catalog.Catalog
   *   per-batch PG transaction + COPY   | [[BatchSink]]: one transaction
   *                                     | per partition, batched INSERT or
   *                                     | COPY; file targets: `df.write`
-  *   zero-date → NULL (`:526-541`)     | [[zeroDatesToNull]] column rule
+  *   zero-date → NULL (`:526-541`)     | [[isZeroDate]]: in BatchSink's row
+  *                                     | loop, else the [[zeroDatesToNull]]
+  *                                     | column rule
   *   WKB point → (x,y) (`:596-633`)    | [[PointDecode]] expression
   *   COUNT(*) validation (`:313-356`)  | count + order-independent xor
   *                                     | checksum (stronger), folded in
@@ -89,16 +92,14 @@ object Transfer {
           // range-partitioned scan: Spark's subsumption of keyset pagination.
           // Quote per target dialect (Derby et al. uppercase bare idents).
           val qpc = JdbcDialects.get(j.url).quoteIdentifier(pc)
-          val bounds = spark.read.format("jdbc").option("url", j.url)
-            .option("query", s"SELECT MIN($qpc) AS lo, MAX($qpc) AS hi FROM ${j.table}")
-            .load().collect().head
-          if (bounds.isNullAt(0)) base.load()
-          else base
-            .option("partitionColumn", qpc)
-            .option("lowerBound", bounds.getAs[Number](0).longValue)
-            .option("upperBound", bounds.getAs[Number](1).longValue + 1)
-            .option("numPartitions", j.numPartitions)
-            .load()
+          Catalog.keyBounds(j.url, j.table, qpc).fold(base.load()) { case (lo, hi) =>
+            base
+              .option("partitionColumn", qpc)
+              .option("lowerBound", lo)
+              .option("upperBound", hi + 1)
+              .option("numPartitions", j.numPartitions)
+              .load()
+          }
         case None => base.load()
       }
   }
@@ -106,21 +107,30 @@ object Transfer {
   // ------------------------------------------------- value conversions
 
   /** MySQL zero-dates arrive as strings '0000-00-00[ 00:00:00[.0...]]' or
-    * as nulls depending on the driver; normalize string columns whose
-    * ENTIRE value is a zero-date to NULL (reference `connection.go:
-    * 526-541`). Full-match, not startsWith: a free-text column legally
-    * begins with the literal ("0000-00-00 is the MySQL zero date") and a
-    * prefix match would silently null it — and because validation hashes
-    * the same converted frame, the corruption would verify clean. One
+    * as nulls depending on the driver; a string whose ENTIRE value is a
+    * zero-date becomes NULL (reference `connection.go:526-541`).
+    * Full-match, not startsWith: a free-text column legally begins with the
+    * literal ("0000-00-00 is the MySQL zero date") and a prefix match would
+    * silently null it — and because validation hashes the same converted
+    * rows, the corruption would verify clean. */
+  private val ZeroDate = "\\A0000-00-00( \\d{2}:\\d{2}:\\d{2}(\\.\\d+)?)?\\z"
+  private val zeroDatePrefix = UTF8String.fromString("0000-00-00")
+  private val zeroDate = java.util.regex.Pattern.compile(ZeroDate)
+
+  /** The zero-date rule on one value, as BatchSink's row loop applies it;
+    * the prefix test spares other values the UTF-8 decode the regex needs. */
+  private[transfer] def isZeroDate(s: UTF8String): Boolean =
+    s.startsWith(zeroDatePrefix) && zeroDate.matcher(s.toString).find()
+
+  /** The zero-date rule on every string column of `df`, as one
     * `withColumns` projection (not a per-column fold: O(cols) nested
     * Projects cost quadratic analysis on wide tables) with backtick-quoted
     * refs so dotted/reserved names resolve. */
   def zeroDatesToNull(df: DataFrame): DataFrame = {
-    val zero = "\\A0000-00-00( \\d{2}:\\d{2}:\\d{2}(\\.\\d+)?)?\\z"
     def ref(n: String) = col("`" + n.replace("`", "``") + "`")
     val updates = df.schema.fields.collect {
       case f if f.dataType == StringType =>
-        f.name -> when(ref(f.name).rlike(zero), lit(null)).otherwise(ref(f.name))
+        f.name -> when(ref(f.name).rlike(ZeroDate), lit(null)).otherwise(ref(f.name))
     }
     if (updates.isEmpty) df else df.withColumns(updates.toMap)
   }
@@ -178,10 +188,12 @@ object Transfer {
   def stats(df: DataFrame): (Long, Long) = BatchSink.stats(df)
 
   /** Write `df` to `dst`; (count, checksum) of exactly the rows written:
-    * folded by the JDBC sink itself, `observe()`d on Spark's file writers. */
+    * folded by the JDBC sink itself, which also applies the zero-date
+    * rule, `observe()`d on Spark's file writers. */
   private def writeCounted(df: DataFrame, dst: Endpoint, table: String,
                            truncate: Boolean): (Long, Long) = bind(dst, table) match {
-    case j: Jdbc => BatchSink.write(df, j.url, j.table, j.batchSize, truncate)
+    case j: Jdbc =>
+      BatchSink.write(df, j.url, j.table, j.batchSize, truncate, zeroDatesToNull = true)
     case _ =>
       val obs = org.apache.spark.sql.Observation()
       write(df.observe(obs, count(lit(1)).as("n"), BatchSink.checksumCol(df).as("chk")),
@@ -331,22 +343,28 @@ object Transfer {
     * every row is counted and hashed as it flows to the writer — in
     * [[BatchSink]]'s bind loop for JDBC targets, by `observe()` on Spark's
     * file writers — so source count and checksum describe exactly the
-    * rows that were written: the converted frame, not a raw re-read, so
+    * rows that were written: the converted rows, not a raw re-read, so
     * in-flight conversions (zero-dates, point decode) never trip the
     * checksum. The destination read-back ([[stats]], the same fold) is
     * the one validation pass.
+    *
+    * Into a JDBC target the zero-date rule runs in BatchSink's row loop
+    * instead of a projection, so a JDBC → JDBC copy executes two bare
+    * scans, and BatchSink folds the scans' own rows: a copy compiles no
+    * generated class. File targets keep the DataFrame rule; point decoding
+    * is a projection for every target.
     *
     * Write parallelism is sized from a row count taken BEFORE the write: a
     * driver-side `SELECT COUNT(*)` for JDBC sources (the reference's S11
     * count, no Spark job), row-group metadata for file sources. It is only
     * a sizing hint and is never compared with anything; the source's own
-    * partition count comes from the physical plan the write executes (no
-    * job, no Row deserializer). A JDBC source is cached only when the
-    * write repartitions it — a retried shuffle-map task would otherwise
-    * re-read a live table — and never takes the empty-table shortcut
-    * (sync_data.go:64-113): a zero counted outside the write proves
-    * nothing about the rows it will see, so an empty JDBC table goes
-    * through the normal write-and-verify path. */
+    * partition count comes from the RDD the write folds ([[BatchSink.rows]]:
+    * no job, and for a JDBC scan no generated class). A JDBC source is
+    * cached only when the write repartitions it — a retried shuffle-map
+    * task would otherwise re-read a live table — and never takes the
+    * empty-table shortcut (sync_data.go:64-113): a zero counted outside the
+    * write proves nothing about the rows it will see, so an empty JDBC
+    * table goes through the normal write-and-verify path. */
   def copyTable(spark: SparkSession, src: Endpoint, dst: Endpoint, table: String,
                 truncate: Boolean = true,
                 pointCols: Seq[String] = Nil,
@@ -356,7 +374,8 @@ object Transfer {
     // names it
     val name = stored(src, table)
     val (s, d) = (pin(src, name), bind(dst, name))
-    val df1 = decodePoints(zeroDatesToNull(read(spark, s, table)), pointCols)
+    val raw = read(spark, s, table)
+    val df1 = decodePoints(if (d.isInstanceOf[Jdbc]) raw else zeroDatesToNull(raw), pointCols)
     val rowsHint = s match {
       case j: Jdbc => Catalog.countRows(j.url, j.table)
       case _ =>
@@ -383,7 +402,7 @@ object Transfer {
     }
     val target = Catalog.suggestNumPartitions(
       rowsHint, width, targetBytesPerPartition = targetBytes)
-    val reshuffle = target > df1.queryExecution.toRdd.getNumPartitions
+    val reshuffle = target > BatchSink.rows(df1.queryExecution).getNumPartitions
     val snapshot = reshuffle && s.isInstanceOf[Jdbc]
     if (snapshot) df1.persist()
     try {

@@ -308,15 +308,14 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
     url
   }
 
-  test("copyTable from JDBC: one job per side, no cache, counts match the database") {
+  /** `body`'s result, the number of Spark jobs it ran and the physical
+    * plans of its SQL executions. */
+  private def jobsOf[A](body: => A): (A, Int, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
-    val srcUrl = derbyTable("xfer_scan_src", 200)
-    val dstUrl = s"jdbc:derby:${Files.createTempDirectory("xfer_scan_dst")}/d;create=true"
-    val (src, dst) = (Jdbc(srcUrl, "%s"), Jdbc(dstUrl, "%s"))
-    // every job/plan between here and the marker job is copyTable's: the
+    // every job/plan between here and the marker job is body's: the
     // listener bus is FIFO, so once the marker's start arrives, all of
-    // copyTable's events have been delivered
+    // body's events have been delivered
     val tag = "graft.test.phase"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
@@ -333,7 +332,7 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
     sc.addSparkListener(listener)
     val r = try {
       sc.setLocalProperty(tag, "copy")
-      val r = Transfer.copyTable(spark, src, dst, "t")
+      val r = body
       sc.setLocalProperty(tag, "marker")
       sc.parallelize(Seq(1), 1).count()
       val deadline = System.nanoTime() + 30L * 1000000000L
@@ -341,10 +340,17 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
       r
     } finally { sc.setLocalProperty(tag, null); sc.removeSparkListener(listener) }
     assert(jobs.contains("marker"), "listener bus did not drain")
-    val copyJobs = jobs.toArray.count(_ == "copy")
+    (r, jobs.toArray.count(_ == "copy"), plans.toArray(Array.empty[String]).toSeq)
+  }
+
+  test("copyTable from JDBC: one job per side, no cache, counts match the database") {
+    val srcUrl = derbyTable("xfer_scan_src", 200)
+    val dstUrl = s"jdbc:derby:${Files.createTempDirectory("xfer_scan_dst")}/d;create=true"
+    val (src, dst) = (Jdbc(srcUrl, "%s"), Jdbc(dstUrl, "%s"))
+    val (r, copyJobs, plans) = jobsOf(Transfer.copyTable(spark, src, dst, "t"))
     assert(copyJobs == 2, s"expected the write and the read-back, saw $copyJobs jobs")
-    assert(!plans.isEmpty)
-    plans.forEach(p => assert(!p.contains("InMemoryRelation"), p))
+    assert(plans.nonEmpty)
+    plans.foreach(p => assert(!p.contains("InMemoryRelation"), p))
     val dbRows = graft.catalog.Catalog.rowCount(srcUrl, "t")
     assert(dbRows == 200)
     assert(r == Transfer.TransferResult("t", dbRows, dbRows, checksumMatch = true))
@@ -355,6 +361,26 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally conn.close()
     val v = Transfer.validate(spark, src, dst, "t")
     assert(v.srcRows == 200 && v.dstRows == 200 && !v.checksumMatch)
+  }
+
+  test("a JDBC -> JDBC copyTable compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val srcUrl = derbyTable("xfer_nocg_src", 300)
+    val dstUrl = s"jdbc:derby:${Files.createTempDirectory("xfer_nocg_dst")}/d;create=true"
+    // an empty generated-code cache: every class the copy needs is compiled
+    val cache = CodeGenerator.getClass.getDeclaredMethod("cache")
+    cache.setAccessible(true)
+    val classes = cache.invoke(CodeGenerator)
+    classes.getClass.getMethod("invalidateAll").invoke(classes)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (r, copyJobs, plans) = jobsOf(Transfer.copyTable(spark, Jdbc(srcUrl, "%s"),
+      Jdbc(dstUrl, "%s"), "t"))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0)
+    assert(r == Transfer.TransferResult("t", 300L, 300L, checksumMatch = true))
+    assert(copyJobs == 2, s"expected the write and the read-back, saw $copyJobs jobs")
+    assert(plans.nonEmpty)
+    plans.foreach(p => assert(!p.contains("InMemoryRelation"), p))
   }
 
   test("NULLs of every MySQL-shaped column type land in a schema-stage VARCHAR target") {
@@ -477,11 +503,39 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("zero-date strings become NULL in flight") {
     import spark.implicits._
-    val df = Seq(("0000-00-00 00:00:00", "2020-01-02"), ("x", "0000-00-00"))
-      .toDF("a", "b")
+    val text = "0000-00-00 is the MySQL zero date"
+    val rows = Seq(("0000-00-00 00:00:00", "2020-01-02"), ("x", "0000-00-00"),
+      (text, "0000-00-00 12:34:56.789"))
+    val df = rows.toDF("a", "b")
     val out = Transfer.zeroDatesToNull(df).collect()
     assert(out(0).isNullAt(0) && out(0).getString(1) == "2020-01-02")
     assert(out(1).getString(0) == "x" && out(1).isNullAt(1))
+    assert(out(2).getString(0) == text && out(2).isNullAt(1))
+    // the same rows through a Derby -> Derby copy, where BatchSink applies the rule
+    val srcUrl = s"jdbc:derby:${Files.createTempDirectory("xfer_zd_src")}/d;create=true"
+    val dstUrl = s"jdbc:derby:${Files.createTempDirectory("xfer_zd_dst")}/d;create=true"
+    val conn = java.sql.DriverManager.getConnection(srcUrl)
+    try {
+      conn.createStatement().execute("CREATE TABLE z (id INT, a VARCHAR(40), b VARCHAR(40))")
+      val ins = conn.prepareStatement("INSERT INTO z VALUES (?, ?, ?)")
+      rows.zipWithIndex.foreach { case ((a, b), i) =>
+        ins.setInt(1, i); ins.setString(2, a); ins.setString(3, b); ins.addBatch()
+      }
+      ins.executeBatch()
+    } finally conn.close()
+    val r = Transfer.copyTable(spark, Jdbc(srcUrl, "%s"), Jdbc(dstUrl, "%s"), "z")
+    assert(r == Transfer.TransferResult("z", 3L, 3L, checksumMatch = true))
+    val landed = Transfer.read(spark, Jdbc(dstUrl, "%s"), "z").orderBy("ID").drop("ID").collect()
+    assert(landed.toSeq == out.toSeq)
+    // and from parquet, whose scan hands the sink UnsafeRows, not a JDBC scan's own rows
+    val pq = ParquetDir(Files.createTempDirectory("xfer_zd_pq").toString)
+    rows.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("id", "a", "b")
+      .write.parquet(s"${pq.dir}/z.parquet")
+    val pqUrl = s"jdbc:derby:${Files.createTempDirectory("xfer_zd_pqdst")}/d;create=true"
+    val rp = Transfer.copyTable(spark, pq, Jdbc(pqUrl, "%s"), "z")
+    assert(rp == Transfer.TransferResult("z", 3L, 3L, checksumMatch = true))
+    val landedPq = Transfer.read(spark, Jdbc(pqUrl, "%s"), "z").orderBy("id").drop("id").collect()
+    assert(landedPq.toSeq == out.toSeq)
   }
 
   test("WKB point decode expression (MySQL 25-byte + bare WKB + garbage)") {
