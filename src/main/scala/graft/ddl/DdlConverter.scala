@@ -8,8 +8,10 @@ import graft.types.TypeMapper
 /** MySQL `CREATE TABLE` → (Spark StructType, PostgreSQL DDL).
   *
   * Re-implements the reference's table-DDL conversion surface
-  * (`ConvertTableDDL`, sync_tableddl.go:684-972 + helpers :178-681) with a
-  * structural parser instead of ordered regex passes. Covered semantics:
+  * (`ConvertTableDDL`, sync_tableddl.go:684-972 + helpers :178-681) on
+  * [[MySqlLexer]] tokens instead of ordered regex passes: each body
+  * element is classified by its leading words, and every clause is one
+  * token or one balanced `(…)` group. Covered semantics:
   *  - quote-aware paren matching + top-level column-line splitting
   *    (:212-255, :709-776)
   *  - type mapping via [[TypeMapper]] (§1.2)
@@ -21,7 +23,8 @@ import graft.types.TypeMapper
   *  - PARTITION BY clauses removed (keywords.go:5-11, :270-276)
   *  - FULLTEXT / FOREIGN KEY / KEY / SPATIAL lines skipped (:737-745)
   *  - INVISIBLE columns dropped (:737-745)
-  *  - column + table comments carried to COMMENT ON (:50-51, manager.go:1288-1414)
+  *  - column + table comments carried to COMMENT ON (:50-51, manager.go:1288-1414);
+  *    literals decoded by MySQL's escape rules, re-quoted with `''`
   *  - zero-date defaults dropped (:616-619); TEMPORARY kept (:182-186)
   *  - generated columns: VIRTUAL → STORED keyword rewrite (:627-673)
   *  - optional identifier lowercasing (config.go:67, :783-790)
@@ -50,14 +53,6 @@ object DdlConverter {
       primaryKey: Seq[String],
       checks: Seq[String],
       comment: Option[String])
-
-  private def unquoteIdent(s: String): String = {
-    val t = s.trim
-    if (t.startsWith("`"))
-      // doubled backticks inside a backtick-quoted ident escape a backtick
-      t.stripPrefix("`").stripSuffix("`").replace("``", "`")
-    else t.stripPrefix("\"").stripSuffix("\"")
-  }
 
   /** Backtick identifiers → PG double quotes (`` escapes unfolded, `"`
     * doubled), `#` comments → `--` comments; strings stay verbatim. */
@@ -91,137 +86,135 @@ object DdlConverter {
 
   // ------------------------------------------------------------- parsing
 
+  /** One token of DDL text: a code word, a string or identifier with its
+    * quotes, a lone `,`, `=` or `)`, or a balanced `(…)` group. */
+  private final case class Tok(text: String) {
+    def is(kw: String): Boolean = text.equalsIgnoreCase(kw)
+    def word: Boolean = Punct.indexOf(text.head) < 0
+    def group: Boolean = text.startsWith("(")
+    def literal: Boolean = text.startsWith("'") || text.startsWith("\"")
+    def inner: String = text.substring(1, text.length - 1)
+    /** The identifier named: quotes dropped and doubled ones folded (`"…"`
+      * is one under ANSI_QUOTES); of a dotted word, its last part. */
+    def name: String = text.head match {
+      case q @ ('`' | '"') => inner.replace(s"$q$q", q.toString)
+      case _ => text.substring(text.lastIndexOf('.') + 1)
+    }
+  }
+
+  private val Punct = "'\"`(),=" // each ends a code word
+
+  /** `s` cut into tokens. Quotes and parens are read on the lexer's blank
+    * mask, so nothing inside a string, identifier or group cuts one. */
+  private def tokens(s: String): Vector[Tok] = {
+    val mask = MySqlLexer.blank(s)
+    val out = Vector.newBuilder[Tok]
+    var i = 0
+    while (i < s.length) {
+      val end = mask.charAt(i) match {
+        case c if c.isWhitespace => i + 1
+        case q @ ('\'' | '"' | '`') =>
+          val close = mask.indexOf(q, i + 1)
+          if (close < 0) s.length else close + 1
+        case '(' =>
+          val close = matchParen(s, i)
+          require(close > i, s"unbalanced parentheses: ${s.take(60)}")
+          close + 1
+        case ')' | ',' | '=' => i + 1
+        case _ =>
+          val stop = mask.indexWhere(c => c.isWhitespace || Punct.indexOf(c) >= 0, i + 1)
+          if (stop < 0) s.length else stop
+      }
+      if (!mask.charAt(i).isWhitespace) out += Tok(s.substring(i, end))
+      i = end
+    }
+    out.result()
+  }
+
+  /** The tokens after the first `kw` word of `ts`. */
+  private def after(ts: Seq[Tok], kw: String): Seq[Tok] = ts.dropWhile(!_.is(kw)).drop(1)
+
+  private def comment(ts: Seq[Tok]): Option[String] =
+    after(ts, "COMMENT").headOption.filter(_.literal).map(t => MySqlLexer.stringValue(t.text))
+
+  private def pgString(value: String): String = "'" + value.replace("'", "''") + "'"
+
   def parse(ddl0: String): TableSpec = {
     val ddl = MySqlLexer.stripComments(ddl0).trim
-    val temporary = ddl.matches("(?is)^\\s*CREATE\\s+TEMPORARY\\s+.*")
-    val nameM = "(?is)CREATE\\s+(?:TEMPORARY\\s+)?TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?([`\"\\w.]+)".r
-      .findFirstMatchIn(ddl)
-      .getOrElse(throw new IllegalArgumentException(s"not a CREATE TABLE: ${ddl.take(60)}"))
-    val tableName = unquoteIdent(nameM.group(1).split('.').last)
+    val toks = tokens(ddl)
+    // CREATE [TEMPORARY] TABLE [IF NOT EXISTS] name (body) options
+    val lead = toks.take(3).map(_.text.toUpperCase)
+    val temporary = lead == Seq("CREATE", "TEMPORARY", "TABLE")
+    if (!temporary && !lead.startsWith(Seq("CREATE", "TABLE")))
+      throw new IllegalArgumentException(s"not a CREATE TABLE: ${ddl.take(60)}")
+    var n = if (temporary) 3 else 2
+    if (toks.lift(n).exists(_.is("IF"))) n += 3
+    // a qualified name is parts joined by dots: db.t, `db`.`t`, `db`.t
+    while (n + 1 < toks.length && (toks(n).text.endsWith(".") || toks(n + 1).text.startsWith(".")))
+      n += 1
+    require(toks.lift(n + 1).exists(_.group),
+      s"no column body (LIKE/AS-SELECT copy form?): ${ddl.take(60)}")
 
-    val maskedDdl = MySqlLexer.blank(ddl)
-    val open = maskedDdl.indexOf('(', nameM.end - 1)
-    require(open >= 0, s"no column body (LIKE/AS-SELECT copy form?): ${ddl.take(60)}")
-    val close = matchParen(maskedDdl, open)
-    require(close > open, "unbalanced CREATE TABLE body")
-    val body = ddl.substring(open + 1, close)
-    val tail = ddl.substring(close + 1)
-
-    val lines = splitTopLevelCommas(body)
-    val cols = Vector.newBuilder[ColumnSpec]
     var pk: Seq[String] = Nil
+    val cols = Vector.newBuilder[ColumnSpec]
     val checks = Vector.newBuilder[String]
-
-    lines.foreach { raw =>
-      val line = raw.trim
-      // classify on a literal-masked, word-boundary basis: a column named
-      // `keyword`/`checksum` must NOT be eaten by the KEY/CHECK branches,
-      // and keywords inside COMMENT/DEFAULT literals must not classify.
-      // The mask is LENGTH-PRESERVING, so every index found on `upper` is
-      // a valid index into the raw `line` (a token mask would drift once a
-      // literal precedes the keyword).
-      val upper = MySqlLexer.blank(line).toUpperCase
-      def starts(kw: String): Boolean = upper.matches(s"^$kw\\b.*")
-      if (upper.startsWith("PRIMARY KEY")) {
-        val o = upper.indexOf('(')
-        if (o >= 0) {
-          val c = matchParen(upper, o)
-          pk = splitTopLevelCommas(line.substring(o + 1, c))
-            .map(x => unquoteIdent(x.replaceAll("\\(\\d+\\)\\s*$", ""))) // prefix length
-        }
-      } else if (starts("CONSTRAINT") || starts("CHECK")) {
-        val ci = "\\bCHECK\\b".r.findFirstMatchIn(upper).map(_.start).getOrElse(-1)
-        if (ci >= 0) {
-          val o = upper.indexOf('(', ci)
-          if (o >= 0) {
-            val c = matchParen(upper, o)
-            if (c > o) {
-              val expr = line.substring(o, c + 1)
-                .replaceAll("(?i)\\s+(NOT\\s+)?ENFORCED\\s*", "")
-              checks += expr.trim
-            }
+    splitTopLevelCommas(toks(n + 1).inner).map(tokens).foreach { el =>
+      // CONSTRAINT [symbol] is skipped: the word after it classifies
+      val ts = if (!el.headOption.exists(_.is("CONSTRAINT"))) el
+        else el.tail.dropWhile(t => !Seq("PRIMARY", "UNIQUE", "FOREIGN", "CHECK").exists(t.is))
+      ts.headOption.fold("")(_.text.toUpperCase) match {
+        case "PRIMARY" =>
+          ts.find(_.group).foreach(g => pk = splitTopLevelCommas(g.inner)
+            .flatMap(part => tokens(part).headOption).map(_.name)) // `a(10)`: prefix length dropped
+        case "CHECK" => checks ++= ts.find(_.group).map(_.text) // [NOT] ENFORCED dropped
+        case "KEY" | "INDEX" | "UNIQUE" | "FULLTEXT" | "SPATIAL" | "FOREIGN" =>
+          // handled by the index converter / intentionally dropped (:737-745)
+        case _ =>
+          column(ts).foreach { c =>
+            cols += c
+            if (pk.isEmpty && ts.tail.exists(_.is("PRIMARY"))) pk = Seq(c.name)
           }
-        }
-      } else if (starts("UNIQUE KEY") || starts("UNIQUE INDEX") ||
-                 starts("KEY") || starts("INDEX") ||
-                 starts("FULLTEXT") || starts("SPATIAL") ||
-                 starts("FOREIGN KEY")) {
-        // handled by the index converter / intentionally dropped (:737-745)
-      } else if (line.nonEmpty) {
-        parseColumn(line).foreach { c =>
-          cols += c
-          // inline PRIMARY KEY (masked: 'PRIMARY KEY' in a COMMENT literal
-          // must not promote the column)
-          if (upper.matches(".*\\bPRIMARY\\s+KEY\\b.*") && pk.isEmpty)
-            pk = Seq(c.name)
-        }
       }
     }
 
-    // table options: comment + everything else dropped (incl. PARTITION BY)
-    val comment = "(?is)\\bCOMMENT\\s*=?\\s*'((?:[^']|'')*)'".r
-      .findFirstMatchIn(tail).map(_.group(1).replace("''", "'"))
-
-    // CHECK dedup (:927-949)
-    val dedupChecks = checks.result().distinct
-
-    TableSpec(tableName, temporary, cols.result(), pk, dedupChecks, comment)
+    // CHECK dedup (:927-949); of the table options only the comment is
+    // kept, everything else (PARTITION BY too) is dropped
+    TableSpec(toks(n).name, temporary, cols.result(), pk, checks.result().distinct,
+      comment(toks.drop(n + 2).filterNot(_.is("="))))
   }
 
-  private val ZeroDate = "(?i)^'0000-00-00.*'$".r
+  /** A column: name, type (a word, PRECISION/VARYING, a group,
+    * UNSIGNED/ZEROFILL), then attributes found by keyword (CHARACTER SET,
+    * COLLATE, ON UPDATE go unread). None if INVISIBLE or typeless. */
+  private def column(ts: Seq[Tok]): Option[ColumnSpec] = {
+    if (ts.length < 2 || !ts(1).word) return None
+    var e = 2
+    if (ts.lift(e).exists(t => t.is("PRECISION") || t.is("VARYING"))) e += 1
+    if (ts.lift(e).exists(_.group)) e += 1
+    while (ts.lift(e).exists(t => t.is("UNSIGNED") || t.is("ZEROFILL"))) e += 1
+    val attrs = ts.drop(e)
+    if (attrs.exists(_.is("INVISIBLE"))) return None
+    Some(ColumnSpec(
+      name = ts.head.name,
+      mysqlType = ts.slice(1, e).map(t => if (t.group) t.text else " " + t.text).mkString.trim,
+      nullable = !attrs.sliding(2).exists(p => p.head.is("NOT") && p.last.is("NULL")),
+      default = defaultValue(after(attrs, "DEFAULT")),
+      comment = comment(attrs),
+      autoIncrement = attrs.exists(_.is("AUTO_INCREMENT")),
+      // `GENERATED ALWAYS` is optional: `c int AS (expr)` is one too;
+      // VIRTUAL → STORED at emit (:627-673)
+      generated = after(attrs, "AS").headOption.filter(_.group).map(_.text)))
+  }
 
-  /** Parse one column definition line. Returns None for INVISIBLE columns. */
-  private def parseColumn(line0: String): Option[ColumnSpec] = {
-    var line = line0.trim
-    // backtick idents may contain doubled-backtick escapes (`a``b`)
-    val nameM = "^(`(?:[^`]|``)+`|\"[^\"]+\"|\\w+)\\s+".r.findFirstMatchIn(line)
-      .getOrElse(return None)
-    val name = unquoteIdent(nameM.group(1))
-    line = line.substring(nameM.end)
-
-    // flag checks run on a literal-masked copy so COMMENT/DEFAULT text
-    // ('marks INVISIBLE rows', 'the PRIMARY KEY is...') can't trigger them
-    def masked(s: String): String = MySqlLexer.blank(s).toUpperCase
-    if (masked(line).contains(" INVISIBLE")) return None
-
-    // type: word(+args) plus optional unsigned/zerofill modifiers
-    val typeM = "(?i)^([a-z]+(?:\\s+precision|\\s+varying)?(?:\\s*\\([^)]*\\))?(?:\\s+unsigned)?(?:\\s+zerofill)?)".r
-      .findFirstMatchIn(line).getOrElse(return None)
-    val mysqlType = typeM.group(1).trim
-    var rest = line.substring(typeM.end)
-
-    // strip charset/collation column modifiers (:369-384, :485-523)
-    rest = rest.replaceAll("(?i)\\s+CHARACTER\\s+SET\\s+\\w+", "")
-      .replaceAll("(?i)\\s+COLLATE\\s+\\w+", "")
-      .replaceAll("(?i)\\s+ON\\s+UPDATE\\s+CURRENT_TIMESTAMP(\\(\\d*\\))?", "")
-
-    val upperRest = masked(rest)
-    val autoInc = upperRest.contains("AUTO_INCREMENT")
-    val notNull = upperRest.contains("NOT NULL")
-
-    // keyword clauses are LOCATED on the literal-blanked mask (a COMMENT
-    // string containing 'DEFAULT 0' or 'GENERATED ALWAYS AS (x)' must not
-    // fabricate a clause) and their text EXTRACTED from the raw string by
-    // index — maskedRest is same-length by construction
-    val maskedRest = upperRest // same blank mask, uppercase is index-safe
-    // `GENERATED ALWAYS` is optional in MySQL: `c int AS (expr)` is one too
-    val generated = "(?i)(?:\\bGENERATED\\s+ALWAYS\\s+)?\\bAS\\s*(\\(.*\\))\\s*(VIRTUAL|STORED)?".r
-      .findFirstMatchIn(maskedRest)
-      .map(m => rest.substring(m.start(1), m.end(1))) // VIRTUAL→STORED at emit (:627-673)
-
-    val default = "(?i)\\bDEFAULT\\s+('(?:[^']|'')*'|[\\w.()+-]+)".r
-      .findFirstMatchIn(maskedRest)
-      .map(m => rest.substring(m.start(1), m.end(1))).filter {
-        case ZeroDate() => false // zero dates dropped (:616-619)
-        case _ => true
-      }
-
-    val comment = "(?i)\\bCOMMENT\\s+'((?:[^']|'')*)'".r
-      .findFirstMatchIn(maskedRest)
-      .map(m => rest.substring(m.start(1), m.end(1)).replace("''", "'"))
-
-    Some(ColumnSpec(name, mysqlType, nullable = !notNull, default, comment,
-      autoIncrement = autoInc, generated = generated))
+  /** The DEFAULT value that starts `ts`, as PostgreSQL text: a string
+    * (decoded, re-quoted; zero dates dropped, :616-619), a word with its
+    * string or group (`b'01'`, `CURRENT_TIMESTAMP(6)`), a lone word (a
+    * number, NULL, TRUE), or one group (`(RAND() * 100)`). */
+  private def defaultValue(ts: Seq[Tok]): Option[String] = ts.headOption.flatMap { t =>
+    if (t.literal)
+      Some(MySqlLexer.stringValue(t.text)).filterNot(_.startsWith("0000-00-00")).map(pgString)
+    else if (t.group) Some(t.text)
+    else Some(t.text + ts.lift(1).filter(x => x.group || x.literal).fold("")(_.text))
   }
 
   // ------------------------------------------------------------ emission
@@ -279,9 +272,9 @@ object DdlConverter {
       s"CREATE ${tempKw}TABLE ${q(spec.name, lowercase)} (\n" +
         (colLines ++ pkLine ++ checkLines).mkString(",\n") + "\n)"
     val tableComment = spec.comment.map(c =>
-      s"COMMENT ON TABLE ${q(spec.name, lowercase)} IS '${c.replace("'", "''")}'")
+      s"COMMENT ON TABLE ${q(spec.name, lowercase)} IS ${pgString(c)}")
     val colComments = spec.columns.flatMap(c => c.comment.map(cm =>
-      s"COMMENT ON COLUMN ${q(spec.name, lowercase)}.${q(c.name, lowercase)} IS '${cm.replace("'", "''")}'"))
+      s"COMMENT ON COLUMN ${q(spec.name, lowercase)}.${q(c.name, lowercase)} IS ${pgString(cm)}"))
     Seq(create) ++ tableComment ++ colComments
   }
 

@@ -5,7 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.ddl.DdlConverter
 import graft.sqlrewrite.SqlRewriter
-import scala.io.Source
 import scala.util.{Failure, Success, Try}
 
 /** End-to-end corpus gate: the 63-case `create_table.sql` DDL corpus in
@@ -23,30 +22,13 @@ import scala.util.{Failure, Success, Try}
   */
 class CorpusExecutionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val tablesPath = "mysql/create_table.sql"
-  private val viewsPath = "mysql/create_view.sql"
-
   private lazy val spark = GraftSession("corpus-exec-spec", 2,
     Map("spark.sql.ansi.enabled" -> "false", "spark.sql.timeType.enabled" -> "true"))
 
   override def afterAll(): Unit = spark.stop()
 
-  private def readStatements(path: String): Seq[String] = {
-    val text = {
-      val s = Source.fromResource(path, getClass.getClassLoader)(scala.io.Codec.UTF8)
-      try s.mkString finally s.close()
-    }
-    text
-      .replaceAll("(?m)^\\s*--.*$", "")
-      .replaceAll("(?s)/\\*.*?\\*/", "")
-      .split(";\\s*\\n")
-      .map(_.trim)
-      .filter(_.nonEmpty)
-      .toSeq
-  }
-
   private lazy val tableResults: (Int, Int, Seq[String]) = {
-    val creates = readStatements(tablesPath)
+    val creates = MySqlFixtures.statements("create_table.sql")
       .filter(_.toUpperCase.matches("(?s)^CREATE\\s+(TEMPORARY\\s+)?TABLE\\b.*"))
     var ok = 0
     val failures = Vector.newBuilder[String]
@@ -81,12 +63,13 @@ class CorpusExecutionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (ok, total, failures) = tableResults
     info(s"parsed $ok of $total (skipping LIKE/AS-SELECT copy forms)")
     failures.foreach(f => info(s"  FAIL $f"))
+    assert(total == 63, s"read $total CREATE TABLE statements")
     assert(ok >= 58, s"only $ok parsed; failures:\n${failures.mkString("\n")}")
   }
 
   test("all 11 reference views execute against the corpus schemas") {
     tableResults // force table registration
-    val views = readStatements(viewsPath)
+    val views = MySqlFixtures.statements("create_view.sql")
       .filter(_.toUpperCase.contains("CREATE OR REPLACE VIEW"))
     assert(views.size >= 10)
     val failures = views.flatMap { stmt =>

@@ -32,6 +32,8 @@ class DdlConverterSpec extends AnyFunSuite {
     assert(ddl.contains("\"id\" SERIAL"))
     assert(ddl.contains("PRIMARY KEY (\"id\")"))
     assert(ddl.contains("\"name\" VARCHAR(50) NOT NULL"))
+    // an inline PRIMARY KEY on the line after its column
+    assert(parse("CREATE TABLE t (id int\n    PRIMARY KEY, b int)").primaryKey == Seq("id"))
   }
 
   test("case_24: bigint unsigned auto_increment → BIGSERIAL") {
@@ -53,6 +55,16 @@ class DdlConverterSpec extends AnyFunSuite {
     val stmts = DdlConverter.toPostgresDdl(spec)
     assert(stmts.exists(_ == "COMMENT ON TABLE \"t\" IS 'Table comment'"))
     assert(stmts.exists(_.contains("IS 'Comment with '' quote'")))
+    // backslash escapes are decoded, then re-quoted with '' doubling
+    val esc = parse(
+      "CREATE TABLE t (c int COMMENT 'it\\'s here', d varchar(5) DEFAULT 'x\\'y') COMMENT='tab\\'le'")
+    assert(esc.comment.contains("tab'le"))
+    assert(esc.columns.map(c => (c.comment, c.default)) ==
+      Seq((Some("it's here"), None), (None, Some("'x''y'"))))
+    val escDdl = DdlConverter.toPostgresDdl(esc)
+    assert(escDdl.head.contains("\"d\" VARCHAR(5) DEFAULT 'x''y'"), escDdl.head)
+    assert(escDdl.tail == Seq("COMMENT ON TABLE \"t\" IS 'tab''le'",
+      "COMMENT ON COLUMN \"t\".\"c\" IS 'it''s here'"))
   }
 
   test("case_27: CHECK with ENFORCED strip + dedup") {
@@ -67,6 +79,8 @@ class DdlConverterSpec extends AnyFunSuite {
     val ddl = DdlConverter.toPostgresDdl(spec).head
     assert(ddl.contains("CHECK (age > 18)"))
     assert(!ddl.toUpperCase.contains("ENFORCED"))
+    // a CHECK written over two lines is kept
+    assert(parse("CREATE TABLE t (\n  a int,\n  CHECK (a >\n 0)\n)").checks == Seq("(a >\n 0)"))
   }
 
   test("case_21: generated columns, VIRTUAL → STORED") {
@@ -88,6 +102,11 @@ class DdlConverterSpec extends AnyFunSuite {
     // the short form without GENERATED ALWAYS is a generated column too
     val short = parse("CREATE TABLE t (c1 int, c4 varchar(20) AS (concat('n', c1)) VIRTUAL)")
     assert(short.columns.map(_.generated) == Seq(None, Some("(concat('n', c1))")))
+    // an expression over two lines stays a generated column, out of the
+    // transfer schema
+    val split = parse("CREATE TABLE t (a int,\n  b int GENERATED ALWAYS AS (a\n + 1) STORED)")
+    assert(split.columns.map(_.generated) == Seq(None, Some("(a\n + 1)")))
+    assert(DdlConverter.toStructType(split).fieldNames.toSeq == Seq("a"))
   }
 
   test("case_16: partition clause removed; case_17: TEMPORARY kept") {
@@ -130,6 +149,15 @@ class DdlConverterSpec extends AnyFunSuite {
         |  FOREIGN KEY (id) REFERENCES other(id)
         |)""".stripMargin)
     assert(spec.columns.map(_.name) == Seq("id", "name"))
+    // a named FOREIGN KEY constraint over two lines is dropped whole
+    val fk = parse(
+      """CREATE TABLE t (
+        |  id int,
+        |  CONSTRAINT fk_t FOREIGN KEY (id) REFERENCES other (id)
+        |    ON DELETE CASCADE
+        |)""".stripMargin)
+    assert(fk.columns.map(_.name) == Seq("id"))
+    assert(!DdlConverter.toPostgresDdl(fk).head.contains("CONSTRAINT"))
   }
 
   test("zero-date defaults dropped, charset modifiers scrubbed") {
@@ -143,6 +171,11 @@ class DdlConverterSpec extends AnyFunSuite {
     assert(spec.columns(1).default == Some("'x'"))
     assert(spec.columns(1).mysqlType == "varchar(10)")
     assert(spec.columns(2).default == Some("CURRENT_TIMESTAMP"))
+    // an expression default is one group; a bit literal keeps its quotes
+    val expr = parse(
+      "CREATE TABLE t (a double DEFAULT (RAND() * 100), b int DEFAULT (1 + 2), c bit(8) DEFAULT b'00000001')")
+    assert(expr.columns.map(_.default) ==
+      Seq(Some("(RAND() * 100)"), Some("(1 + 2)"), Some("b'00000001'")))
   }
 
   test("case_44: composite primary key") {
@@ -150,6 +183,8 @@ class DdlConverterSpec extends AnyFunSuite {
       "CREATE TABLE t (a int NOT NULL, b int NOT NULL, c varchar(5), PRIMARY KEY (a, b))")
     assert(spec.primaryKey == Seq("a", "b"))
     assert(DdlConverter.toPostgresDdl(spec).head.contains("PRIMARY KEY (\"a\", \"b\")"))
+    // a named PRIMARY KEY constraint
+    assert(parse("CREATE TABLE t (id int, CONSTRAINT pk_a PRIMARY KEY (id))").primaryKey == Seq("id"))
   }
 
   test("prefix-length index columns cleaned in PK") {
@@ -297,6 +332,38 @@ class DdlConverterSpec extends AnyFunSuite {
     val pk = DdlConverter.parse("CREATE TABLE t (`primary key` int, b int)")
     assert(pk.primaryKey.isEmpty)
     assert(pk.columns.map(_.name) == Seq("primary key", "b"))
+    // the table is the last identifier of its possibly qualified name
+    assert(DdlConverter.parse("CREATE TABLE `my table` (a int)").name == "my table")
+    assert(DdlConverter.parse("CREATE TABLE `db`.`t.x` (a int)").name == "t.x")
+  }
+
+  test("corpus: every parseable table keeps its primary key, columns and defaults whole") {
+    import graft.sqlrewrite.MySqlLexer
+    // the LIKE / AS SELECT copy forms have no column body
+    val tables = MySqlFixtures.statements("create_table.sql")
+      .filter(_.toUpperCase.startsWith("CREATE"))
+      .filterNot(t => Set("LIKE", "AS")(t.split("\\s+")(3).toUpperCase))
+    assert(tables.size == 61)
+    def balanced(sql: String): Boolean =
+      MySqlLexer.codeIndexes(sql).map(sql.charAt).foldLeft(0) {
+        case (d, _) if d < 0 => d
+        case (d, '(') => d + 1
+        case (d, ')') => d - 1
+        case (d, _) => d
+      } == 0
+    val wrong = tables.flatMap { mysql =>
+      val spec = parse(mysql)
+      val words = MySqlLexer.blank(mysql).toUpperCase.split("\\s+").toSeq
+      val problems = Seq(
+        "no PRIMARY KEY" -> (words.sliding(2).contains(Seq("PRIMARY", "KEY")) &&
+          !DdlConverter.toPostgresDdl(spec).head.contains("PRIMARY KEY (")),
+        "columns" -> (spec.name == "case_41_foreign_key" &&
+          spec.columns.map(_.name) != Seq("id", "key", "parent_id", "owner_id")),
+        "DEFAULT" -> spec.columns.flatMap(_.default).exists(d =>
+          !balanced(d) || Set("b", "x").contains(d.toLowerCase)))
+      problems.collect { case (what, true) => s"${spec.name}: $what" }
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 
   test("ddlForSchema emits PG-valid types for PG targets, BLOB elsewhere") {

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.sqlrewrite.SqlRewriter
-import scala.io.Source
 
 /** Gate over the MySQL fixture corpus in `src/test/resources/mysql/`
   * (written for this repo in the shape of the reference's
@@ -20,22 +19,9 @@ class ReferenceCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def fixture(name: String): String = {
-    val s = Source.fromResource(s"mysql/$name", getClass.getClassLoader)
-    try s.mkString finally s.close()
-  }
-
-  /** Split the script into statements on ';' at end of line, keep the
-    * CREATE VIEW ones. */
-  private def viewStatements(): Seq[String] = {
-    val text = fixture("create_view.sql")
-    text.split(";\\s*\\n")
-      .map(_.trim)
+  private def viewStatements(): Seq[String] =
+    MySqlFixtures.statements("create_view.sql")
       .filter(_.toUpperCase.contains("CREATE OR REPLACE VIEW"))
-      .map(_.replaceAll("(?s)/\\*.*?\\*/", ""))   // block comments
-      .map(_.replaceAll("(?m)^\\s*--.*$", ""))    // line comments
-      .toSeq
-  }
 
   test("reference corpus present and non-trivial") {
     val views = viewStatements()
@@ -50,7 +36,7 @@ class ReferenceCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     * SELECT..INTO, and no MySQL client syntax left behind. */
   test("every reference fixture function converts to PL/pgSQL") {
     import graft.ddl.FunctionDdl
-    val text = fixture("create_function.sql")
+    val text = MySqlFixtures.text("create_function.sql")
     val blocks = "(?is)CREATE\\s+FUNCTION.*?END\\s*//".r
       .findAllIn(text).toSeq
     assert(blocks.size == 3, s"expected the 3 fixture functions, got ${blocks.size}")
@@ -84,7 +70,7 @@ class ReferenceCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     * reference emits (sync_user_privilege.go:28-41). */
   test("every reference fixture grant converts through userDdl") {
     import graft.ddl.DdlConverter
-    val text = fixture("create_user.sql")
+    val text = MySqlFixtures.text("create_user.sql")
     val grants = text.linesIterator
       .map(_.trim).filter(_.toUpperCase.startsWith("GRANT ")).toSeq
     assert(grants.size >= 8, s"expected >=8 fixture grants, got ${grants.size}")

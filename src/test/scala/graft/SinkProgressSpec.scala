@@ -9,7 +9,6 @@ import graft.pipeline.ProgressTracker
 import graft.ddl.DdlConverter
 import java.sql.DriverManager
 import java.nio.file.Files
-import scala.io.Source
 
 class SinkProgressSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -117,12 +116,8 @@ class SinkProgressSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("index corpus: reference CREATE INDEX statements convert cleanly") {
-    val text = {
-      val s = Source.fromResource("mysql/create_index.sql", getClass.getClassLoader)
-      try s.mkString finally s.close()
-    }
-    val stmts = text.replaceAll("(?m)^\\s*--.*$", "").split(";")
-      .map(_.trim).filter(_.toUpperCase.startsWith("CREATE"))
+    val stmts = MySqlFixtures.statements("create_index.sql")
+      .filter(_.toUpperCase.startsWith("CREATE"))
     val pat = "(?is)CREATE\\s+(UNIQUE\\s+)?INDEX\\s+([`\\w]+)\\s+ON\\s+([`\\w]+)\\s*\\(([^)]*)\\)".r
     var converted = 0
     stmts.foreach { s =>
